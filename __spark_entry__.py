@@ -81,13 +81,13 @@ _MINHASH_CAND_SQL = """
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Every query path passes through here: pin the cached-plan-AQE
+    # Every query path passes through here, and the driver builds its
+    # own session (not runtime.session_builder): pin the cached-plan-AQE
     # conf deterministically so a query's cache partitioning never
-    # depends on which queries ran earlier in the session (see
-    # runtime.ensure_cached_plan_aqe).
-    from deidentify_spark.runtime import ensure_cached_plan_aqe
-
-    ensure_cached_plan_aqe(spark)
+    # depends on which queries ran earlier in the session.
+    spark.conf.set(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+    )
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

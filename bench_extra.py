@@ -35,14 +35,12 @@ UI_PORT = int(os.environ.get("SPARK_GRAFT_BENCH_UI_PORT", "4067"))
 
 
 def _session():
-    from pyspark.sql import SparkSession
+    from deidentify_spark.runtime import session_builder
 
     return (
-        SparkSession.builder.master(f"local[{CPUS}]")
+        session_builder(CPUS)
         .appName("bench-extra")
-        .config("spark.sql.shuffle.partitions", str(max(CPUS * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # UI on: its REST API is where the job counts and task time come from
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", str(UI_PORT))
         .config("spark.ui.retainedStages", "5000")

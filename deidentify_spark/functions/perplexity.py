@@ -83,16 +83,7 @@ def _get_tables() -> tuple[np.ndarray, np.ndarray]:
 
 def perplexity(text: str) -> float:
     """Perplexity of one document under the bigram LM."""
-    uni, bi = _get_tables()
-    h = _word_hashes(text)
-    if h.size < 2:
-        return float("inf")
-    hb = ((h[:-1] * np.uint64(1000003)) ^ h[1:]) & _MASK
-    c_bi = bi[hb.astype(np.int64)]
-    c_uni = uni[(h[:-1] & _MASK).astype(np.int64)]
-    logp = np.log((c_bi + _ALPHA) / (c_uni + _ALPHA * _VOCAB))
-    return float(np.exp(-logp.mean()))
-
+    return perplexity_with_tables(text, *_get_tables())
 
 
 def perplexity_with_tables(

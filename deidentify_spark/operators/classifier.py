@@ -299,9 +299,6 @@ def logreg_train(
     """
     import math
 
-    from deidentify_spark.runtime import ensure_cached_plan_aqe
-
-    ensure_cached_plan_aqe(df.sparkSession)
     # persist, not localCheckpoint: the cache's InMemoryRelation keeps
     # the id-hash outputPartitioning visible to Catalyst, so the
     # per-iteration groupBy(id)/join(id) reuse it exchange-free — a

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deidentify_spark.operators.dedup import _seeded_md5
+
 
 def _positional_gram_hashes(
     df: DataFrame, k: int, text_col: str, id_col: str
@@ -255,13 +257,7 @@ def stratified_sample(
     This is the data-mixing primitive: up/down-weight sources to hit a
     target corpus composition, reproducibly across retries and reruns.
     """
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint") / F.lit(float(2**32))
+    u = _seeded_md5(seed, F.col(id_col), 8) / F.lit(float(2**32))
     rate = F.lit(float(default_rate))
     for stratum, r in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == stratum, float(r)).otherwise(rate)
@@ -357,13 +353,7 @@ def rebalance_mixture(
             ).alias("rate"),
         )
     )
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint") / F.lit(float(2**32))
+    u = _seeded_md5(seed, F.col(id_col), 8) / F.lit(float(2**32))
     return df.join(rates, strata_col).where(u < F.col("rate")).select(df.columns)
 
 
@@ -577,7 +567,7 @@ def sample_exact_k(
     so this is for k in the thousands-to-millions band (an eval draw),
     not "sample half the corpus" — that is ``stratified_sample``'s job.
     """
-    u = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
+    u = _seeded_md5(seed, F.col(id_col))
     return df.orderBy(u.asc(), F.col(id_col)).limit(k)
 
 
@@ -646,16 +636,9 @@ def group_disjoint_split(
     hash equally everywhere). Expected test mass is test_frac of
     GROUPS, not rows — a dominant group swings row fractions, which is
     inherent to group-disjointness, not a defect."""
-    from deidentify_spark.operators.dedup import _hash60
-
     u = (
         F.pmod(
-            _hash60(
-                F.concat(
-                    F.lit(f"split:{seed}:"), F.col(group_col).cast("string")
-                )
-            ),
-            F.lit(1 << 40),
+            _seeded_md5(f"split:{seed}", F.col(group_col), 15), F.lit(1 << 40)
         )
         + F.lit(0.5)
     ) / F.lit(float(1 << 40))
@@ -692,7 +675,7 @@ def domain_cap(
     true global top-N per group survives phase 1 by pigeonhole —
     dropping rank > N within any subset can never drop a global
     top-N row)."""
-    pri = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
+    pri = _seeded_md5(seed, F.col(id_col))
     bucket = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets))
     w1 = Window.partitionBy(group_col, "_b").orderBy(pri.asc(), F.col(id_col))
     ph1 = (

@@ -83,6 +83,17 @@ def _hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
+def _seeded_md5(seed, col: Column, hex_chars: int | None = None) -> Column:
+    """md5 hex of ``f"{seed}:{col}"`` — the reproducible per-row draw of
+    the seeded samplers (DuckDB twin: md5('{seed}:'||id)). With
+    ``hex_chars``, its first ``hex_chars`` hex chars as a bigint instead
+    (8 = a u32, the uniform numerator)."""
+    h = F.md5(F.concat(F.lit(f"{seed}:"), col.cast("string")))
+    if hex_chars is None:
+        return h
+    return F.conv(F.substring(h, 1, hex_chars), 16, 10).cast("bigint")
+
+
 def word_shingles(
     df: DataFrame,
     n: int = 3,

@@ -53,7 +53,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deidentify_spark.operators.classifier import DEFAULT_BUCKETS, _features
-from deidentify_spark.operators.dedup import _hash60
+from deidentify_spark.operators.dedup import _seeded_md5
 from deidentify_spark.runtime import tracked_persist
 
 __all__ = ["dsir_log_weights", "dsir_select", "gumbel_key"]
@@ -154,12 +154,7 @@ def gumbel_key(id_col: str, logw_col: str, seed: int = 0) -> Column:
     """
     u = (
         F.pmod(
-            _hash60(
-                F.concat(
-                    F.lit(f"gumbel:{seed}:"), F.col(id_col).cast("string")
-                )
-            ),
-            F.lit(GUMBEL_M),
+            _seeded_md5(f"gumbel:{seed}", F.col(id_col), 15), F.lit(GUMBEL_M)
         )
         + F.lit(0.5)
     ) / F.lit(float(GUMBEL_M))

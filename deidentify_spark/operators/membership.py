@@ -39,6 +39,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from deidentify_spark.operators.dedup import _hash60
+
 _WORD_BITS = 32
 
 
@@ -46,10 +48,7 @@ def _hash_pos(col: Column, i: int, m_bits: int) -> Column:
     """Position of hash function ``i`` for a value — 60-bit md5-hex
     prefix of the salted value, mod m (DuckDB twin:
     ('0x'||substr(md5(x||':b{i}'),1,15))::BIGINT % m)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(f":b{i}"))), 1, 15), 16, 10
-    ).cast("bigint")
-    return F.pmod(h, F.lit(m_bits))
+    return F.pmod(_hash60(F.concat(col, F.lit(f":b{i}"))), F.lit(m_bits))
 
 
 def _positions_array(col: Column, k: int, m_bits: int) -> Column:

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deidentify_spark.operators.dedup import _hash60
+from deidentify_spark.operators.dedup import _seeded_md5
 from deidentify_spark.operators.scan import partitioned_prefix_sum
 
 __all__ = ["assign_shards", "shards_oracle_sql"]
@@ -51,9 +51,7 @@ def assign_shards(
     shuffle hash with ``id_col`` as the total-order tie-break, so the
     assignment is a pure function of (seed, ids) — integer-exact,
     independent of the prefix-scan's bucket boundaries."""
-    h = _hash60(
-        F.concat(F.lit(f"shard:{seed}:"), F.col(id_col).cast("string"))
-    )
+    h = _seeded_md5(f"shard:{seed}", F.col(id_col), 15)
     keyed = df.withColumn("_shard_h", h).withColumn(
         "shard", F.pmod(F.col("_shard_h"), F.lit(n_shards)).cast("int")
     )

@@ -132,83 +132,74 @@ def run_checkpointed(
     # annotated output instead would re-run the whole pipeline over all
     # docs once per wave — n_waves x the compute).
     bucket_of_url = F.pmod(F.xxhash64("url"), F.lit(cfg.n_buckets)).cast("int")
-    # dynamic partition overwrite: mode("overwrite") replaces ONLY the
-    # bucket partitions present in the written data — the idempotence
-    # mechanism for the write-then-crash-before-manifest window
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for wave in range(n_waves):
-            wave_buckets = [
-                b for b in range(cfg.n_buckets) if b % n_waves == wave
-            ]
-            if set(wave_buckets) <= done:
-                continue
-            wave_pages = pages.where(bucket_of_url.isin(wave_buckets))
-            # The SCRUBBED table must not retain the unscrubbed input —
-            # shipping original text beside scrubbed_text would defeat
-            # the de-identification (and doubles write volume; the raw
-            # text stays in the immutable source the pipeline read).
-            part = run_pipeline(wave_pages, cfg).drop("text")
-            # Cluster by bucket BEFORE the partitioned write: without
-            # this every task holds every bucket and partitionBy opens
-            # tasks x buckets files (64 x 64 = 4096 tiny files in a
-            # 1-wave run — measured 22s of write/commit overhead on a
-            # 17s compute at local[8]); clustered, each task writes one
-            # bucket dir. The exchange consumes the fused UDF's output,
-            # so the Python stage still runs exactly once and at full
-            # width (the UDF is map-side, above this shuffle). At 100 TB
-            # a single bucket outgrows one task's file — upgrade to
-            # repartitionByRange("bucket", "url") so contiguous url
-            # ranges within a bucket land in separate tasks/files.
-            n_shuffle = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
+    for wave in range(n_waves):
+        wave_buckets = [b for b in range(cfg.n_buckets) if b % n_waves == wave]
+        if set(wave_buckets) <= done:
+            continue
+        wave_pages = pages.where(bucket_of_url.isin(wave_buckets))
+        # The SCRUBBED table must not retain the unscrubbed input —
+        # shipping original text beside scrubbed_text would defeat
+        # the de-identification (and doubles write volume; the raw
+        # text stays in the immutable source the pipeline read).
+        part = run_pipeline(wave_pages, cfg).drop("text")
+        # Cluster by bucket BEFORE the partitioned write: without
+        # this every task holds every bucket and partitionBy opens
+        # tasks x buckets files (64 x 64 = 4096 tiny files in a
+        # 1-wave run — measured 22s of write/commit overhead on a
+        # 17s compute at local[8]); clustered, each task writes one
+        # bucket dir. The exchange consumes the fused UDF's output,
+        # so the Python stage still runs exactly once and at full
+        # width (the UDF is map-side, above this shuffle). At 100 TB
+        # a single bucket outgrows one task's file — upgrade to
+        # repartitionByRange("bucket", "url") so contiguous url
+        # ranges within a bucket land in separate tasks/files.
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        part = part.repartition(
+            max(n_shuffle, cfg.n_buckets), "bucket"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            # dynamic partition overwrite, per write (the session conf
+            # is left alone): mode("overwrite") replaces ONLY the bucket
+            # partitions present in the written data — the idempotence
+            # mechanism for the write-then-crash-before-manifest window
+            (
+                part.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(scrubbed_path)
             )
-            part = part.repartition(
-                max(n_shuffle, cfg.n_buckets), "bucket"
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                (
-                    part.write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(scrubbed_path)
-                )
-                # Metrics from the persisted wave output: the fused
-                # Python stage runs exactly once (the cache absorbs the
-                # second action), and nothing re-reads the 100s of MB
-                # just written — measured a full wave 31.8s -> ~27s at
-                # local[8]/200k docs vs the read-back form. The cache is
-                # one WAVE's worth (spills to disk if tight); on a
-                # cluster whose waves outgrow executor storage, swap
-                # back to reading the written bucket partitions — object
-                # stores scale that read, a single local disk does not.
-                (
-                    lineage_metrics(part)
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(os.path.join(output_path, "metrics"))
-                )
-            finally:
-                part.unpersist()
-            if (
-                fail_before_manifest_wave is not None
-                and wave >= fail_before_manifest_wave
-            ):
-                raise RuntimeError(
-                    f"injected failure before manifest of wave {wave}"
-                )
-            done.update(wave_buckets)
-            _write_manifest(
-                output_path,
-                {"fingerprint": fp, "done_buckets": sorted(done)},
+            # Metrics from the persisted wave output: the fused
+            # Python stage runs exactly once (the cache absorbs the
+            # second action), and nothing re-reads the 100s of MB
+            # just written — measured a full wave 31.8s -> ~27s at
+            # local[8]/200k docs vs the read-back form. The cache is
+            # one WAVE's worth (spills to disk if tight); on a
+            # cluster whose waves outgrow executor storage, swap
+            # back to reading the written bucket partitions — object
+            # stores scale that read, a single local disk does not.
+            (
+                lineage_metrics(part)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(os.path.join(output_path, "metrics"))
             )
-            if fail_after_wave is not None and wave >= fail_after_wave:
-                raise RuntimeError(f"injected failure after wave {wave}")
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        finally:
+            part.unpersist()
+        if (
+            fail_before_manifest_wave is not None
+            and wave >= fail_before_manifest_wave
+        ):
+            raise RuntimeError(
+                f"injected failure before manifest of wave {wave}"
+            )
+        done.update(wave_buckets)
+        _write_manifest(
+            output_path,
+            {"fingerprint": fp, "done_buckets": sorted(done)},
+        )
+        if fail_after_wave is not None and wave >= fail_after_wave:
+            raise RuntimeError(f"injected failure after wave {wave}")
     return read_manifest(output_path)
 
 

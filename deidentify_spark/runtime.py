@@ -1,4 +1,10 @@
-"""Session-level runtime helpers shared by operators.
+"""Session-level runtime helpers shared by operators and entry points.
+
+``session_builder``: the library's only ``SparkSession.Builder``. Every
+job, script, example and the test fixture starts from it, so they all
+run under the confs the pipeline and operators are tuned for. Library
+code never changes a session conf; confs are decided when the session
+is built.
 
 ``tracked_persist`` / ``release_tracked``: several operators persist an
 intermediate on purpose (dsir_select's slim projection, bm25's tf
@@ -18,53 +24,55 @@ nuking caches the USER owns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _TRACKED: list[DataFrame] = []
 
 
-def ensure_cached_plan_aqe(spark) -> None:
-    """Enable AQE re-planning of CACHED plan output partitioning for
-    this session (``canChangeCachedPlanOutputPartitioning``, off by
-    default) — idempotent, safe to call per query.
+def session_builder(cores: int | None = None) -> SparkSession.Builder:
+    """The one ``SparkSession.Builder`` every entry point starts from
+    (jobs, scripts, examples, tests, bench_extra): the confs the fused
+    pipeline and the operators are tuned for, decided here once.
 
-    Round-7: this must be set DETERMINISTICALLY, not only lazily inside
-    ``tracked_persist`` — operator-internal ``.persist()`` sites (the
-    logreg/nb feature cache, the words exchange they cache) now leave
-    their partition count to AQE's byte-based coalescing, and a cached
-    plan only gets AQE when this conf is on. Setting it lazily made a
-    query's partitioning depend on whether some EARLIER query in the
-    session had called tracked_persist (measured: solo
-    logreg_classifier ran its per-iteration passes at the static
-    64-partition width — ~0.4 s of fixed per-task cost each — while
-    the same query after any tracked_persist user ran them on 1-2
-    AQE-sized partitions, 3x faster). Neutrality on the explicit-width
-    caches was A/B-measured (75 jobs / equal wall both ways)."""
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
+    ``cores`` given: ``local[cores]`` with ``max(cores*2, 8)`` shuffle
+    partitions. ``cores=None`` (spark-submit) leaves master and width to
+    the launcher. Always: Arrow on, UI off (chain ``.config`` to turn it
+    back on where a script harvests REST counters), and AQE re-planning
+    of CACHED plan output partitioning
+    (``canChangeCachedPlanOutputPartitioning``, off by default). That
+    last one lets the operator stat caches and the logreg/nb feature
+    cache materialize AQE-sized: a KB-sized table caches as 1-2
+    partitions locally while a corpus-scale cache keeps its width
+    (round 7, measured: mad_outliers 4.7 -> 2.9 s, exact_percentiles
+    2.4 -> 1.3 s at sf0.1; solo logreg 3x faster). Setting it here, from
+    the first query, is what keeps a query's partitioning independent of
+    which queries ran earlier in the session. AQE itself is Spark's
+    default and is not set.
+
+    Operators never change session confs: a caller's own session keeps
+    whatever it was built with.
+    """
+    b = (
+        SparkSession.builder.config(
+            "spark.sql.execution.arrow.pyspark.enabled", "true"
         )
-    except Exception:
-        pass  # conf removed/renamed: caches still work, just wider
+        .config("spark.ui.enabled", "false")
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
+    )
+    if cores is not None:
+        b = b.master(f"local[{cores}]").config(
+            "spark.sql.shuffle.partitions", str(max(cores * 2, 8))
+        )
+    return b
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
     """persist() the frame (default MEMORY_AND_DISK) and register it for
-    a later bulk ``release_tracked()``.
-
-    Also lets AQE re-plan the CACHED plan's output partitioning
-    (``canChangeCachedPlanOutputPartitioning``, off by default): without
-    it a cached aggregate materializes with the full static shuffle
-    partition count, and every later pass over the cache pays one task
-    per (mostly empty) partition — the operator persists registered here
-    are bounded stats/model tables (score counts, value counts, bucket
-    totals) for which AQE's byte-based coalescing is the scale-adaptive
-    partitioning: a KB-sized table caches as 1-2 partitions locally
-    while a corpus-scale cache keeps its width (round 7, measured:
-    mad_outliers 4.7 -> 2.9 s, exact_percentiles 2.4 -> 1.3 s at sf0.1;
-    neutral on the join-heavy queries)."""
-    ensure_cached_plan_aqe(df.sparkSession)
+    a later bulk ``release_tracked()``. The persists registered here are
+    bounded stats/model tables (score counts, value counts, bucket
+    totals); in a ``session_builder`` session they cache AQE-sized."""
     df.persist()
     _TRACKED.append(df)
     return df

@@ -10,19 +10,14 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from deidentify_spark.pipeline.stages import PipelineConfig, run_pipeline
+from deidentify_spark.runtime import session_builder
 from deidentify_spark.sources.pages import PAGE_COLUMNS, generate_pages
 from deidentify_spark.sources.warc import read_warc, write_warc
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "16")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+spark = session_builder(8).getOrCreate()
 
 warc_dir = os.path.join(tempfile.gettempdir(), "example_warc")
 

@@ -8,18 +8,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from deidentify_spark.pipeline.lineage import lineage_metrics
 from deidentify_spark.pipeline.stages import PipelineConfig, run_pipeline
+from deidentify_spark.runtime import session_builder
 from deidentify_spark.sources.pages import generate_pages
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "16")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+spark = session_builder(8).getOrCreate()
 
 pages = generate_pages(spark, 2000, seed=42, partitions=16)
 out = run_pipeline(pages, PipelineConfig(secret_key="example-key", detect_ips=True)).cache()

@@ -9,15 +9,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from deidentify_spark.operators.tabular import deidentify_table, infer_column_types
+from deidentify_spark.runtime import session_builder
 
-spark = (
-    SparkSession.builder.master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+spark = session_builder(4).getOrCreate()
 
 df = spark.createDataFrame(
     [

@@ -180,7 +180,6 @@ def main(argv: list[str] | None = None) -> int:
     if bool(args.mixture) != bool(args.mixture_budget):
         p.error("--mixture and --mixture-budget go together")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.components import (
@@ -194,8 +193,9 @@ def main(argv: list[str] | None = None) -> int:
     from deidentify_spark.operators.dsir import dsir_select
     from deidentify_spark.operators.sharding import assign_shards
     from deidentify_spark.pipeline.stages import PipelineConfig, run_pipeline
+    from deidentify_spark.runtime import session_builder
 
-    spark = SparkSession.builder.appName("curation-job").getOrCreate()
+    spark = session_builder().appName("curation-job").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     stages: dict[str, dict] = {}

@@ -43,12 +43,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--synthesize", type=int, default=None, metavar="N")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from deidentify_spark.pipeline.checkpoint import run_checkpointed
     from deidentify_spark.pipeline.stages import PipelineConfig
+    from deidentify_spark.runtime import session_builder
 
-    builder = SparkSession.builder.appName("deidentify-pipeline")
+    builder = session_builder().appName("deidentify-pipeline")
     if args.input_warc:
         # Arrow batches carry the html binary column into the extraction
         # UDF in WARC mode — size them in bytes, not the 10k-row default

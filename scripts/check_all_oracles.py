@@ -22,15 +22,10 @@ TABLES = [
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from deidentify_spark.runtime import session_builder
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session_builder(8).getOrCreate()
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf, f"{t}.parquet")

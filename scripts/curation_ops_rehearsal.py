@@ -69,17 +69,16 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.components import keep_best_per_cluster
     from deidentify_spark.operators.curation import rebalance_mixture
     from deidentify_spark.operators.scan import mad_outliers
+    from deidentify_spark.runtime import session_builder
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
-        .config("spark.ui.enabled", "true")
+        session_builder(args.cores)
+        .config("spark.ui.enabled", "true")  # REST API for stage counters
         .appName("curation-ops-rehearsal")
         .getOrCreate()
     )

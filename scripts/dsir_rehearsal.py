@@ -31,17 +31,15 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.dsir import dsir_select
     from deidentify_spark.operators.search import bm25_topk
+    from deidentify_spark.runtime import session_builder
     from deidentify_spark.sources.pages import generate_pages
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
-        .config("spark.ui.enabled", "false")
+        session_builder(args.cores)
         # pages ride Arrow out of generate_pages: batches must be sized
         # in BYTES or 32 concurrent tasks blow the 1 GiB netty direct
         # pool (same landmine ingest_rehearsal documents; SCALE.md

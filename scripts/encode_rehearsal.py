@@ -34,16 +34,15 @@ def main() -> None:
     ap.add_argument("--vocab-k", type=int, default=4096)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.curation import chunk_text
     from deidentify_spark.operators.vocab import encode_token_ids, vocab_topk
+    from deidentify_spark.runtime import session_builder
     from deidentify_spark.sources.pages import generate_pages
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
+        session_builder(args.cores)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.driver.memory", "8g")  # word arrays at 500k pages
         # OOM the 1g default heap in the 32-way parquet text read (same

@@ -39,14 +39,13 @@ def main() -> None:
     ap.add_argument("--cap", type=int, default=200)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.fuzzy import fuzzy_self_join
+    from deidentify_spark.runtime import session_builder
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
+        session_builder(args.cores)
         .appName("fuzzy-rehearsal")
         .getOrCreate()
     )

@@ -38,21 +38,19 @@ def main() -> int:
     ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.graph import pagerank
+    from deidentify_spark.runtime import session_builder
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
+        session_builder(args.cores)
         .appName("graph-rehearsal")
         # 5M cached edge rows + per-round rank checkpoints live in the
         # JVM here (same heap posture as jobs/run_curation_job.py); the
         # 1 GiB default fails the broadcast build at this volume.
         .config("spark.driver.memory", "6g")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "true")
+        .config("spark.ui.enabled", "true")  # REST API for stage counters
         .config("spark.ui.port", "4097")
         .config("spark.ui.retainedStages", "5000")
         .getOrCreate()

@@ -31,17 +31,15 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.pipeline.stages import PipelineConfig, run_pipeline
+    from deidentify_spark.runtime import session_builder
     from deidentify_spark.sources.pages import PAGE_COLUMNS, generate_pages
     from deidentify_spark.sources.warc import read_warc, write_warc
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
-        .config("spark.ui.enabled", "false")
+        session_builder(args.cores)
         # Arrow batches must be sized in BYTES when a binary column rides
         # them: 10k default records x ~2KB html x 32 tasks x both
         # directions blew the 1 GiB netty direct pool (measured; see

@@ -36,7 +36,6 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.dedup import (
@@ -44,12 +43,12 @@ def main() -> None:
         verify_candidate_pairs,
     )
     from deidentify_spark.operators.lm import kn_perplexity
+    from deidentify_spark.runtime import session_builder
     from deidentify_spark.sources.pages import generate_pages
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
-        .config("spark.ui.enabled", "true")
+        session_builder(args.cores)
+        .config("spark.ui.enabled", "true")  # REST API for stage counters
         .appName("lm-rehearsal")
         .getOrCreate()
     )

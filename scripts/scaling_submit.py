@@ -36,9 +36,7 @@ def _submit(cores: int, docs: int, pkg: pathlib.Path, out: pathlib.Path) -> floa
         [
             "spark-submit",
             "--master", f"local[{cores}]",
-            "--conf", "spark.ui.enabled=false",
             "--conf", f"spark.sql.shuffle.partitions={max(cores * 2, 8)}",
-            "--conf", "spark.sql.adaptive.enabled=true",
             "--py-files", str(pkg),
             str(ROOT / "jobs" / "run_pipeline_job.py"),
             "--synthesize", str(docs),

@@ -73,17 +73,15 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.curation import line_dedup, pack_sequences
     from deidentify_spark.operators.sharding import assign_shards
-    from deidentify_spark.runtime import release_tracked
+    from deidentify_spark.runtime import release_tracked, session_builder
     from deidentify_spark.sources.pages import generate_pages
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
+        session_builder(args.cores)
         .config("spark.ui.enabled", "true")  # status API for task maxima
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
         .config("spark.driver.memory", "8g")

@@ -37,16 +37,15 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=64)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from deidentify_spark.operators.bpe import bpe_encode, bpe_merges
     from deidentify_spark.operators.clustering import kmeans_cluster_stats
+    from deidentify_spark.runtime import session_builder
     from deidentify_spark.sources.pages import generate_pages
 
     spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores * 2))
+        session_builder(args.cores)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.driver.memory", "8g")  # word-gram explode posture
         .appName("tokenizer-rehearsal")

@@ -1,20 +1,16 @@
-"""Shared Spark session fixture (local mode, AQE + Arrow enabled)."""
+"""Shared Spark session fixture (local mode, runtime.session_builder)."""
 
 import pytest
 
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from deidentify_spark.runtime import session_builder
 
     s = (
-        SparkSession.builder.master("local[4]")
+        session_builder(4)
         .appName("deidentify-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse-tests")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     yield s
