@@ -18,4 +18,8 @@ Layout:
   sources/    deterministic synthetic page generator + IO helpers
 """
 
+from deidentify_spark import _worker
+
 __version__ = "0.1.0"
+
+_worker.install()

@@ -254,21 +254,18 @@ def _looks_out_of_set(text: str, pred: str) -> bool:
     if cov >= _UNK_COV_FLOOR:
         return False
     cents = _get_model4()
-    c = _codepoints(text[:_MAX_CHARS].lower())
-    idx, cnt = np.unique(_gram4_hashes(c), return_counts=True)
-    if idx.size == 0:
+    vec = _gram4_unit_vector(text)
+    if vec is None:
         return False
-    idx = idx.astype(np.int64)
-    cnt = cnt.astype(np.float32)
-    cnt /= np.sqrt((cnt * cnt).sum())
+    idx, cnt = vec
     cos4 = max(float(v[idx] @ cnt) for v in cents.values())
     return cos4 < _UNK_COS4_FLOOR
 
 
-def _rescore_close_pair(text: str, a: str, b: str) -> str | None:
-    """4-gram cosine vote between the two close-pair languages; None
-    when the text has no 4-grams (defer to the main model)."""
-    cents = _get_model4()
+def _gram4_unit_vector(text: str) -> tuple[np.ndarray, np.ndarray] | None:
+    """(bucket indices, L2-normalised counts) of the hashed 4-grams of
+    the lowercased snippet — the sparse query side of a cosine against
+    the 4-gram centroids; None when the text has no 4-grams."""
     c = _codepoints(text[:_MAX_CHARS].lower())
     idx, cnt = np.unique(_gram4_hashes(c), return_counts=True)
     if idx.size == 0:
@@ -276,6 +273,17 @@ def _rescore_close_pair(text: str, a: str, b: str) -> str | None:
     idx = idx.astype(np.int64)
     cnt = cnt.astype(np.float32)
     cnt /= np.sqrt((cnt * cnt).sum())
+    return idx, cnt
+
+
+def _rescore_close_pair(text: str, a: str, b: str) -> str | None:
+    """4-gram cosine vote between the two close-pair languages; None
+    when the text has no 4-grams (defer to the main model)."""
+    cents = _get_model4()
+    vec = _gram4_unit_vector(text)
+    if vec is None:
+        return None
+    idx, cnt = vec
     return a if cents[a][idx] @ cnt >= cents[b][idx] @ cnt else b
 
 

@@ -87,16 +87,20 @@ def _features(
     # lambda forced the gram projection into interpreted evaluation
     # (measured 3.07 s -> 0.34 s executor CPU for the sf0.1 corpus
     # gram explode; identical multiset in the identical order —
-    # unigrams then bigrams). NULL text: n_grams is NULL -> sequence
-    # NULL -> explode emits nothing, like the old concat-of-NULL form;
-    # a non-null text always splits to >= 1 word, so the sequence
-    # bound n_grams - 1 >= 0 never steps downward.
+    # unigrams then bigrams). NULL text has n_grams NULL, or -1 with
+    # ANSI off (size(NULL) = -1), where sequence(0, -2) would step
+    # downward into phantom grams; the n_grams >= 1 guard gives it the
+    # empty array, so explode emits nothing, like the old
+    # concat-of-NULL form. Same guard as perplexity.lm_train_tables.
+    gis = F.when(
+        n_grams >= 1, F.sequence(F.lit(0), n_grams - 1)
+    ).otherwise(F.array().cast("array<int>"))
     step = base.select(
         F.col(id_col),
         *extras,
         *counts,
         "_words",
-        F.explode(F.sequence(F.lit(0), n_grams - 1)).alias("_gi"),
+        F.explode(gis).alias("_gi"),
     )
     gi = F.col("_gi")
     shingle = F.when(

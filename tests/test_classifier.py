@@ -122,6 +122,19 @@ def test_featureless_doc_scores_bias(spark, pages):
     assert got == pytest.approx(bias)
 
 
+def test_null_text_has_no_features_with_ansi_off(spark):
+    # size(NULL) is -1 with ANSI off; unguarded, sequence(0, n_grams - 1)
+    # stepped downward and emitted NULL-feature rows for the NULL doc
+    from deidentify_spark.operators.classifier import _features
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    docs = s.createDataFrame([(1, None), (2, "a b")], "doc_id long, text string")
+    got = _features(docs, "text", "doc_id", 64, count_col="n").collect()
+    assert sorted(r.doc_id for r in got) == [2, 2, 2]
+    assert all(r.feature is not None and r.n == 3 for r in got)
+
+
 # ---------------------------------------------------------------- logreg
 
 
