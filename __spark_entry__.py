@@ -35,12 +35,11 @@ from pyspark.sql.window import Window
 
 SECRET_KEY = "test-secret-key"
 
-# Banded-minhash candidate-pair SQL (k=8, 4 bands of 2, bucket cap
-# 1000) — the DuckDB twin of minhash_lsh_candidates. Shared verbatim by
-# the candidate query's oracle and the verification query's oracle so
-# the two stay in lockstep by construction.
-_MINHASH_CAND_SQL = """
-            WITH words AS (
+# Banded-minhash DuckDB twin of dedup._minhash_band_membership (word
+# 3-shingles, k=8 seeded-md5 minhashes, 4 bands of 2), spliced into
+# every MinHash oracle: the signature CTEs (words -> sh -> mh) and the
+# bands CTE.
+_MINHASH_SIG_CTES = """words AS (
                 SELECT doc_id,
                        regexp_split_to_array(lower(trim(text)), '\\s+') AS w
                 FROM documents
@@ -60,7 +59,8 @@ _MINHASH_CAND_SQL = """
                        MIN(('0x'||substr(md5(shingle||':6'),1,15))::BIGINT) AS mh6,
                        MIN(('0x'||substr(md5(shingle||':7'),1,15))::BIGINT) AS mh7
                 FROM sh GROUP BY doc_id
-            ), bands AS (
+            )"""
+_MINHASH_BANDS_CTE = """, bands AS (
                 SELECT doc_id, 0 AS band, mh0::VARCHAR||'_'||mh1::VARCHAR AS sig FROM mh
                 UNION ALL
                 SELECT doc_id, 1, mh2::VARCHAR||'_'||mh3::VARCHAR FROM mh
@@ -68,7 +68,17 @@ _MINHASH_CAND_SQL = """
                 SELECT doc_id, 2, mh4::VARCHAR||'_'||mh5::VARCHAR FROM mh
                 UNION ALL
                 SELECT doc_id, 3, mh6::VARCHAR||'_'||mh7::VARCHAR FROM mh
-            ), kept AS (
+            )"""
+
+# Banded-minhash candidate-pair SQL (bucket cap 1000) — the DuckDB twin
+# of minhash_lsh_candidates. Shared verbatim by the candidate query's
+# oracle and the verification query's oracle so the two stay in
+# lockstep by construction.
+_MINHASH_CAND_SQL = (
+    "\n            WITH "
+    + _MINHASH_SIG_CTES
+    + _MINHASH_BANDS_CTE
+    + """, kept AS (
                 -- degenerate-bucket cap (max_bucket_size=1000), as Spark
                 SELECT doc_id, band, sig,
                        COUNT(*) OVER (PARTITION BY band, sig) AS bsz
@@ -78,6 +88,7 @@ _MINHASH_CAND_SQL = """
             FROM kept a JOIN kept b
               ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
 """
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -3403,35 +3414,10 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY doc_a, doc_b
         """,
         "minhash_incremental_documents": """
-            WITH words AS (
-                SELECT doc_id,
-                       regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id,
-                       unnest([w[i]||' '||w[i+1]||' '||w[i+2]
-                               for i in generate_series(1, len(w)-2)]) AS shingle
-                FROM words
-            ), mh AS (
-                SELECT doc_id,
-                       MIN(('0x'||substr(md5(shingle||':0'),1,15))::BIGINT) AS mh0,
-                       MIN(('0x'||substr(md5(shingle||':1'),1,15))::BIGINT) AS mh1,
-                       MIN(('0x'||substr(md5(shingle||':2'),1,15))::BIGINT) AS mh2,
-                       MIN(('0x'||substr(md5(shingle||':3'),1,15))::BIGINT) AS mh3,
-                       MIN(('0x'||substr(md5(shingle||':4'),1,15))::BIGINT) AS mh4,
-                       MIN(('0x'||substr(md5(shingle||':5'),1,15))::BIGINT) AS mh5,
-                       MIN(('0x'||substr(md5(shingle||':6'),1,15))::BIGINT) AS mh6,
-                       MIN(('0x'||substr(md5(shingle||':7'),1,15))::BIGINT) AS mh7
-                FROM sh GROUP BY doc_id
-            ), bands AS (
-                SELECT doc_id, 0 AS band, mh0::VARCHAR||'_'||mh1::VARCHAR AS sig FROM mh
-                UNION ALL
-                SELECT doc_id, 1, mh2::VARCHAR||'_'||mh3::VARCHAR FROM mh
-                UNION ALL
-                SELECT doc_id, 2, mh4::VARCHAR||'_'||mh5::VARCHAR FROM mh
-                UNION ALL
-                SELECT doc_id, 3, mh6::VARCHAR||'_'||mh7::VARCHAR FROM mh
-            ), newm AS (
+            WITH """
+        + _MINHASH_SIG_CTES
+        + _MINHASH_BANDS_CTE
+        + """, newm AS (
                 SELECT * FROM bands WHERE doc_id % 2 = 1
             ), oldm AS (
                 SELECT * FROM bands WHERE doc_id % 2 = 0
@@ -3508,35 +3494,10 @@ def oracle_sql() -> dict[str, str]:
         # MIN(lbl) per node is the component minimum — exactly what the
         # Spark alternating-star operator assigns.
         "dedup_cc_clusters_documents": """
-            WITH RECURSIVE words AS (
-                SELECT doc_id,
-                       regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id,
-                       unnest([w[i]||' '||w[i+1]||' '||w[i+2]
-                               for i in generate_series(1, len(w)-2)]) AS shingle
-                FROM words
-            ), mh AS (
-                SELECT doc_id,
-                       MIN(('0x'||substr(md5(shingle||':0'),1,15))::BIGINT) AS mh0,
-                       MIN(('0x'||substr(md5(shingle||':1'),1,15))::BIGINT) AS mh1,
-                       MIN(('0x'||substr(md5(shingle||':2'),1,15))::BIGINT) AS mh2,
-                       MIN(('0x'||substr(md5(shingle||':3'),1,15))::BIGINT) AS mh3,
-                       MIN(('0x'||substr(md5(shingle||':4'),1,15))::BIGINT) AS mh4,
-                       MIN(('0x'||substr(md5(shingle||':5'),1,15))::BIGINT) AS mh5,
-                       MIN(('0x'||substr(md5(shingle||':6'),1,15))::BIGINT) AS mh6,
-                       MIN(('0x'||substr(md5(shingle||':7'),1,15))::BIGINT) AS mh7
-                FROM sh GROUP BY doc_id
-            ), bands AS (
-                SELECT doc_id, 0 AS band, mh0::VARCHAR||'_'||mh1::VARCHAR AS sig FROM mh
-                UNION ALL
-                SELECT doc_id, 1, mh2::VARCHAR||'_'||mh3::VARCHAR FROM mh
-                UNION ALL
-                SELECT doc_id, 2, mh4::VARCHAR||'_'||mh5::VARCHAR FROM mh
-                UNION ALL
-                SELECT doc_id, 3, mh6::VARCHAR||'_'||mh7::VARCHAR FROM mh
-            ), kept AS (
+            WITH RECURSIVE """
+        + _MINHASH_SIG_CTES
+        + _MINHASH_BANDS_CTE
+        + """, kept AS (
                 SELECT doc_id, band, sig,
                        COUNT(*) OVER (PARTITION BY band, sig) AS bsz
                 FROM bands QUALIFY bsz <= 1000
@@ -3560,27 +3521,9 @@ def oracle_sql() -> dict[str, str]:
             FROM comp GROUP BY component ORDER BY component
         """,
         "dedup_cap_lineage": """
-            WITH words AS (
-                SELECT doc_id,
-                       regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id,
-                       unnest([w[i]||' '||w[i+1]||' '||w[i+2]
-                               for i in generate_series(1, len(w)-2)]) AS shingle
-                FROM words
-            ), mh AS (
-                SELECT doc_id,
-                       MIN(('0x'||substr(md5(shingle||':0'),1,15))::BIGINT) AS mh0,
-                       MIN(('0x'||substr(md5(shingle||':1'),1,15))::BIGINT) AS mh1,
-                       MIN(('0x'||substr(md5(shingle||':2'),1,15))::BIGINT) AS mh2,
-                       MIN(('0x'||substr(md5(shingle||':3'),1,15))::BIGINT) AS mh3,
-                       MIN(('0x'||substr(md5(shingle||':4'),1,15))::BIGINT) AS mh4,
-                       MIN(('0x'||substr(md5(shingle||':5'),1,15))::BIGINT) AS mh5,
-                       MIN(('0x'||substr(md5(shingle||':6'),1,15))::BIGINT) AS mh6,
-                       MIN(('0x'||substr(md5(shingle||':7'),1,15))::BIGINT) AS mh7
-                FROM sh GROUP BY doc_id
-            ), bands AS (
+            WITH """
+        + _MINHASH_SIG_CTES
+        + """, bands AS (
                 SELECT doc_id, 0 AS band, mh0::VARCHAR||'_'||mh1::VARCHAR AS sig FROM mh
                 UNION ALL SELECT doc_id, 1, mh2::VARCHAR||'_'||mh3::VARCHAR FROM mh
                 UNION ALL SELECT doc_id, 2, mh4::VARCHAR||'_'||mh5::VARCHAR FROM mh
@@ -3760,36 +3703,11 @@ def oracle_sql() -> dict[str, str]:
         # same banded-minhash CTEs as minhash_lsh_candidates_documents,
         # split corpus (even ids) vs eval (odd ids) and joined across —
         # no pair emission, so no bucket cap appears on either side
-        "fuzzy_decontaminate_documents": r"""
-            WITH words AS (
-                SELECT doc_id,
-                       regexp_split_to_array(lower(trim(text)), '\s+') AS w
-                FROM documents
-            ), sh AS (
-                SELECT DISTINCT doc_id,
-                       unnest([w[i]||' '||w[i+1]||' '||w[i+2]
-                               for i in generate_series(1, len(w)-2)]) AS shingle
-                FROM words
-            ), mh AS (
-                SELECT doc_id,
-                       MIN(('0x'||substr(md5(shingle||':0'),1,15))::BIGINT) AS mh0,
-                       MIN(('0x'||substr(md5(shingle||':1'),1,15))::BIGINT) AS mh1,
-                       MIN(('0x'||substr(md5(shingle||':2'),1,15))::BIGINT) AS mh2,
-                       MIN(('0x'||substr(md5(shingle||':3'),1,15))::BIGINT) AS mh3,
-                       MIN(('0x'||substr(md5(shingle||':4'),1,15))::BIGINT) AS mh4,
-                       MIN(('0x'||substr(md5(shingle||':5'),1,15))::BIGINT) AS mh5,
-                       MIN(('0x'||substr(md5(shingle||':6'),1,15))::BIGINT) AS mh6,
-                       MIN(('0x'||substr(md5(shingle||':7'),1,15))::BIGINT) AS mh7
-                FROM sh GROUP BY doc_id
-            ), bands AS (
-                SELECT doc_id, 0 AS band, mh0::VARCHAR||'_'||mh1::VARCHAR AS sig FROM mh
-                UNION ALL
-                SELECT doc_id, 1, mh2::VARCHAR||'_'||mh3::VARCHAR FROM mh
-                UNION ALL
-                SELECT doc_id, 2, mh4::VARCHAR||'_'||mh5::VARCHAR FROM mh
-                UNION ALL
-                SELECT doc_id, 3, mh6::VARCHAR||'_'||mh7::VARCHAR FROM mh
-            ), corpus AS (
+        "fuzzy_decontaminate_documents": """
+            WITH """
+        + _MINHASH_SIG_CTES
+        + _MINHASH_BANDS_CTE
+        + """, corpus AS (
                 SELECT doc_id, band, sig FROM bands WHERE doc_id % 2 = 0
             ), ev AS (
                 SELECT DISTINCT doc_id AS eval_id, band, sig

@@ -57,24 +57,6 @@ class QualityConfig:
     )
 
 
-# Ordered (reason, failure-predicate builder) registry; first failure wins.
-QUALITY_DROP_REASONS = (
-    "too_few_words",
-    "too_many_words",
-    "mean_word_length",
-    "symbol_ratio",
-    "bullet_lines",
-    "ellipsis_lines",
-    "alpha_ratio",
-    "few_stopwords",
-    "duplicate_lines",
-    "top_ngram_repetition",
-    "lorem_ipsum",
-    "curly_brace",
-    "policy_phrase",
-)
-
-
 def quality_metrics(text: Column, cfg: QualityConfig) -> dict[str, Column]:
     """Named metric columns, all JVM-side expressions.
 

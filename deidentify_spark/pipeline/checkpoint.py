@@ -1,93 +1,75 @@
-"""Resumable pipeline runs: snapshot checkpointing with per-bucket
-manifest (north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").
+"""Resumable runs (north_rule: "resumable from checkpoint with
+per-partition lineage + metrics"): the repo's one commit protocol, and
+the pipeline's wave-by-wave run built on it.
 
-Strategy: deterministic url-hash buckets (the same buckets as the lineage
-table) are processed in waves; after each wave the scrubbed output is
-written with DYNAMIC PARTITION OVERWRITE (parquet partitioned by bucket)
-and the manifest records the completed buckets + a config fingerprint. A
-restart loads the manifest and processes only the missing buckets — zero
-recomputation of completed work, byte-identical final output (everything
-is a pure function of (secret_key, doc)). Overwrite-by-partition (not
-append) makes the wave write idempotent: a crash AFTER the data write but
-BEFORE the manifest write re-runs the wave on resume and replaces the
-same bucket partitions, never duplicating rows or metrics.
+Commit protocol (also every stage of jobs/run_curation_job.py): write the
+data with an overwrite write, THEN ``commit_manifest`` atomically replaces
+``<dir>/_manifest.json``. A crash before the commit leaves the previous
+manifest or none (``read_manifest`` returns None), and redoing the work is
+safe because the overwrite write replaces what the crashed attempt wrote.
+``fingerprint`` hashes whatever determines the output; each caller picks
+its policy on a mismatch (``run_checkpointed`` raises, a curation stage
+re-runs).
 
-Iceberg: when an Iceberg catalog is on the classpath the same flow maps
-onto `df.writeTo(tbl).append()` with snapshot ids in place of the
-manifest; the sandbox has no Iceberg runtime jar, so the parquet+manifest
-path is the tested implementation and `iceberg_available()` gates the
-upgrade (SURVEY.md §2.F).
+Iceberg: with an Iceberg catalog the same flow maps onto
+``df.writeTo(tbl).append()`` with snapshot ids in place of the manifest;
+the parquet+manifest path is the implemented one (SURVEY.md §2.F).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 from deidentify_spark.pipeline.lineage import lineage_metrics
-from deidentify_spark.pipeline.stages import PipelineConfig, run_pipeline
+from deidentify_spark.pipeline.stages import (
+    PipelineConfig,
+    bucket_of_url,
+    run_pipeline,
+)
 
 MANIFEST_NAME = "_manifest.json"
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True if an Iceberg DataSource is loadable in this session."""
+def fingerprint(payload) -> str:
+    """First 16 hex chars of the sha256 of ``payload`` as sorted JSON."""
+    blob = json.dumps(payload, sort_keys=True)
+    return hashlib.sha256(blob.encode()).hexdigest()[:16]
+
+
+def read_manifest(path: str) -> dict | None:
+    """The manifest committed under directory ``path``, or None if it is
+    missing or unreadable (the work it would describe is then redone)."""
     try:
-        jvm = spark._jvm
-        jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.source.IcebergSource"
-        )
-        return True
-    except Exception:
-        return False
+        with open(os.path.join(path, MANIFEST_NAME)) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def commit_manifest(path: str, manifest: dict) -> None:
+    """Atomically replace ``path/_manifest.json``: a crash mid-write never
+    leaves a torn manifest, only the previous one."""
+    fd, tmp = tempfile.mkstemp(dir=path, prefix=".manifest-")
+    with os.fdopen(fd, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(path, MANIFEST_NAME))
 
 
 def _config_fingerprint(cfg: PipelineConfig) -> str:
-    payload = json.dumps(
-        {
-            "secret_key": hashlib.sha256(cfg.secret_key.encode()).hexdigest(),
-            "target_lang": cfg.target_lang,
-            "min_lang_conf": cfg.min_lang_conf,
-            "max_perplexity": cfg.max_perplexity,
-            "n_buckets": cfg.n_buckets,
-            # scrub semantics: resuming with IP detection toggled would
-            # mix two scrub behaviors across buckets in one output
-            "detect_ips": cfg.detect_ips,
-            "quality": sorted(
-                (k, str(v)) for k, v in vars(cfg.quality).items()
-            ),
-        },
-        sort_keys=True,
-    )
-    return hashlib.sha256(payload.encode()).hexdigest()[:16]
-
-
-def _manifest_path(output_path: str) -> str:
-    return os.path.join(output_path, MANIFEST_NAME)
-
-
-def read_manifest(output_path: str) -> dict:
-    path = _manifest_path(output_path)
-    if not os.path.exists(path):
-        return {"fingerprint": None, "done_buckets": []}
-    with open(path) as f:
-        return json.load(f)
-
-
-def _write_manifest(output_path: str, manifest: dict) -> None:
-    # atomic replace so a crash mid-write never corrupts the manifest
-    path = _manifest_path(output_path)
-    fd, tmp = tempfile.mkstemp(dir=output_path, prefix=".manifest-")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, path)
+    # every field feeds the output, so every field is hashed (a new field
+    # joins by construction); the key itself never lands on disk
+    payload = dataclasses.asdict(cfg)
+    payload["secret_key"] = hashlib.sha256(cfg.secret_key.encode()).hexdigest()
+    # plan-only: the buckets, and so the output, do not depend on it
+    del payload["repartition"]
+    return fingerprint(payload)
 
 
 def run_checkpointed(
@@ -95,12 +77,11 @@ def run_checkpointed(
     output_path: str,
     cfg: PipelineConfig,
     n_waves: int = 4,
-    fail_after_wave: int | None = None,
-    fail_before_manifest_wave: int | None = None,
 ) -> dict:
     """Process pages wave-by-wave with manifest checkpoints.
 
-    Buckets `b` with `b % n_waves == w` form wave `w`; a wave's output
+    Buckets `b` (the deterministic url-hash buckets of the lineage table)
+    with `b % n_waves == w` form wave `w`; a wave's output
     lands under ``output_path/scrubbed`` (partitioned by bucket) and its
     lineage rows under ``output_path/metrics`` before the manifest marks
     it done. Wave writes use DYNAMIC PARTITION OVERWRITE, so a crash in
@@ -108,15 +89,18 @@ def run_checkpointed(
     resumed run re-processes the wave and overwrites exactly the same
     bucket partitions instead of appending duplicates — writes are
     idempotent, the manifest only tracks which waves may be skipped.
-    ``fail_after_wave`` / ``fail_before_manifest_wave`` inject crashes
-    for tests (after and before the manifest write respectively).
-    Returns the final manifest. A fingerprint mismatch (config changed)
+    A restart processes only the missing buckets, and the final output
+    is byte-identical to a one-shot run (everything is a pure function
+    of (secret_key, doc)). Returns the final manifest. A fingerprint mismatch (config changed)
     raises — resuming under a different config would mix semantics.
     """
     os.makedirs(output_path, exist_ok=True)
     fp = _config_fingerprint(cfg)
-    manifest = read_manifest(output_path)
-    if manifest["fingerprint"] not in (None, fp):
+    manifest = read_manifest(output_path) or {
+        "fingerprint": fp,
+        "done_buckets": [],
+    }
+    if manifest["fingerprint"] != fp:
         raise ValueError(
             "checkpoint at %s was produced with a different pipeline config "
             "(fingerprint %s != %s); use a fresh output path"
@@ -131,12 +115,12 @@ def run_checkpointed(
     # each wave's Python stage only ever sees its own docs (filtering the
     # annotated output instead would re-run the whole pipeline over all
     # docs once per wave — n_waves x the compute).
-    bucket_of_url = F.pmod(F.xxhash64("url"), F.lit(cfg.n_buckets)).cast("int")
+    bucket = bucket_of_url(cfg.n_buckets)
     for wave in range(n_waves):
         wave_buckets = [b for b in range(cfg.n_buckets) if b % n_waves == wave]
         if set(wave_buckets) <= done:
             continue
-        wave_pages = pages.where(bucket_of_url.isin(wave_buckets))
+        wave_pages = pages.where(bucket.isin(wave_buckets))
         # The SCRUBBED table must not retain the unscrubbed input —
         # shipping original text beside scrubbed_text would defeat
         # the de-identification (and doubles write volume; the raw
@@ -186,24 +170,8 @@ def run_checkpointed(
             )
         finally:
             part.unpersist()
-        if (
-            fail_before_manifest_wave is not None
-            and wave >= fail_before_manifest_wave
-        ):
-            raise RuntimeError(
-                f"injected failure before manifest of wave {wave}"
-            )
         done.update(wave_buckets)
-        _write_manifest(
-            output_path,
-            {"fingerprint": fp, "done_buckets": sorted(done)},
-        )
-        if fail_after_wave is not None and wave >= fail_after_wave:
-            raise RuntimeError(f"injected failure after wave {wave}")
-    return read_manifest(output_path)
+        manifest = {"fingerprint": fp, "done_buckets": sorted(done)}
+        commit_manifest(output_path, manifest)
+    return manifest
 
-
-def remaining_buckets(output_path: str, cfg: PipelineConfig) -> list[int]:
-    manifest = read_manifest(output_path)
-    done = set(manifest["done_buckets"])
-    return [b for b in range(cfg.n_buckets) if b not in done]

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deidentify_spark.functions.fused import fused_filter_scrub_udf
@@ -77,6 +77,13 @@ class PipelineConfig:
     dedup_lines_within_doc: bool = False
 
 
+def bucket_of_url(n_buckets: int) -> Column:
+    """The url-hash lineage bucket of a row. The one spelling of it: the
+    checkpoint's wave filter must pick exactly the docs whose ``bucket``
+    column lands in the wave, or waves drop or repeat docs."""
+    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+
+
 def run_pipeline(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Annotate pages with the full filter + scrub decision surface.
 
@@ -115,9 +122,7 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     if cfg.repartition:
         df = df.repartition(cfg.repartition, F.xxhash64("url"))
 
-    df = df.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(cfg.n_buckets)).cast("int")
-    )
+    df = df.withColumn("bucket", bucket_of_url(cfg.n_buckets))
 
     # Optional toxicity gate FIRST: it is pure JVM column work, so per
     # the stage-ordering doctrine the cheap gate runs before the

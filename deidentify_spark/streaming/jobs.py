@@ -177,8 +177,7 @@ def tws_available() -> bool:
     actually run here: its state-server Python runner imports
     google.protobuf, which is not part of this sandbox's baked-in
     package set (probe, don't crash mid-query — the query fails with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE otherwise). Same
-    environment-gate pattern as pipeline.checkpoint.iceberg_available."""
+    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE otherwise)."""
     try:
         from google.protobuf import descriptor  # noqa: F401
 

@@ -30,9 +30,9 @@ Launch (local or cluster — the job only talks to the SparkSession):
 
 Every stage is deterministic (md5/xxhash keys, hash-seeded Gumbel
 draw), so a re-run reproduces the same shards byte-for-byte — and the
-job is RESUMABLE: each parquet barrier (filtered/, deduped/, shards/)
-commits with a write-then-manifest protocol (the pipeline/checkpoint.py
-posture — a crash between the parquet write and the manifest simply
+job is RESUMABLE: each parquet barrier (filtered/, deduped/, shards/,
+tokens/) commits with the pipeline/checkpoint.py protocol (overwrite
+write, then an atomic _manifest.json — a crash between the two simply
 re-runs that stage and overwrites), and the manifest carries a
 fingerprint of every argument that feeds the stage, so a re-submit
 skips completed stages (full re-submit after success is a
@@ -46,33 +46,18 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
-import os
 import sys
-import tempfile
 import time
 
 
-def _stage_manifest(path: str) -> str:
-    return os.path.join(path, "_stage_manifest.json")
+def _resume(path: str, fp: str) -> dict | None:
+    """The stage's committed manifest, or None if absent or committed
+    under another fingerprint: the stage then re-runs (its overwrite
+    write replaces the stale output)."""
+    from deidentify_spark.pipeline.checkpoint import read_manifest
 
-
-def _read_stage(path: str, fingerprint: str) -> dict | None:
-    """The stage's committed manifest, or None if absent/stale."""
-    try:
-        with open(_stage_manifest(path)) as f:
-            m = json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return None
-    return m if m.get("fingerprint") == fingerprint else None
-
-
-def _commit_stage(path: str, fingerprint: str, docs: int, **extra) -> None:
-    # atomic replace AFTER the parquet write: a crash before this line
-    # re-runs the stage on resume (mode=overwrite makes that idempotent)
-    fd, tmp = tempfile.mkstemp(dir=path, prefix=".stage-manifest-")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"fingerprint": fingerprint, "docs": docs, **extra}, f)
-    os.replace(tmp, _stage_manifest(path))
+    m = read_manifest(path)
+    return m if m is not None and m.get("fingerprint") == fp else None
 
 
 def _maybe_tokenize(spark, args, fp3: str, stages: dict) -> None:
@@ -83,17 +68,15 @@ def _maybe_tokenize(spark, args, fp3: str, stages: dict) -> None:
     committed artifact of the run)."""
     if not args.tokenize:
         return
-    import hashlib as _h
-    import time as _t
-
     from pyspark.sql import functions as F
 
-    fp4 = _h.md5(
-        json.dumps(
-            {"up": fp3, "tokenize": args.tokenize}, sort_keys=True
-        ).encode()
-    ).hexdigest()
-    m4 = _read_stage(f"{args.output}/tokens", fp4)
+    from deidentify_spark.pipeline.checkpoint import (
+        commit_manifest,
+        fingerprint,
+    )
+
+    fp4 = fingerprint({"up": fp3, "tokenize": args.tokenize})
+    m4 = _resume(f"{args.output}/tokens", fp4)
     if m4 is not None:
         stages["tokenize"] = {
             "docs": m4["docs"],
@@ -103,7 +86,7 @@ def _maybe_tokenize(spark, args, fp3: str, stages: dict) -> None:
         return
     from deidentify_spark.operators.bpe import bpe_encode, bpe_merges
 
-    t0 = _t.time()
+    t0 = time.time()
     # the shards barrier is the stage input (underscore-prefixed
     # manifest files are invisible to the parquet reader)
     sharded = spark.read.parquet(f"{args.output}/shards")
@@ -125,16 +108,18 @@ def _maybe_tokenize(spark, args, fp3: str, stages: dict) -> None:
     ).collect()[0]
     stages["tokenize"] = {
         "docs": int(agg["d"]),
-        "wall_s": round(_t.time() - t0, 1),
+        "wall_s": round(time.time() - t0, 1),
         "subwords": int(agg["s"]),
         "merges": len(mrows),
     }
-    _commit_stage(
+    commit_manifest(
         f"{args.output}/tokens",
-        fp4,
-        int(agg["d"]),
-        subwords=int(agg["s"]),
-        merge_table=mrows,
+        {
+            "fingerprint": fp4,
+            "docs": int(agg["d"]),
+            "subwords": int(agg["s"]),
+            "merge_table": mrows,
+        },
     )
 
 
@@ -192,6 +177,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     from deidentify_spark.operators.dsir import dsir_select
     from deidentify_spark.operators.sharding import assign_shards
+    from deidentify_spark.pipeline.checkpoint import (
+        commit_manifest,
+        fingerprint,
+    )
     from deidentify_spark.pipeline.stages import PipelineConfig, run_pipeline
     from deidentify_spark.runtime import session_builder
 
@@ -208,38 +197,30 @@ def main(argv: list[str] | None = None) -> int:
     # per-stage fingerprints: every argument that feeds the stage (or
     # any upstream stage) participates, so a changed argument
     # invalidates exactly the stages it can affect
-    fp1 = hashlib.md5(
-        json.dumps(
-            {
-                "v": 2,  # filtered barrier schema (v2 carries lang_pred)
-                "input": args.input,
-                "synthesize": args.synthesize,
-                "seed": args.seed,
-                "key": hashlib.md5(args.secret_key.encode()).hexdigest(),
-            },
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()
-    fp2 = hashlib.md5(
-        (fp1 + "|dedup-v1" + ("|keep-best" if args.keep_best else "")).encode()
-    ).hexdigest()
-    fp3 = hashlib.md5(
-        json.dumps(
-            {
-                "up": fp2,
-                "select_frac": args.select_frac,
-                "n_shards": args.n_shards,
-                "seed": args.seed,
-                "max_per_host": args.max_per_host,
-                "mixture": args.mixture,
-                "mixture_budget": args.mixture_budget,
-            },
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()
+    fp1 = fingerprint(
+        {
+            "v": 2,  # filtered barrier schema (v2 carries lang_pred)
+            "input": args.input,
+            "synthesize": args.synthesize,
+            "seed": args.seed,
+            "key": hashlib.sha256(args.secret_key.encode()).hexdigest(),
+        }
+    )
+    fp2 = fingerprint({"up": fp1, "dedup": 1, "keep_best": args.keep_best})
+    fp3 = fingerprint(
+        {
+            "up": fp2,
+            "select_frac": args.select_frac,
+            "n_shards": args.n_shards,
+            "seed": args.seed,
+            "max_per_host": args.max_per_host,
+            "mixture": args.mixture,
+            "mixture_budget": args.mixture_budget,
+        }
+    )
 
     t0 = time.time()
-    m1 = _read_stage(f"{args.output}/filtered", fp1)
+    m1 = _resume(f"{args.output}/filtered", fp1)
     if m1 is not None:
         docs = spark.read.parquet(f"{args.output}/filtered")
         n_in = m1["docs"]
@@ -294,9 +275,11 @@ def main(argv: list[str] | None = None) -> int:
         docs.write.mode("overwrite").parquet(f"{args.output}/filtered")
         docs = spark.read.parquet(f"{args.output}/filtered")
         n_in = tick("filter_scrub", docs, t0)
-        _commit_stage(f"{args.output}/filtered", fp1, n_in)
+        commit_manifest(
+            f"{args.output}/filtered", {"fingerprint": fp1, "docs": n_in}
+        )
 
-    m2 = _read_stage(f"{args.output}/deduped", fp2)
+    m2 = _resume(f"{args.output}/deduped", fp2)
     if m2 is not None:
         docs = spark.read.parquet(f"{args.output}/deduped")
         n_exact, n_fuzzy = m2["n_exact"], m2["docs"]
@@ -318,11 +301,12 @@ def main(argv: list[str] | None = None) -> int:
         docs.write.mode("overwrite").parquet(f"{args.output}/deduped")
         docs = spark.read.parquet(f"{args.output}/deduped")
         n_fuzzy = tick("fuzzy_dedup", docs, t0)
-        _commit_stage(
-            f"{args.output}/deduped", fp2, n_fuzzy, n_exact=n_exact
+        commit_manifest(
+            f"{args.output}/deduped",
+            {"fingerprint": fp2, "docs": n_fuzzy, "n_exact": n_exact},
         )
 
-    m3 = _read_stage(f"{args.output}/shards", fp3)
+    m3 = _resume(f"{args.output}/shards", fp3)
     if m3 is not None:
         n_sel = m3["docs"]
         stages["dsir_select"] = {"docs": n_sel, "resumed": True}
@@ -402,7 +386,9 @@ def main(argv: list[str] | None = None) -> int:
         "docs": n_sel,
         "wall_s": round(time.time() - t0, 1),
     }
-    _commit_stage(f"{args.output}/shards", fp3, n_sel)
+    commit_manifest(
+        f"{args.output}/shards", {"fingerprint": fp3, "docs": n_sel}
+    )
     # every consumer of dsir_select's slim-projection cache (the count
     # above AND the shard write, which reads `selected` again) is done —
     # release the operator-registered caches (runtime.py) so a composed

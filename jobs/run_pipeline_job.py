@@ -43,6 +43,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--synthesize", type=int, default=None, metavar="N")
     args = p.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from deidentify_spark.pipeline.checkpoint import run_checkpointed
     from deidentify_spark.pipeline.stages import PipelineConfig
     from deidentify_spark.runtime import session_builder
@@ -71,8 +73,6 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.synthesize, seed=42, include_html=False
         ).select(*PAGE_COLUMNS)
     elif args.input_warc:
-        from pyspark.sql import functions as F
-
         from deidentify_spark.sources.warc import read_warc
 
         pages = read_warc(spark, args.input_warc).select(
@@ -89,12 +89,21 @@ def main(argv: list[str] | None = None) -> int:
 
     t0 = time.time()
     manifest = run_checkpointed(pages, args.output, cfg, n_waves=args.n_waves)
-    out = spark.read.parquet(f"{args.output}/scrubbed")
+    seconds = round(time.time() - t0, 1)  # the run, not the summary
+    # totals from the lineage table the run just wrote (one row per
+    # bucket), not a re-scan of the scrubbed output: the summary's
+    # docs_out counts every written row (the table's docs_in), docs_kept
+    # the kept ones (the table's docs_out)
+    written, kept = (
+        spark.read.parquet(f"{args.output}/metrics")
+        .agg(F.sum("docs_in"), F.sum("docs_out"))
+        .head()
+    )
     summary = {
         "status": "ok",
-        "seconds": round(time.time() - t0, 1),
-        "docs_out": out.count(),
-        "docs_kept": out.where("keep").count(),
+        "seconds": seconds,
+        "docs_out": written or 0,
+        "docs_kept": kept or 0,
         "buckets_done": len(manifest["done_buckets"]),
     }
     print(json.dumps(summary))

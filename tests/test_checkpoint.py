@@ -1,18 +1,19 @@
 """Checkpoint/resume semantics: crash mid-run, resume, byte-identical to
 a single-shot run with no recomputation of completed buckets."""
 
+import dataclasses
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from deidentify_spark.pipeline.checkpoint import (
-    iceberg_available,
-    read_manifest,
-    remaining_buckets,
-    run_checkpointed,
+from deidentify_spark.pipeline import checkpoint
+from deidentify_spark.pipeline.checkpoint import read_manifest, run_checkpointed
+from deidentify_spark.pipeline.stages import (
+    PipelineConfig,
+    bucket_of_url,
+    run_pipeline,
 )
-from deidentify_spark.pipeline.stages import PipelineConfig, run_pipeline
 from deidentify_spark.sources.pages import generate_pages
 
 N_DOCS = 600
@@ -23,16 +24,63 @@ def _cfg():
     return PipelineConfig(secret_key=KEY, n_buckets=16)
 
 
-def test_crash_resume_byte_identical(spark, tmp_path):
+def _crash_at_commit(monkeypatch, n: int, after: bool) -> None:
+    """Make the n-th manifest commit of a run raise, after the manifest
+    is written (``after``) or in the window before it."""
+    real = checkpoint.commit_manifest
+    calls = []
+
+    def commit(path, manifest):
+        calls.append(manifest)
+        if len(calls) == n and not after:
+            raise RuntimeError(f"injected failure before commit {n}")
+        real(path, manifest)
+        if len(calls) == n:
+            raise RuntimeError(f"injected failure after commit {n}")
+
+    monkeypatch.setattr(checkpoint, "commit_manifest", commit)
+
+
+def _changed(value):
+    """A different value of the same kind (a nested config changes its
+    first field)."""
+    if isinstance(value, bool):
+        return not value
+    if isinstance(value, (int, float)):
+        return value + 1
+    if isinstance(value, str):
+        return value + "x"
+    if isinstance(value, tuple):
+        return value + ("x",)
+    if value is None:
+        return 8
+    first = dataclasses.fields(value)[0].name
+    return dataclasses.replace(value, **{first: _changed(getattr(value, first))})
+
+
+@pytest.mark.parametrize(
+    "name", [f.name for f in dataclasses.fields(PipelineConfig)]
+)
+def test_every_config_field_is_fingerprinted(name):
+    """Every field that changes the output changes the fingerprint, so a
+    resume can never mix two configs in one output; only the plan-only
+    ``repartition`` is left out (it moves rows, not buckets)."""
+    cfg = _cfg()
+    other = dataclasses.replace(cfg, **{name: _changed(getattr(cfg, name))})
+    fp = checkpoint._config_fingerprint
+    assert (fp(other) == fp(cfg)) == (name == "repartition")
+
+
+def test_crash_resume_byte_identical(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "run")
     pages = generate_pages(spark, N_DOCS, seed=5, partitions=8)
 
-    # crash after wave 1 (of 4)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_checkpointed(pages, out, _cfg(), n_waves=4, fail_after_wave=1)
-    m = read_manifest(out)
-    assert 0 < len(m["done_buckets"]) < 16
-    assert remaining_buckets(out, _cfg())
+    # crash right after wave 1 (of 4) commits
+    with monkeypatch.context() as m:
+        _crash_at_commit(m, 2, after=True)
+        with pytest.raises(RuntimeError, match="after commit 2"):
+            run_checkpointed(pages, out, _cfg(), n_waves=4)
+    assert len(read_manifest(out)["done_buckets"]) == 8
 
     # files written so far — resume must not rewrite them
     scrub_dir = os.path.join(out, "scrubbed")
@@ -45,7 +93,7 @@ def test_crash_resume_byte_identical(spark, tmp_path):
     assert before
 
     run_checkpointed(pages, out, _cfg(), n_waves=4)
-    assert remaining_buckets(out, _cfg()) == []
+    assert read_manifest(out)["done_buckets"] == list(range(16))
 
     after = {
         os.path.join(r, f): os.path.getmtime(os.path.join(r, f))
@@ -90,23 +138,14 @@ def test_completed_run_is_noop(spark, tmp_path):
     assert read_manifest(out) == m1
 
 
-def test_iceberg_detection_returns_bool(spark):
-    # sandbox has no Iceberg jar; the probe must answer cleanly either way
-    assert iceberg_available(spark) in (True, False)
-
-
 def test_wave_filter_below_python_stage(spark):
     """The wave's bucket filter must execute BEFORE the fused Python
     stage (filtering the annotated output instead would re-run the whole
     pipeline once per wave)."""
-    from pyspark.sql import functions as F
-
-    from deidentify_spark.pipeline.stages import run_pipeline
-
     pages = generate_pages(spark, 50, seed=9, partitions=2)
     cfg = _cfg()
-    bucket_of_url = F.pmod(F.xxhash64("url"), F.lit(cfg.n_buckets)).cast("int")
-    wave = run_pipeline(pages.where(bucket_of_url.isin([0, 4, 8])), cfg)
+    wave_pages = pages.where(bucket_of_url(cfg.n_buckets).isin([0, 4, 8]))
+    wave = run_pipeline(wave_pages, cfg)
     plan = wave._jdf.queryExecution().executedPlan().toString()
     i_udf = plan.index("ArrowEvalPython")
     i_filter = plan.index("Filter cast(pmod(xxhash64(url")
@@ -114,7 +153,7 @@ def test_wave_filter_below_python_stage(spark):
     assert i_filter > i_udf, "bucket filter did not land below the python stage"
 
 
-def test_crash_before_manifest_no_duplicates(spark, tmp_path):
+def test_crash_before_manifest_no_duplicates(spark, tmp_path, monkeypatch):
     """Crash in the window AFTER a wave's data write but BEFORE its
     manifest write: the resumed run must re-process that wave and
     OVERWRITE its bucket partitions (dynamic partition overwrite) — never
@@ -122,10 +161,10 @@ def test_crash_before_manifest_no_duplicates(spark, tmp_path):
     out = str(tmp_path / "run4")
     pages = generate_pages(spark, N_DOCS, seed=5, partitions=8)
 
-    with pytest.raises(RuntimeError, match="before manifest"):
-        run_checkpointed(
-            pages, out, _cfg(), n_waves=4, fail_before_manifest_wave=1
-        )
+    with monkeypatch.context() as m:
+        _crash_at_commit(m, 2, after=False)
+        with pytest.raises(RuntimeError, match="before commit 2"):
+            run_checkpointed(pages, out, _cfg(), n_waves=4)
     m = read_manifest(out)
     # wave 0 committed, wave 1 wrote data but did NOT commit
     assert len(m["done_buckets"]) == 4
@@ -134,7 +173,7 @@ def test_crash_before_manifest_no_duplicates(spark, tmp_path):
     assert written_rows > 0
 
     run_checkpointed(pages, out, _cfg(), n_waves=4)
-    assert remaining_buckets(out, _cfg()) == []
+    assert read_manifest(out)["done_buckets"] == list(range(16))
 
     resumed = spark.read.parquet(scrub_dir)
     # no duplicate urls anywhere (append would duplicate wave 1)

@@ -139,7 +139,7 @@ def test_spark_submit_curation_chain(tmp_path):
     assert 0 < n_mix <= s5["n_after_fuzzy"]
     assert s5["n_selected"] == max(1, int(n_mix * 0.5))
     manifest = json.loads(
-        (tmp_path / "out1" / "tokens" / "_stage_manifest.json").read_text()
+        (tmp_path / "out1" / "tokens" / "_manifest.json").read_text()
     )
     assert len(manifest["merge_table"]) == 6
     # and a further re-submit resumes the tokenize stage too
