@@ -35,6 +35,34 @@ from pyspark.sql.window import Window
 
 SECRET_KEY = "test-secret-key"
 
+# Duplicate-span island chain shared by the dup_span_stats and
+# remove_dup_spans DuckDB twins: token 10-grams (from a ``words`` CTE
+# yielding doc_id, w) -> grams occurring >= 2 times corpus-wide ->
+# overlap islands per doc -> ``spans`` (doc_id, island, s, e).
+_DUP_SPAN_CTES = r"""), grams AS (
+                SELECT doc_id, i - 1 AS pos,
+                       array_to_string(w[i:i+9], ' ') AS gram
+                FROM words, unnest(generate_series(1, len(w) - 9)) AS t(i)
+            ), marked AS (
+                SELECT doc_id, pos,
+                       COUNT(*) OVER (PARTITION BY gram) AS occ
+                FROM grams QUALIFY occ >= 2
+            ), isl AS (
+                SELECT doc_id, pos,
+                       MAX(pos + 10) OVER (PARTITION BY doc_id ORDER BY pos
+                           ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND 1 PRECEDING) AS prev_end
+                FROM marked
+            ), isl2 AS (
+                SELECT doc_id, pos,
+                       SUM(CASE WHEN prev_end IS NULL OR pos > prev_end
+                                THEN 1 ELSE 0 END)
+                         OVER (PARTITION BY doc_id ORDER BY pos) AS island
+                FROM isl
+            ), spans AS (
+                SELECT doc_id, island, MIN(pos) AS s, MAX(pos + 10) AS e
+                FROM isl2 GROUP BY doc_id, island"""
+
 # Banded-minhash DuckDB twin of dedup._minhash_band_membership (word
 # 3-shingles, k=8 seeded-md5 minhashes, 4 bands of 2), spliced into
 # every MinHash oracle: the signature CTEs (words -> sh -> mh) and the
@@ -1480,18 +1508,11 @@ def dedup_incremental_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("doc_id", "content_md5").orderBy("doc_id")
 
 
-def pii_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-side PII triage counters (functions/pii_stats.py): raw
-    value-pattern hits per doc for emails/phones/SSNs/cards — the cheap
-    whole-stage-codegen survey pass that routes crawl slices to the
-    expensive Python scrub. PII is planted deterministically from
-    doc_id so the detectors fire; the DuckDB twin interpolates the SAME
-    pattern constants (oracle/patterns.py), making this a cross-engine
-    regex-semantics check, not just a count check."""
-    from deidentify_spark.functions.pii_stats import pii_hit_counts
-
-    docs = _t(spark, sf_dir, "documents")
-    planted = docs.withColumn(
+def _planted_pii_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents with PII appended deterministically from doc_id: an
+    email (id % 3 == 0), two phones (== 1), or an SSN and a card (== 2),
+    so every detector class fires."""
+    return _t(spark, sf_dir, "documents").withColumn(
         "text",
         F.concat(
             "text",
@@ -1510,8 +1531,20 @@ def pii_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(" ssn 123-45-6789 card 4111 1111 1111 1111")),
         ),
     )
+
+
+def pii_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JVM-side PII triage counters (functions/pii_stats.py): raw
+    value-pattern hits per doc for emails/phones/SSNs/cards — the cheap
+    whole-stage-codegen survey pass that routes crawl slices to the
+    expensive Python scrub. PII is planted deterministically from
+    doc_id so the detectors fire; the DuckDB twin interpolates the SAME
+    pattern constants (oracle/patterns.py), making this a cross-engine
+    regex-semantics check, not just a count check."""
+    from deidentify_spark.functions.pii_stats import pii_hit_counts
+
     return (
-        pii_hit_counts(planted)
+        pii_hit_counts(_planted_pii_documents(spark, sf_dir))
         .select("doc_id", "n_emails", "n_phones", "n_ssns", "n_cards")
         .orderBy("doc_id")
     )
@@ -1738,26 +1771,7 @@ def pii_mapping_audit_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     not SQL-expressible), determinism asserted at generation time."""
     from deidentify_spark.functions.scrub import mapping_audit_table
 
-    docs = _t(spark, sf_dir, "documents")
-    planted = docs.withColumn(
-        "text",
-        F.concat(
-            "text",
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(
-                    F.lit(" reach user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@corp.example"),
-                ),
-            )
-            .when(
-                F.col("doc_id") % 3 == 1,
-                F.lit(" call (555) 123-4567 or +1 555 987 6543"),
-            )
-            .otherwise(F.lit(" ssn 123-45-6789 card 4111 1111 1111 1111")),
-        ),
-    )
+    planted = _planted_pii_documents(spark, sf_dir)
     return mapping_audit_table(planted, "text", SECRET_KEY).orderBy(
         "pii_type", "original"
     )
@@ -2341,9 +2355,7 @@ def pagerank_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("l_extendedprice").alias("w"))
     )
-    # bounded_graph: nodes are TPC-H nations (25 by spec, never data-
-    # dependent), so the iteration joins legitimately broadcast
-    pr = pagerank(edges, weight="w", bounded_graph=True)
+    pr = pagerank(edges, weight="w")
     nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         pr.join(nat, pr["node"] == nat["n_nationkey"])
@@ -3582,29 +3594,9 @@ def oracle_sql() -> dict[str, str]:
                 SELECT doc_id,
                        regexp_split_to_array(lower(trim(text)), '\s+') AS w
                 FROM documents
-            ), grams AS (
-                SELECT doc_id, i - 1 AS pos,
-                       array_to_string(w[i:i+9], ' ') AS gram
-                FROM words, unnest(generate_series(1, len(w) - 9)) AS t(i)
-            ), marked AS (
-                SELECT doc_id, pos,
-                       COUNT(*) OVER (PARTITION BY gram) AS occ
-                FROM grams QUALIFY occ >= 2
-            ), isl AS (
-                SELECT doc_id, pos,
-                       MAX(pos + 10) OVER (PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING) AS prev_end
-                FROM marked
-            ), isl2 AS (
-                SELECT doc_id, pos,
-                       SUM(CASE WHEN prev_end IS NULL OR pos > prev_end
-                                THEN 1 ELSE 0 END)
-                         OVER (PARTITION BY doc_id ORDER BY pos) AS island
-                FROM isl
-            ), spans AS (
-                SELECT doc_id, island, MIN(pos) AS s, MAX(pos + 10) AS e
-                FROM isl2 GROUP BY doc_id, island
+            """
+        + _DUP_SPAN_CTES
+        + r"""
             )
             SELECT doc_id,
                    COUNT(*)::BIGINT AS n_dup_spans,
@@ -3623,29 +3615,9 @@ def oracle_sql() -> dict[str, str]:
                        regexp_split_to_array(lower(trim(text)), '\s+') AS w,
                        regexp_split_to_array(trim(text), '\s+') AS ow
                 FROM documents
-            ), grams AS (
-                SELECT doc_id, i - 1 AS pos,
-                       array_to_string(w[i:i+9], ' ') AS gram
-                FROM words, unnest(generate_series(1, len(w) - 9)) AS t(i)
-            ), marked AS (
-                SELECT doc_id, pos,
-                       COUNT(*) OVER (PARTITION BY gram) AS occ
-                FROM grams QUALIFY occ >= 2
-            ), isl AS (
-                SELECT doc_id, pos,
-                       MAX(pos + 10) OVER (PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING) AS prev_end
-                FROM marked
-            ), isl2 AS (
-                SELECT doc_id, pos,
-                       SUM(CASE WHEN prev_end IS NULL OR pos > prev_end
-                                THEN 1 ELSE 0 END)
-                         OVER (PARTITION BY doc_id ORDER BY pos) AS island
-                FROM isl
-            ), spans AS (
-                SELECT doc_id, island, MIN(pos) AS s, MAX(pos + 10) AS e
-                FROM isl2 GROUP BY doc_id, island
+            """
+        + _DUP_SPAN_CTES
+        + r"""
             ), drops AS (
                 -- spans are disjoint per doc, so COUNT(*) over the
                 -- exploded positions is exactly SUM(e - s)

@@ -45,20 +45,14 @@ def nfc_column(col: str | Column) -> Column:
     return nfc(F.col(col) if isinstance(col, str) else col)
 
 
-def normalize_text_column(col: str | Column, strip_controls: bool = True) -> Column:
+def normalize_text_column(col: str | Column) -> Column:
     """NFC composition, then control-char strip (order matters only for
     exotic compositions involving controls — none exist in Unicode, but
     the twin mirrors the order anyway)."""
-    out = nfc_column(col)
-    if strip_controls:
-        out = F.regexp_replace(out, _CONTROL_CLASS, "")
-    return out
+    return F.regexp_replace(nfc_column(col), _CONTROL_CLASS, "")
 
 
-def normalize_text_sql(expr: str, strip_controls: bool = True) -> str:
+def normalize_text_sql(expr: str) -> str:
     """DuckDB twin: utf8proc NFC + the same RE2 control class."""
-    out = f"nfc_normalize({expr})"
-    if strip_controls:
-        cls = _CONTROL_CLASS.replace("'", "''")
-        out = f"regexp_replace({out}, '{cls}', '', 'g')"
-    return out
+    cls = _CONTROL_CLASS.replace("'", "''")
+    return f"regexp_replace(nfc_normalize({expr}), '{cls}', '', 'g')"

@@ -99,18 +99,20 @@ def word_shingles(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    distinct: bool = True,
-    wide: bool = False,
 ) -> DataFrame:
-    """Word n-gram shingles per doc: (id, shingle), distinct by default.
+    """Word n-gram shingles per doc: (id, shingle), one row per
+    OCCURRENCE — the minhash signature input. min() is duplicate-
+    insensitive, so no distinct is needed, and skipping it removes a
+    full shuffle of shingle strings (~20% of minhash wall time at
+    sf0.1).
 
-    Pass ``distinct=False`` for duplicate-insensitive consumers (minhash:
-    min over duplicates == min over distinct) — it removes an entire
-    shuffle of shingle strings (~20% of minhash wall time at sf0.1).
-    ``wide`` is forwarded to the words exchange (see
-    ``_materialized_words``): signature-computing consumers whose
-    per-shingle CPU is a multiple of the shingle bytes keep the
-    per-core width floor.
+    The split words ride behind their own ``repartition(max(input
+    partitions, defaultParallelism), id)`` exchange (the barrier
+    ``_materialized_words`` explains) with a per-core width floor: the
+    signature aggregate computes k md5s per shingle, a CPU multiplier
+    over the words bytes that AQE's byte-based coalescing cannot see
+    (measured: AQE-sizing this exchange serialized the signature stage
+    onto 1-2 tasks and cost +76% on fuzzy_decontaminate at sf0.1).
 
     Docs with fewer than ``n`` words yield ZERO shingles (they simply
     don't appear in the output) — matching the DuckDB oracle twin, where
@@ -118,7 +120,9 @@ def word_shingles(
     ``F.sequence(0, size-n)`` steps DOWNWARD when ``size-n < 0`` (Spark
     sequence semantics), crashing on any 1-2 word doc.
     """
-    base = _materialized_words(df, text_col, id_col, wide=wide)
+    sc = df.sparkSession.sparkContext
+    width = max(df.rdd.getNumPartitions(), sc.defaultParallelism)
+    base = df.select(F.col(id_col), _words(text_col)).repartition(width, id_col)
     # Round-7: scalar explode of the position range + per-row
     # concat_ws(slice) instead of exploding a transform(sequence,
     # lambda) array build — higher-order functions are CodegenFallback,
@@ -129,7 +133,7 @@ def word_shingles(
         F.size("_words") >= n,
         F.sequence(F.lit(0), F.size("_words") - n),
     ).otherwise(F.array().cast("array<int>"))
-    out = base.select(
+    return base.select(
         F.col(id_col), "_words", F.explode(idx).alias("_i")
     ).select(
         F.col(id_col),
@@ -137,7 +141,18 @@ def word_shingles(
             " ", F.slice("_words", F.col("_i") + 1, n)
         ).alias("shingle"),
     )
-    return out.distinct() if distinct else out
+
+
+def _words(text_col: str) -> Column:
+    """``_words``: the lower-cased, trimmed text split on the explicit
+    RE2 whitespace class — Java's \\s additionally matches \\x0B, which
+    the DuckDB twin's RE2 \\s does not, so a vertical-tab doc would
+    shingle differently on the two engines."""
+    from deidentify_spark.functions.text_stats import RE2_WS_CLASS
+
+    return F.split(F.lower(F.trim(F.col(text_col))), RE2_WS_CLASS + "+").alias(
+        "_words"
+    )
 
 
 def _materialized_words(
@@ -145,7 +160,6 @@ def _materialized_words(
     text_col: str,
     id_col: str,
     extra_cols: tuple[str, ...] = (),
-    wide: bool = False,
 ) -> DataFrame:
     """(id[, extra...], _words) with the split-words array forced into a
     BOUND ATTRIBUTE behind an exchange.
@@ -169,40 +183,22 @@ def _materialized_words(
     concurrent 1-GiB-heap tasks at 100k pages; the array form has no
     sort and survives.)
 
-    Round-7 width rule: by default the exchange is ``repartition(id)``
-    with NO explicit partition count, so AQE sizes the reduce side
-    from the shuffled BYTES (initial width = shuffle.partitions, then
-    byte-based coalescing) — scale-adaptive in both directions: a
-    250-doc train split lands on 1-2 partitions (the old
-    ``max(input, defaultParallelism)`` floor forced >= one task per
-    core, and each task of every downstream pass over the cached/
-    re-read words table paid a fixed per-task cost that dwarfed its
-    ~handful of rows — measured 45% of the sf0.1 logreg query), while
-    a corpus-scale shuffle keeps its width from its volume, governed
-    by the same shuffle.partitions/advisory-size confs every other
-    exchange obeys. ``wide=True`` keeps the per-core floor: callers
-    whose downstream per-word CPU is multiplied far beyond the words
-    bytes (the minhash signature chain: k md5s per shingle) declare
-    it, because byte-based coalescing cannot see a CPU multiplier
-    (measured: AQE-sizing the minhash words exchange serialized the
-    signature stage onto 1-2 tasks and cost +76% on
-    fuzzy_decontaminate at sf0.1).
-
-    explicit RE2 whitespace class: Java's \\s additionally matches
-    \\x0B, which the DuckDB twin's RE2 \\s does not — a vertical-tab
-    doc would shingle differently on the two engines.
+    Width rule: ``repartition(id)`` with NO explicit partition count,
+    so AQE sizes the reduce side from the shuffled BYTES (initial
+    width = shuffle.partitions, then byte-based coalescing) — scale-
+    adaptive in both directions: a 250-doc train split lands on 1-2
+    partitions (a ``max(input, defaultParallelism)`` floor forces >=
+    one task per core, and each task of every downstream pass over the
+    cached/re-read words table paid a fixed per-task cost that dwarfed
+    its ~handful of rows — measured 45% of the sf0.1 logreg query),
+    while a corpus-scale shuffle keeps its width from its volume,
+    governed by the same shuffle.partitions/advisory-size confs every
+    other exchange obeys. ``word_shingles`` keeps the floor; its
+    docstring says why.
     """
-    from deidentify_spark.functions.text_stats import RE2_WS_CLASS
-
-    words = F.split(F.lower(F.trim(F.col(text_col))), RE2_WS_CLASS + "+")
-    slim = df.select(
-        F.col(id_col), *[F.col(c) for c in extra_cols], words.alias("_words")
-    )
-    if wide:
-        sc = df.sparkSession.sparkContext
-        width = max(df.rdd.getNumPartitions(), sc.defaultParallelism)
-        return slim.repartition(width, id_col)
-    return slim.repartition(id_col)
+    return df.select(
+        F.col(id_col), *[F.col(c) for c in extra_cols], _words(text_col)
+    ).repartition(id_col)
 
 
 def minhash_signatures(
@@ -354,17 +350,7 @@ def _minhash_band_membership(
     signature depends only on its own document, so memberships computed
     per snapshot union into exactly the full-corpus membership)."""
     rows = k // bands
-    # distinct=False: min() is duplicate-insensitive, and skipping the
-    # distinct removes a full shuffle of shingle strings (identical
-    # output, measured ~20% faster at sf0.1). wide=True: the signature
-    # aggregate computes k md5s per shingle — a CPU multiplier over the
-    # words bytes that AQE's byte-based coalescing cannot see (r7
-    # measured +76% on fuzzy_decontaminate with the byte-sized form).
-    sigs = minhash_signatures(
-        word_shingles(df, n, text_col, id_col, distinct=False, wide=True),
-        k,
-        id_col,
-    )
+    sigs = minhash_signatures(word_shingles(df, n, text_col, id_col), k, id_col)
     band_cols = []
     for b in range(bands):
         parts = [F.col(f"mh{b * rows + r}").cast("string") for r in range(rows)]
@@ -656,7 +642,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_doc_freq: int = 100,
-    cap_strategy: str = "window",
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via shingle equi-join (no cross join).
 
@@ -684,21 +669,14 @@ def ngram_jaccard_pairs(
     the cap) -> one (doc_a, doc_b) count aggregate. ~1/4 the shuffled
     bytes of the join form; identical results (pinned by test).
 
-    Cap plans:
-    * ``window`` (default): doc frequency via count() over a
-      shingle-partitioned window — a pathological hot shingle
-      concentrates on one task but the work stays LINEAR
-      (buffer+count+filter), never quadratic.
-    * ``antijoin``: map-side-combinable groupBy count + broadcast
-      anti-join of the tiny hot set — no single-task concentration;
-      prefer it when the shingle table is materialized (checkpointed
-      100 TB runs), since lazily it recomputes the shingle explode.
-
+    The cap's doc frequency is a count() over a shingle-partitioned
+    window — a pathological hot shingle concentrates on one task but the
+    work stays LINEAR (buffer+count+filter), never quadratic.
     """
     from pyspark.sql.window import Window
 
     # Shingle IDENTITY rides as xxhash64(shingle), not the string: the
-    # distinct, the doc-frequency window/groupBy, and the pair-emission
+    # distinct, the doc-frequency window, and the pair-emission
     # groupBy all shuffle 8-byte longs instead of ~n-word strings (the
     # strings appear in no output column). A 64-bit collision would merge
     # two shingles' doc lists — p ≈ s^2/2^65 (~3e-9 at 10^9 distinct
@@ -707,23 +685,12 @@ def ngram_jaccard_pairs(
     # green because no collision occurs at test scale (or realistically
     # any scale).
     sh = _distinct_shingle_hashes(df, n, text_col, id_col)
-    if cap_strategy == "window":
-        w = Window.partitionBy("shingle")
-        sh = (
-            sh.withColumn("_df", F.count(F.lit(1)).over(w))
-            .where(F.col("_df") <= max_doc_freq)
-            .drop("_df")
-        )
-    elif cap_strategy == "antijoin":
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") > max_doc_freq)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    else:
-        raise ValueError(f"unknown cap_strategy: {cap_strategy!r}")
+    w = Window.partitionBy("shingle")
+    sh = (
+        sh.withColumn("_df", F.count(F.lit(1)).over(w))
+        .where(F.col("_df") <= max_doc_freq)
+        .drop("_df")
+    )
     # join-free pair generation: set sizes ride along, each shingle
     # group (<= max_doc_freq docs) streams its C(m,2) pairs
     sh = sh.withColumn(

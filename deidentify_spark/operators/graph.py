@@ -36,8 +36,6 @@ def pagerank(
     weight: str | None = None,
     damping: float = 0.85,
     n_iter: int = 4,
-    checkpoint_every: int = 1,
-    bounded_graph: bool = False,
 ) -> DataFrame:
     """Weighted PageRank; returns (node, rank).
 
@@ -46,14 +44,8 @@ def pagerank(
     (no convergence test: a tolerance check would force an action per
     round; production runs pick n_iter from the known spectral-gap
     bound, and a fixed count keeps the oracle SQL expressible).
-
-    ``bounded_graph=True`` is the caller's assertion that the node set
-    is bounded by CONSTRUCTION (a nation/TLD/label graph — never a
-    per-host or per-page graph): the per-iteration rank⋈transition and
-    node⋈contribution joins then carry explicit broadcast hints,
-    collapsing each round's two shuffle exchanges into broadcast
-    builds. Default False — on a 10^9-node host graph those tables are
-    O(nodes)/O(edges) and must shuffle-join.
+    AQE plans the per-round joins from the observed sizes: a small
+    graph broadcasts, a 10^9-node host graph shuffle-joins.
     """
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = (
@@ -95,15 +87,13 @@ def pagerank(
             ranks.where(F.col("_dang"))
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
         )
-        tr = F.broadcast(trans) if bounded_graph else trans
         contrib = (
-            ranks.join(tr, ranks["node"] == tr["src"])
+            ranks.join(trans, ranks["node"] == trans["src"])
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("p")).alias("contrib"))
         )
-        cb = F.broadcast(contrib) if bounded_graph else contrib
         ranks = (
-            nodes.join(cb, nodes["node"] == cb["dst"], "left")
+            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
             .crossJoin(F.broadcast(dmass))
             .select(
                 "node",
@@ -115,12 +105,11 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        # Cut lineage EVERY round by default (checkpoint_every=1): the
-        # update references `ranks` twice (dmass + contrib), so an uncut
-        # chain recomputes rank_{k-j} 2^j times. Materializing the
-        # O(nodes) rank vector per round is the standard distributed
-        # PageRank shape (GraphX does the same).
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+        # Cut lineage every round: the update references `ranks` twice
+        # (dmass + contrib), so an uncut chain recomputes rank_{k-j} 2^j
+        # times. Materializing the O(nodes) rank vector per round is the
+        # standard distributed PageRank shape (GraphX does the same).
+        if i + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", "rank")
 

@@ -98,6 +98,23 @@ def _tf_and_stats(
     return tf, stats
 
 
+def _bm25_idf(tf: DataFrame, stats: DataFrame) -> DataFrame:
+    """(_term, _idf, _avgdl): per-term doc frequency from ``tf`` with
+    the one-row corpus stats broadcast alongside."""
+    return (
+        tf.groupBy("_term")
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .crossJoin(F.broadcast(stats))
+        .select(
+            "_term",
+            F.log(
+                1.0 + (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
+            ).alias("_idf"),
+            "_avgdl",
+        )
+    )
+
+
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
@@ -120,18 +137,7 @@ def bm25_topk(
     """
     terms = sorted({t.lower() for t in query_terms})
     tf, stats = _tf_and_stats(df, terms, text_col, id_col)
-    idf = (
-        tf.groupBy("_term")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "_term",
-            F.log(
-                1.0 + (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
-            ).alias("_idf"),
-            "_avgdl",
-        )
-    )
+    idf = _bm25_idf(tf, stats)
     scored = tf.join(F.broadcast(idf), "_term").withColumn(
         "_s",
         F.col("_idf")
@@ -234,18 +240,7 @@ def bm25_topk_multi(
     """
     all_terms = sorted({t.lower() for terms in queries.values() for t in terms})
     tf, stats = _tf_and_stats(df, all_terms, text_col, id_col)
-    idf = (
-        tf.groupBy("_term")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "_term",
-            F.log(
-                1.0 + (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
-            ).alias("_idf"),
-            "_avgdl",
-        )
-    )
+    idf = _bm25_idf(tf, stats)
     qterms = df.sparkSession.createDataFrame(
         sorted(
             {(qid, t.lower()) for qid, terms in queries.items() for t in terms}

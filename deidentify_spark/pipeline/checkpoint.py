@@ -94,6 +94,8 @@ def run_checkpointed(
     of (secret_key, doc)). Returns the final manifest. A fingerprint mismatch (config changed)
     raises — resuming under a different config would mix semantics.
     """
+    if n_waves < 1:
+        raise ValueError(f"n_waves must be >= 1, got {n_waves}")
     os.makedirs(output_path, exist_ok=True)
     fp = _config_fingerprint(cfg)
     manifest = read_manifest(output_path) or {

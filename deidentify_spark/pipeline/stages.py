@@ -76,6 +76,10 @@ class PipelineConfig:
     # stage-ordering doctrine. Default off (reference byte-parity).
     dedup_lines_within_doc: bool = False
 
+    def __post_init__(self):
+        if self.n_buckets < 1:
+            raise ValueError(f"n_buckets must be >= 1, got {self.n_buckets}")
+
 
 def bucket_of_url(n_buckets: int) -> Column:
     """The url-hash lineage bucket of a row. The one spelling of it: the

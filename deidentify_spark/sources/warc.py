@@ -199,7 +199,6 @@ def write_warc(
     url_col: str = "url",
     ts_col: str = "warc_ts",
     html_col: str = "html",
-    per_record_gzip: bool = True,
 ) -> DataFrame:
     """Distributed WARC sink: one ``.warc.gz`` per partition.
 
@@ -228,7 +227,7 @@ def write_warc(
                 for url, ts, html in zip(pdf[url_col], pdf[ts_col], pdf[html_col]):
                     ts = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
                     rec = render_response_record(str(url), ts, bytes(html))
-                    f.write(_gzip_member(rec) if per_record_gzip else rec)
+                    f.write(_gzip_member(rec))
                     n += 1
         try:
             os.replace(tmp, path)  # atomic publish

@@ -138,6 +138,18 @@ def test_completed_run_is_noop(spark, tmp_path):
     assert read_manifest(out) == m1
 
 
+@pytest.mark.parametrize("n_buckets,n_waves", [(0, 4), (-1, 4), (4, 0), (4, -2)])
+def test_no_buckets_or_waves_rejected(spark, tmp_path, n_buckets, n_waves):
+    """Zero buckets or waves would silently process nothing and leave no
+    metrics table; both are rejected before any output is written."""
+    out = tmp_path / "run"
+    pages = generate_pages(spark, 10, seed=6, partitions=1)
+    with pytest.raises(ValueError, match="n_buckets|n_waves"):
+        cfg = PipelineConfig(secret_key=KEY, n_buckets=n_buckets)
+        run_checkpointed(pages, str(out), cfg, n_waves=n_waves)
+    assert not out.exists()
+
+
 def test_wave_filter_below_python_stage(spark):
     """The wave's bucket filter must execute BEFORE the fused Python
     stage (filtering the annotated output instead would re-run the whole

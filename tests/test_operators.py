@@ -357,30 +357,6 @@ def test_multimodal_features_scalar_parity(spark):
         assert r.n_bytes == len(payloads[r.asset_id])
 
 
-def test_ngram_jaccard_cap_strategies_agree(spark):
-    """window and antijoin cap plans produce identical results."""
-    from deidentify_spark.operators.dedup import ngram_jaccard_pairs
-
-    hot = "the quick brown fox jumps"
-    rows = [(i, f"{hot} unique{i} filler{i} tail{i}") for i in range(25)]
-    rows += [(100, hot + " alpha beta gamma delta"),
-             (101, hot + " alpha beta gamma zeta")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in ngram_jaccard_pairs(
-            df, n=3, threshold=0.1, max_doc_freq=10, cap_strategy="window"
-        ).collect()
-    )
-    b = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in ngram_jaccard_pairs(
-            df, n=3, threshold=0.1, max_doc_freq=10, cap_strategy="antijoin"
-        ).collect()
-    )
-    assert a == b and a
-
-
 def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
     """A bucket over max_bucket_size is dropped whole (standard LSH
     practice for boilerplate signatures); small buckets still pair."""

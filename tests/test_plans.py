@@ -142,27 +142,29 @@ def test_jaccard_capped_plan_is_join_free(spark):
     assert plan.count("documents.parquet") == 1, plan[:3000]
 
 
-def test_jaccard_antijoin_strategy_plan(spark):
-    """cap_strategy='antijoin' — the recommended form for materialized
-    100-TB shingle tables — must implement the stop-shingle cap as a
-    BROADCAST anti-join of the tiny hot set (map-side-combinable count,
-    no single-task concentration), never a shuffled join of the full
-    shingle table against itself."""
-    from deidentify_spark.operators.dedup import ngram_jaccard_pairs
+def test_words_exchange_width_rules(spark):
+    """The two words-exchange widths: word_shingles (the minhash input)
+    floors its exchange at max(input partitions, defaultParallelism);
+    _materialized_words leaves the width to AQE (no explicit count)."""
+    import re
+
+    from deidentify_spark.operators.dedup import _materialized_words, word_shingles
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.6, max_doc_freq=100, cap_strategy="antijoin"
-    )
-    df.count()  # AQE: final plan materializes after execution
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan[:2000]
-    for join in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct",
-                 "BroadcastNestedLoopJoin"):
-        assert join not in plan, join
-    # results identical to the window strategy (same cap semantics)
-    win = ngram_jaccard_pairs(docs, n=3, threshold=0.6, max_doc_freq=100)
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, win.collect()))
+    cores = spark.sparkContext.defaultParallelism
+    for inp in (docs.coalesce(1), docs.repartition(cores + 3)):
+        want = max(inp.rdd.getNumPartitions(), cores)
+        plan = _plan(word_shingles(inp, 3))
+        widths = re.findall(
+            r"Exchange hashpartitioning\(doc_id#\d+L?, (\d+)\), REPARTITION_BY_NUM",
+            plan,
+        )
+        assert widths == [str(want)], plan[:3000]
+    plan = _plan(_materialized_words(docs, "text", "doc_id"))
+    assert re.search(
+        r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\), REPARTITION_BY_COL", plan
+    ), plan[:3000]
+    assert "REPARTITION_BY_NUM" not in plan
 
 
 def test_minhash_no_shingle_distinct_shuffle(spark):
@@ -173,7 +175,7 @@ def test_minhash_no_shingle_distinct_shuffle(spark):
     from deidentify_spark.operators.dedup import minhash_signatures, word_shingles
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sigs = minhash_signatures(word_shingles(docs, 3, distinct=False), k=8)
+    sigs = minhash_signatures(word_shingles(docs, 3), k=8)
     plan = _plan(sigs)
     # one shuffle total: hashpartitioning(doc_id); a distinct would add a
     # second exchange keyed on (doc_id, shingle)
