@@ -15,9 +15,8 @@ centroid/nearest-class-mean model over hashed char 1-3-gram counts:
 
 Languages whose script is unique among the supported set (zh/ar/ko/hi/
 el/he/th, plus the ja/zh Han split) are decided by a Unicode-block gate
-ahead of the model — see _script_gate below. The Spark surface is a
-masked Arrow pandas UDF returning
-struct<lang_pred:string, lang_conf:double>.
+ahead of the model — see _script_gate below. The Spark surface is an
+Arrow pandas UDF returning struct<lang_pred:string, lang_conf:double>.
 """
 
 from __future__ import annotations
@@ -96,8 +95,9 @@ def _codepoints(s: str) -> np.ndarray:
 def _ngram_hashes(c: np.ndarray) -> np.ndarray:
     """Hashed char 1/2/3-gram bucket ids for a codepoint array — THE
     shared hashing between centroid training (featurize) and document
-    scoring (_sparse_counts). They must stay hash-identical or cosine
-    scores silently lose meaning; keep the mixing in exactly one place."""
+    scoring (predict_batch's _sparse_hist). They must stay hash-identical
+    or cosine scores silently lose meaning; keep the mixing in exactly
+    one place."""
     parts = [(c * _M1) & _MASK]
     if c.size >= 2:
         parts.append((c[:-1] * _M1 + c[1:] * _M2) & _MASK)
@@ -124,41 +124,49 @@ def _sparse_hist(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return hs[mask].astype(np.int64), cnt
 
 
-def featurize(s: str) -> np.ndarray:
-    """Hashed char 1/2/3-gram count vector, L2-normalized (float32)."""
-    c = _codepoints(s.lower())
-    if c.size == 0:
-        return np.zeros(_DIM, dtype=np.float32)
-    idx = _ngram_hashes(c).astype(np.int64)
+def featurize(s: str, hashes=_ngram_hashes) -> np.ndarray:
+    """Hashed char-gram count vector, L2-normalized (float32): 1/2/3-grams
+    by default, or the bucket ids ``hashes`` gives for the codepoints."""
+    idx = hashes(_codepoints(s.lower())).astype(np.int64)
     # single bincount over all n-gram hashes (~5x faster than np.add.at)
     vec = np.bincount(idx, minlength=_DIM).astype(np.float32)
     norm = np.linalg.norm(vec)
     return vec / norm if norm > 0 else vec
 
 
+def _training_texts(lang: str) -> list[str]:
+    """The authored training pool of ``lang``: the narrative base text
+    plus each register supplement."""
+    from deidentify_spark.sources.textpools import (
+        LANGID_TRAINING,
+        LANGID_TRAINING_EXTRA,
+    )
+
+    return [LANGID_TRAINING[lang]] + list(LANGID_TRAINING_EXTRA.get(lang, []))
+
+
+def _fit_centroids(hashes) -> dict[str, np.ndarray]:
+    """Unit centroid per supported language in the feature space of
+    ``hashes``: the mean of per-TEXT normalized feature vectors
+    (narrative base + each register supplement weighs equally —
+    concatenating instead would let the long narrative drown the short
+    legal/tech/conversational texts), then re-normalized."""
+    from deidentify_spark.sources.textpools import LANGID_TRAINING
+
+    cents: dict[str, np.ndarray] = {}
+    for lang in sorted(LANGID_TRAINING):
+        m = np.mean([featurize(t, hashes) for t in _training_texts(lang)], axis=0)
+        cents[lang] = m / (np.linalg.norm(m) or 1.0)
+    return cents
+
+
 def _get_model() -> tuple[np.ndarray, list[str]]:
     """Centroid matrix (n_langs x DIM) + language labels, fitted lazily."""
     global _MODEL
     if _MODEL is None:
-        from deidentify_spark.sources.textpools import (
-            LANGID_TRAINING,
-            LANGID_TRAINING_EXTRA,
-        )
-
-        langs = sorted(LANGID_TRAINING)
-        # class centroid = mean of per-TEXT normalized feature vectors
-        # (narrative base + each register supplement weighs equally —
-        # concatenating instead would let the long narrative drown the
-        # short legal/tech/conversational texts), then re-normalized.
-        rows = []
-        for lang in langs:
-            vecs = [featurize(LANGID_TRAINING[lang])] + [
-                featurize(t) for t in LANGID_TRAINING_EXTRA.get(lang, [])
-            ]
-            m = np.mean(vecs, axis=0)
-            rows.append(m / (np.linalg.norm(m) or 1.0))
-        mat = np.stack(rows)
-        _MODEL = (mat, langs)
+        cents = _fit_centroids(_ngram_hashes)
+        langs = sorted(cents)
+        _MODEL = (np.stack([cents[lang] for lang in langs]), langs)
     return _MODEL
 
 
@@ -179,25 +187,7 @@ def _get_model4() -> dict[str, np.ndarray]:
     (max over all centroids)."""
     global _MODEL4
     if _MODEL4 is None:
-        from deidentify_spark.sources.textpools import (
-            LANGID_TRAINING,
-            LANGID_TRAINING_EXTRA,
-        )
-
-        cents: dict[str, np.ndarray] = {}
-        for lang in sorted(LANGID_TRAINING):
-            vecs = []
-            for t in [LANGID_TRAINING[lang]] + list(
-                LANGID_TRAINING_EXTRA.get(lang, [])
-            ):
-                c = _codepoints(t.lower())
-                idx = _gram4_hashes(c).astype(np.int64)
-                v = np.bincount(idx, minlength=_DIM).astype(np.float32)
-                n = np.linalg.norm(v)
-                vecs.append(v / n if n > 0 else v)
-            m = np.mean(vecs, axis=0)
-            cents[lang] = m / (np.linalg.norm(m) or 1.0)
-        _MODEL4 = cents
+        _MODEL4 = _fit_centroids(_gram4_hashes)
     return _MODEL4
 
 
@@ -208,18 +198,12 @@ def _get_vocab() -> dict[str, frozenset[str]]:
     if _VOCAB is None:
         import re
 
-        from deidentify_spark.sources.textpools import (
-            LANGID_TRAINING,
-            LANGID_TRAINING_EXTRA,
-        )
+        from deidentify_spark.sources.textpools import LANGID_TRAINING
 
         word = re.compile(r"[^\W\d_]+", re.UNICODE)
         _VOCAB = {
             lang: frozenset(
-                w.lower()
-                for t in [LANGID_TRAINING[lang]]
-                + list(LANGID_TRAINING_EXTRA.get(lang, []))
-                for w in word.findall(t)
+                w.lower() for t in _training_texts(lang) for w in word.findall(t)
             )
             for lang in LANGID_TRAINING
         }

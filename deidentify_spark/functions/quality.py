@@ -1,16 +1,18 @@
-"""Gopher/C4-style heuristic quality rules as native Spark expressions.
+"""Gopher/C4-style heuristic quality rules, in Python and as Spark
+Column expressions.
 
 Rules follow the published heuristics of Rae et al. 2021 (Gopher, §A1.1)
 and Raffel et al. 2020 (C4, §2.2) — public knowledge, not the reference
 repo (the reference is a scalar PII library; the filter layer is mandated
 by the build contract / BASELINE.json north_rule).
 
-Everything except the n-gram repetition ratio is a pure
-``pyspark.sql.functions`` column expression (JVM-side, whole-stage
-codegen'd, no Python). The repetition ratio needs n-gram frequency
-counting and is computed inline by the fused Arrow stage
-(functions/fused.py:top_2gram_frac), which also gates it behind the
-cheaper rules so rejected docs never pay for it.
+The pipeline runs the Python twins (``quality_pre_reason_py``, then the
+n-gram repetition ratio functions/fused.py:top_2gram_frac, then
+``quality_post_reason_py``) inside the fused Arrow stage, so rejected
+docs never pay for the later rules. The Column form
+(``quality_metrics`` + ``quality_drop_reason``: JVM-side, whole-stage
+codegen'd) serves the ``quality_stats_documents`` query and the
+cross-engine parity test in tests/test_functions.py.
 
 Rule evaluation order is fixed and load-bearing: ``drop_reason`` is the
 FIRST failing rule, and the synthetic generator (sources/pages.py) crafts

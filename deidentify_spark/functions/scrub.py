@@ -1,5 +1,6 @@
-"""Vectorized scrub stage: the oracle's 8-pass PII rewrite as an Arrow
-pandas UDF, plus per-detector hit counts for the lineage/metrics table.
+"""Scrub UDFs over the oracle's 8-pass PII rewrite, plus the counting
+engines whose per-detector hits the fused stage reports to the
+lineage/metrics table.
 
 The replacement function is pure in (secret_key, type, value) — see
 SURVEY.md §0 / deidentify.go:291-335 — so the UDF is stateless across
@@ -12,23 +13,10 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType
 
 from deidentify_spark.oracle import Deidentifier
 from deidentify_spark.oracle.extensions import ExtendedDeidentifier
-
-SCRUB_SCHEMA = StructType(
-    [
-        StructField("scrubbed_text", StringType()),
-        StructField("pii_hits", MapType(StringType(), LongType())),
-    ]
-)
 
 
 class _CountingMixin:
@@ -55,32 +43,6 @@ class CountingDeidentifier(_CountingMixin, Deidentifier):
 
 class CountingExtendedDeidentifier(_CountingMixin, ExtendedDeidentifier):
     """Counting engine with the opt-in IP detector extension."""
-
-
-def scrub_udf(secret_key: str):
-    """Arrow pandas UDF: (text, mask) -> struct(scrubbed_text, pii_hits).
-
-    Masked rows (filter-dropped docs) pass through with null scrubbed_text
-    and null hit map — scrubbing work is spent only on kept documents.
-    """
-
-    @F.pandas_udf(SCRUB_SCHEMA)
-    def scrub(text: pd.Series, mask: pd.Series) -> pd.DataFrame:
-        d = CountingDeidentifier(secret_key)
-        scrubbed: list[str | None] = []
-        hits: list[dict[str, int] | None] = []
-        do = mask.fillna(False).astype(bool)
-        for t, m in zip(text.tolist(), do.tolist()):
-            if not m or t is None:
-                scrubbed.append(None)
-                hits.append(None)
-                continue
-            d.reset_hits()
-            scrubbed.append(d.text(t))
-            hits.append(dict(d.hits))
-        return pd.DataFrame({"scrubbed_text": scrubbed, "pii_hits": hits})
-
-    return scrub
 
 
 _AUDIT_SCHEMA = "array<struct<pii_type:string,original:string,replacement:string>>"

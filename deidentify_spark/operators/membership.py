@@ -19,10 +19,7 @@ see operators/dedup._hash60).
 Everything is JVM Column work: build is explode -> one groupBy(bit_or)
 shuffle of (k x n) longs; probe packs the bitmap into ONE map row,
 broadcasts it, and evaluates all k lookups per doc inside a `forall`
-lambda — zero shuffle, zero Python. For m beyond broadcast comfort
-(~2^30 bits = 128 MB packed), ``bloom_maybe_seen_join`` probes via
-explode + equi-join on word_idx instead (same build artifact, same
-results — equivalence pinned in tests). Scala/Spark's own
+lambda — zero shuffle, zero Python. Scala/Spark's own
 ``DataFrameStatFunctions.bloomFilter`` has no PySpark surface and its
 bitmap is opaque to SQL engines — this keeps the filter queryable,
 mergeable (union builds + re-bit_or), and oracle-checkable.
@@ -96,8 +93,7 @@ def bloom_maybe_seen(
     The bitmap packs into one map<bigint,bigint> row broadcast to every
     task; the k probes run inside a single `forall` over the position
     array — pure JVM expressions, no shuffle, no per-doc join. Suitable
-    while the packed map broadcasts comfortably (~m <= 2^30 bits); see
-    module docstring for the giant-m join variant.
+    while the packed map broadcasts comfortably (~m <= 2^30 bits).
     """
     packed = bloom.groupBy().agg(
         F.map_from_entries(
@@ -120,9 +116,8 @@ def bloom_maybe_seen(
     return (
         df.crossJoin(F.broadcast(packed))
         # NULL input => NULL (membership of NULL is unknown) — stated
-        # explicitly so both probe variants agree byte-for-byte; the
-        # forall over an all-NULL position array happens to yield NULL
-        # too, but the join variant would not without its own guard.
+        # explicitly; the forall over an all-NULL position array happens
+        # to yield NULL too.
         .withColumn(
             out_col,
             F.when(F.col(col).isNull(), F.lit(None).cast("boolean")).otherwise(
@@ -130,56 +125,6 @@ def bloom_maybe_seen(
             ),
         )
         .drop("_bloom_map")
-    )
-
-
-def bloom_maybe_seen_join(
-    df: DataFrame,
-    bloom: DataFrame,
-    col: str = "text",
-    m_bits: int = 1 << 20,
-    k: int = 3,
-    id_col: str = "doc_id",
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Giant-m probe: same semantics as bloom_maybe_seen, for bitmaps
-    too large to pack into one broadcast map (~m > 2^30 bits / 128 MB
-    packed — e.g. m=2^33 ≈ 1 GB covering 10^9 hashes).
-
-    Shape: explode the k positions (k longs per row), equi-join the
-    bitmap table on word_idx (AQE picks broadcast while the bitmap is
-    small and sort-merge once it isn't — the join key is uniform by
-    construction, so no skew), per-position bit test, then one
-    map-side-combinable groupBy(id) bool_and joined back to the input.
-    Equivalence with the broadcast-map probe is pinned in tests.
-    """
-    pos = _positions_array(F.col(col), k, m_bits)
-    probes = df.select(id_col, F.explode(pos).alias("pos")).select(
-        id_col,
-        "pos",
-        F.expr("shiftright(pos, 5)").alias("word_idx"),
-        F.expr(
-            f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(pos, {_WORD_BITS}) AS INT))"
-        ).alias("bit"),
-    )
-    hits = (
-        probes.join(bloom, "word_idx", "left")
-        .groupBy(id_col)
-        .agg(
-            F.min(
-                (F.col("word").isNotNull())
-                & (F.col("word").bitwiseAND(F.col("bit")) != 0)
-            ).alias(out_col)
-        )
-    )
-    # NULL input => NULL, matching bloom_maybe_seen (a NULL value's
-    # positions are all NULL, so the join would otherwise report a
-    # confident false).
-    return df.join(hits, id_col, "left").withColumn(
-        out_col,
-        F.when(F.col(col).isNull(), F.lit(None).cast("boolean")).otherwise(
-            F.col(out_col)
-        ),
     )
 
 

@@ -68,13 +68,6 @@ class PipelineConfig:
     # never read html (pinned by tests/test_plans.py
     # test_pipeline_never_reads_html).
     extract_from_html: bool = False
-    # Opt-in C4-style page-local line dedup (operators/curation.py
-    # within_doc_line_dedup semantics, inlined as the same codegen
-    # expression): repeated lines INSIDE a page are cut to their first
-    # occurrence before the model stage — pure JVM array work that
-    # shrinks text ahead of the expensive Arrow stage, per the
-    # stage-ordering doctrine. Default off (reference byte-parity).
-    dedup_lines_within_doc: bool = False
 
     def __post_init__(self):
         if self.n_buckets < 1:
@@ -107,21 +100,6 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
         df = pages.select(
             "url", "warc_ts", "text", "lang"
         )  # html pruned at scan — never read
-
-    if cfg.dedup_lines_within_doc:
-        # Page-local boilerplate cut (C4's in-page pass): downstream
-        # stages — quality metrics, perplexity, scrub — see the cleaned
-        # text, exactly like extract_from_html redefines ``text``.
-        # array_distinct preserves first-occurrence order; the
-        # untouched-doc branch keeps the original bytes.
-        _arr = F.split(F.col("text"), "\n")
-        _dd = F.array_distinct(_arr)
-        df = df.withColumn(
-            "text",
-            F.when(F.size(_dd) == F.size(_arr), F.col("text")).otherwise(
-                F.array_join(_dd, "\n")
-            ),
-        )
 
     if cfg.repartition:
         df = df.repartition(cfg.repartition, F.xxhash64("url"))

@@ -55,14 +55,6 @@ PAGES_SCHEMA = StructType(
 )
 
 PAGE_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
-LABEL_COLUMNS = [
-    "url",
-    "true_lang",
-    "expected_keep",
-    "expected_drop_reason",
-    "pii_kinds",
-    "pii_values",
-]
 
 # (category, cumulative weight) — first match on a uniform draw.
 _CATEGORIES = [
@@ -387,16 +379,3 @@ def generate_pages(
 
     return rng.mapInPandas(gen, PAGES_SCHEMA)
 
-
-def write_pages_dataset(
-    spark: SparkSession,
-    path: str,
-    n_docs: int,
-    seed: int = 42,
-    cfg: QualityConfig | None = None,
-    partitions: int | None = None,
-) -> None:
-    """Materialize pages + labels as parquet (pages/, labels/ under path)."""
-    df = generate_pages(spark, n_docs, seed, cfg, partitions)
-    df.select(*PAGE_COLUMNS).write.mode("overwrite").parquet(f"{path}/pages")
-    df.select(*LABEL_COLUMNS).write.mode("overwrite").parquet(f"{path}/labels")

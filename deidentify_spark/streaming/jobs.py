@@ -171,92 +171,3 @@ def stream_sessionization(
         )
     )
 
-
-def tws_available() -> bool:
-    """True when the Spark 4.x transformWithStateInPandas runtime can
-    actually run here: its state-server Python runner imports
-    google.protobuf, which is not part of this sandbox's baked-in
-    package set (probe, don't crash mid-query — the query fails with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE otherwise)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_dedup_first_seen_tws(
-    spark: SparkSession,
-    input_path: str,
-    max_files_per_trigger: int | None = 1,
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """`transformWithStateInPandas` twin of :func:`stream_dedup_first_seen`
-    (Spark 4.x arbitrary-state API). Same semantics — each url emitted
-    exactly once at first sighting — plus optional per-key state TTL:
-    at crawl scale the url-state store grows monotonically under the
-    older applyInPandasWithState API (NoTimeout), while here
-    ``state_ttl_ms`` lets seen-markers expire after the window in which
-    a recrawl would realistically produce a duplicate, bounding state at
-    O(urls per TTL window) instead of O(all urls ever). A url recrawled
-    after the TTL is emitted again — by design (it IS new content at
-    that point: crawl dedup policy, not exact-set semantics).
-
-    TTL requires timeMode="ProcessingTime"; with no TTL the state is
-    exact and permanent, matching the applyInPandasWithState twin
-    (equivalence pinned in tests/test_streaming.py).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import IntegerType
-    from pyspark.sql.types import StructField as SF
-    from pyspark.sql.types import StructType as ST
-
-    out_schema = ST(
-        [
-            SF("url", StringType()),
-            SF("first_ts", TimestampType()),
-        ]
-    )
-
-    class FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", ST([SF("seen", IntegerType())]), ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._seen.exists():
-                return iter(())
-            first_ts = None
-            for pdf in rows:
-                ts = pdf["warc_ts"].min()
-                # NaT guard — same rationale as the applyInPandasWithState
-                # twin: min() of an all-null chunk is NaT, and NaT
-                # comparisons are always False
-                if pd.notna(ts) and (first_ts is None or ts < first_ts):
-                    first_ts = ts
-            self._seen.update((1,))
-            return iter([pd.DataFrame({"url": [key[0]], "first_ts": [first_ts]})])
-
-        def close(self) -> None:
-            pass
-
-    reader = spark.readStream.schema(PAGES_STREAM_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(input_path)
-    return (
-        pages.select("url", "warc_ts")
-        .groupBy("url")
-        .transformWithStateInPandas(
-            FirstSeen(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="ProcessingTime" if state_ttl_ms else "None",
-        )
-    )

@@ -114,3 +114,35 @@ def test_registry_top_block_is_exactly_driver_cap():
     o = entry_mod.oracle_sql()
     assert set(o) <= set(q)
     assert set(q) - set(o) == {"scrub_documents"}  # the rows-only one
+
+
+def test_contract_imports_from_foreign_cwd(tmp_path):
+    """The contract file must load by path from any working directory,
+    with the repo on neither ``sys.path`` nor ``PYTHONPATH``: its own
+    path set-up has to reach the query modules it imports."""
+    import pathlib
+    import subprocess
+    import sys
+
+    entry_file = pathlib.Path(entry_mod.__file__).resolve()
+    probe = (
+        "import runpy\n"
+        f"ns = runpy.run_path({str(entry_file)!r})\n"
+        "q, o = ns['queries'](), ns['oracle_sql']()\n"
+        "assert len(q) == 121, len(q)\n"
+        "assert set(o) <= set(q), sorted(set(o) - set(q))\n"
+        "assert all(callable(f) for f in q.values())\n"
+        "print('ok')\n"
+    )
+    env = {
+        k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "PYTHONSTARTUP")
+    }
+    r = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0 and r.stdout.strip() == "ok", r.stderr[-2000:]

@@ -11,7 +11,6 @@ from deidentify_spark.operators.membership import (
     bloom_build,
     bloom_fp_estimate,
     bloom_maybe_seen,
-    bloom_maybe_seen_join,
 )
 
 M, K = 1 << 14, 3
@@ -64,33 +63,16 @@ def test_merge_is_associative(spark, corpus):
     assert merged.exceptAll(whole).count() == 0
 
 
-def test_join_probe_matches_broadcast_probe(spark, corpus):
-    """The giant-m join probe and the broadcast-map probe are the same
-    operator: identical maybe_seen for every row, including the false
-    positives."""
-    build = corpus.where("rid % 2 = 0")
-    bloom = bloom_build(build, "text", M, K).persist()
-    a = bloom_maybe_seen(corpus, bloom, "text", M, K).select("rid", "maybe_seen")
-    b = bloom_maybe_seen_join(
-        corpus, bloom, "text", M, K, id_col="rid"
-    ).select("rid", "maybe_seen")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def test_null_input_is_null_in_both_probes(spark, corpus):
-    """NULL text => maybe_seen NULL (membership of NULL is unknown) in
-    BOTH probe variants — the pinned equivalence must cover NULL rows,
-    where the join probe would otherwise report a confident false."""
+def test_null_input_is_null(spark, corpus):
+    """NULL text => maybe_seen NULL (membership of NULL is unknown), not
+    a confident false."""
     build = corpus.where("rid % 2 = 0")
     bloom = bloom_build(build, "text", M, K).persist()
     with_null = corpus.limit(5).withColumn(
         "text", F.when(F.col("rid") >= 0, F.lit(None).cast("string"))
     )
     a = bloom_maybe_seen(with_null, bloom, "text", M, K)
-    b = bloom_maybe_seen_join(with_null, bloom, "text", M, K, id_col="rid")
     assert [r.maybe_seen for r in a.collect()] == [None] * 5
-    assert [r.maybe_seen for r in b.collect()] == [None] * 5
 
 
 def test_probe_plan_is_shuffle_free(spark, corpus):

@@ -122,24 +122,6 @@ def test_pipeline_deterministic_across_partitioning(spark):
     assert ra == rb
 
 
-def test_masked_scrub_udf_api(spark):
-    """The standalone masked scrub UDF (exported API surface): masked
-    rows pass through as nulls, others match the oracle."""
-    from deidentify_spark.functions.scrub import scrub_udf
-
-    df = spark.createDataFrame(
-        [(1, "Mail me at a@b.com today", True), (2, "SSN 123-45-6789", False)],
-        "id long, text string, m boolean",
-    )
-    rows = {r.id: r for r in df.select(
-        "id", scrub_udf(KEY)(F.col("text"), F.col("m")).alias("s")
-    ).collect()}
-    d = Deidentifier(KEY)
-    assert rows[1].s.scrubbed_text == d.text("Mail me at a@b.com today")
-    assert rows[1].s.pii_hits.get("email") == 1
-    assert rows[2].s.scrubbed_text is None and rows[2].s.pii_hits is None
-
-
 def test_mapping_audit_table_matches_scalar_oracle(spark):
     """The materialized mapping table (functions/scrub.py
     mapping_audit_table) must contain exactly the (type, original,
@@ -214,43 +196,3 @@ def test_toxicity_stage_opt_in(spark):
     base = run_pipeline(generate_pages(spark, 50, seed=11, partitions=2),
                         PipelineConfig(secret_key=KEY))
     assert "toxic_hits" not in base.columns and "toxic_frac" not in base.columns
-
-
-def test_line_dedup_stage_opt_in(spark):
-    """The opt-in page-local line dedup stage: repeated in-page lines
-    are cut to their first occurrence BEFORE the model stage (the
-    output ``text`` column is the cleaned text, like extract_from_html
-    redefines it), untouched docs keep their original bytes, and the
-    default config leaves the pass off."""
-    from pyspark.sql import functions as F
-
-    pages = generate_pages(spark, 60, seed=13, partitions=2)
-    chrome = "subscribe to our newsletter"
-    pages = pages.withColumn(
-        "text",
-        F.when(
-            F.col("url").endswith("/000000000000"),
-            F.concat(
-                F.lit(chrome + "\n"), F.col("text"), F.lit("\n" + chrome)
-            ),
-        ).otherwise(F.col("text")),
-    )
-    cfg = PipelineConfig(secret_key=KEY, dedup_lines_within_doc=True)
-    out = {r.url: r for r in run_pipeline(pages, cfg).collect()}
-    hit = next(r for u, r in out.items() if u.endswith("/000000000000"))
-    assert hit.text.count(chrome) == 1  # second occurrence removed
-    assert hit.text.startswith(chrome + "\n")
-    # every doc's text is exactly the keep-first-occurrence rewrite of
-    # the off-config text (byte-identical when nothing repeats — the
-    # generator's pages DO carry some naturally repeated lines)
-    base = {
-        r.url: r.text
-        for r in run_pipeline(pages, PipelineConfig(secret_key=KEY)).collect()
-    }
-    for u, r in out.items():
-        seen, kept = set(), []
-        for line in base[u].split("\n"):
-            if line not in seen:
-                seen.add(line)
-                kept.append(line)
-        assert r.text == "\n".join(kept)

@@ -14,7 +14,7 @@ def _plan(df) -> str:
 
 
 def test_q1_filter_pushdown_and_pruning(spark):
-    plan = _plan(entry_mod.q1_pricing_summary(spark, SF))
+    plan = _plan(entry_mod.queries()["q1_pricing_summary"](spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # projection pruning: the scan must not read join keys it doesn't need
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
@@ -22,7 +22,7 @@ def test_q1_filter_pushdown_and_pruning(spark):
 
 
 def test_q5_broadcasts_all_dimensions(spark):
-    plan = _plan(entry_mod.q5_supplier_volume_by_nation(spark, SF))
+    plan = _plan(entry_mod.queries()["q5_supplier_volume_by_nation"](spark, SF))
     assert plan.count("BroadcastHashJoin") == 3
     assert "SortMergeJoin" not in plan
 
@@ -218,7 +218,7 @@ def test_embedding_near_dups_plan_no_cartesian(spark):
     grid: NO CartesianProduct / BroadcastNestedLoopJoin — in fact no
     join operator at all (explode -> one grid-key exchange -> one
     FlatMapGroupsInPandas)."""
-    df = entry_mod.embedding_near_dups(spark, SF)
+    df = entry_mod.queries()["embedding_near_dups"](spark, SF)
     df.count()
     plan = _plan(df)
     for join in ("CartesianProduct", "BroadcastNestedLoopJoin",
@@ -260,7 +260,7 @@ def test_dup_span_plan_shape(spark):
     shape), never a count-over-window or collect_list aggregate (both
     degrade to a full sort of the gram table and OOM at page scale —
     operators/curation.py documents the measurements)."""
-    df = entry_mod.dup_span_stats_documents(spark, SF)
+    df = entry_mod.queries()["dup_span_stats_documents"](spark, SF)
     plan = _plan(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "ObjectHashAggregate" not in plan, "collect_list crept back in"
@@ -284,7 +284,7 @@ def test_pack_sequences_plan_no_per_stratum_global_sort(spark):
     Visible in the plan: every window/sort spec over the token counts
     carries the _psum_bkt bucket key next to the stratum, and the
     bucket-offset fold joins back (never cartesian)."""
-    plan = _plan(entry_mod.pack_sequences_documents(spark, SF))
+    plan = _plan(entry_mod.queries()["pack_sequences_documents"](spark, SF))
     assert "_psum_bkt" in plan, "bucketed scan gone — plain window is back"
     # no window/sort partitioned by the stratum ALONE: each occurrence
     # of the source column in a windowspecdefinition must be the
@@ -305,7 +305,7 @@ def test_line_dedup_plan_no_hot_key_window(spark):
     operator targets, and the window shape buffers every occurrence of
     a banner line in one task (the round-5 verdict's #1 scale
     finding)."""
-    plan = _plan(entry_mod.line_dedup_documents(spark, SF))
+    plan = _plan(entry_mod.queries()["line_dedup_documents"](spark, SF))
     assert "windowspecdefinition(lh" not in plan, "hot-key window is back"
     assert "HashAggregate" in plan and "count(1)" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
@@ -315,7 +315,7 @@ def test_assign_shards_plan_not_serialized_per_shard(spark):
     """shard_pos must be the bucketed scan, not row_number over
     Window.partitionBy(shard) — the window caps parallelism at
     n_shards (8 here), serializing each shard's sort into one task."""
-    plan = _plan(entry_mod.shard_assignment_documents(spark, SF))
+    plan = _plan(entry_mod.queries()["shard_assignment_documents"](spark, SF))
     assert "_psum_bkt" in plan, "bucketed scan gone — per-shard sort is back"
     assert "row_number" not in plan
     assert "CartesianProduct" not in plan
@@ -325,7 +325,7 @@ def test_decontaminate_plan_broadcasts_eval_grams(spark):
     """The eval-set gram table must broadcast (benchmarks are tiny next
     to the corpus); a SortMergeJoin here would shuffle every corpus gram
     — the exact cost the operator's design avoids."""
-    plan = _plan(entry_mod.decontaminate_documents(spark, SF))
+    plan = _plan(entry_mod.queries()["decontaminate_documents"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
 
@@ -337,7 +337,7 @@ def test_semantic_dedup_cap_filters_before_pandas(spark):
     plan therefore shows the in-cap cluster set broadcast-joined
     against the assignments upstream of the single
     FlatMapGroupsInPandas, never a sort-merge join."""
-    plan = _plan(entry_mod.semantic_dedup_documents(spark, SF))
+    plan = _plan(entry_mod.queries()["semantic_dedup_documents"](spark, SF))
     assert "FlatMapGroupsInPandas" in plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
@@ -355,7 +355,7 @@ def test_dsir_output_reads_cached_slim_not_a_rescore(spark):
     (Catalyst prunes the branches differently, ReusedExchange never
     matches; 50k-page rehearsal measured exactly 2x score-only wall).
     A Generate node in the output plan means the explode is back."""
-    df = entry_mod.dsir_selection_documents(spark, SF)
+    df = entry_mod.queries()["dsir_selection_documents"](spark, SF)
     plan = _plan(df)
     assert "InMemoryTableScan" in plan, "slim projection not persisted"
     # Generate (the shingle explode) may appear only NESTED inside the
@@ -372,7 +372,7 @@ def test_bm25_plan_shape(spark):
     the (doc, term, tf) aggregate over tokens already filtered to the
     query terms, and the top-k is a TakeOrderedAndProject (distributed
     heap), never a global Sort."""
-    plan = _plan(entry_mod.bm25_search_documents(spark, SF))
+    plan = _plan(entry_mod.queries()["bm25_search_documents"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
@@ -388,7 +388,7 @@ def test_bm25_multi_plan_single_tf_and_partial_topk(spark):
     Spark's WindowGroupLimit PARTIAL stage (map-side per-partition
     top-k before the exchange): without it, a query matching most of
     the corpus funnels every matching doc into one window task."""
-    df = entry_mod.bm25_multi_search_documents(spark, SF)
+    df = entry_mod.queries()["bm25_multi_search_documents"](spark, SF)
     plan = _plan(df)
     assert "InMemoryTableScan" in plan, "slim projection not persisted"
     live = plan.split("InMemoryTableScan")[0]

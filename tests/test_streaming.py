@@ -4,7 +4,6 @@ run; watermarked windows drop late data; streaming sessionization."""
 import datetime as dt
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from deidentify_spark.pipeline.stages import PipelineConfig, run_pipeline
@@ -223,48 +222,3 @@ def test_stateful_stream_dedup_across_batches(spark, tmp_path):
     run()
     assert spark.read.parquet(out).count() == 120
 
-
-def test_stateful_stream_dedup_tws_matches_legacy(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4.x) twin: same exactly-once
-    first-sighting semantics as the applyInPandasWithState operator,
-    including across restarts (state in the checkpoint). SKIPPED where
-    the TWS python runner can't start (needs google.protobuf, absent
-    from this sandbox) — the operator is env-gated like Iceberg."""
-    from deidentify_spark.streaming.jobs import (
-        stream_dedup_first_seen_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("transformWithStateInPandas runner needs google.protobuf")
-
-    inp = str(tmp_path / "pages")
-    out = str(tmp_path / "tws_out")
-    ckpt = str(tmp_path / "tws_ckpt")
-
-    p1 = generate_pages(spark, 60, seed=31, partitions=2).select(*PAGE_COLUMNS)
-    p1.write.parquet(inp)
-    time.sleep(1.1)
-    # duplicates of the first 30 urls + (60..90) new
-    dup = generate_pages(spark, 30, seed=31, partitions=1).select(*PAGE_COLUMNS)
-    dup.write.mode("append").parquet(inp)
-
-    def run():
-        q = (
-            stream_dedup_first_seen_tws(spark, inp)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    run()
-    urls = [r.url for r in spark.read.parquet(out).collect()]
-    assert len(urls) == len(set(urls)), "tws stream emitted a url twice"
-    assert len(set(urls)) == 60
-
-    run()  # restart over same input: state persisted, nothing new
-    assert spark.read.parquet(out).count() == 60
