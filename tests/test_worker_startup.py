@@ -1,6 +1,9 @@
 """Python-worker start-up: the zipimport hook skips re-reading an unchanged
-archive, re-reads a changed one, and is installed only inside Spark tasks."""
+archive, re-reads a changed one, the import-time heap is frozen so the
+daemon's post-task ``gc.collect()`` skips it, and both happen only inside
+Spark tasks."""
 
+import gc
 import importlib.util
 import os
 import sys
@@ -96,12 +99,18 @@ def test_install_only_inside_a_task(monkeypatch):
         "invalidate_caches",
         zipimport.zipimporter.invalidate_caches,
     )
+    # record instead of freezing the test runner's own heap
+    calls = []
+    monkeypatch.setattr(gc, "collect", lambda *a: calls.append("collect") or 0)
+    monkeypatch.setattr(gc, "freeze", lambda: calls.append("freeze"))
     _worker.install()
     assert not _installed()
+    assert calls == []
 
     monkeypatch.setattr(TaskContext, "get", classmethod(lambda cls: object()))
     _worker.install()
     assert _installed() == (sys.version_info < (3, 13))
+    assert calls == ["collect", "freeze"]
 
 
 def test_hook_reaches_spark_workers(spark):
@@ -125,3 +134,32 @@ def test_hook_reaches_spark_workers(spark):
     assert len(rows) == 64 and all(r.ok for r in rows)
     assert zipimport.zipimporter.invalidate_caches is _worker._stdlib_invalidate_caches
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+def test_worker_heap_frozen(spark):
+    @F.pandas_udf("frozen long, live long")
+    def heap_counts(ids: pd.Series) -> pd.DataFrame:
+        import gc
+
+        # the import every package UDF's unpickling does first
+        import deidentify_spark  # noqa: F401
+
+        gc.collect()
+        n = len(ids)
+        return pd.DataFrame(
+            {"frozen": [gc.get_freeze_count()] * n, "live": [len(gc.get_objects())] * n}
+        )
+
+    rows = (
+        spark.range(0, 64, numPartitions=8)
+        .select(heap_counts("id").alias("c"))
+        .collect()
+    )
+    assert len(rows) == 64
+    for r in rows:
+        # pyspark, pandas and pyarrow leave ~73 k tracked objects; what a
+        # collect still walks is ~0.2 k after a bare UDF and ~2.6 k after
+        # the fused pipeline ran in the same worker (4-vCPU VM, CPython 3.11)
+        assert r.c.frozen > 30_000
+        assert r.c.live < 8_000
+    assert gc.get_freeze_count() == 0
