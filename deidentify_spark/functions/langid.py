@@ -110,12 +110,14 @@ def _sparse_hist(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(sorted unique bucket ids as int64, float32 counts) — the lean
     inline form of ``np.unique(h, return_counts=True)``. Identical
     values/order (sort -> boundary mask -> run lengths is exactly what
-    _unique1d does) but without its ~35 µs/call of keyword plumbing,
-    and the sort runs on int32 (bucket ids are < 2^15): measured ~2x
-    on the per-doc scoring path, which calls this once per document."""
+    _unique1d does) but without its ~35 µs/call of keyword plumbing.
+    Bucket ids are < 2^15, so the sort runs on uint16, where a stable
+    sort is numpy's radix sort: 96 -> 75 µs/doc over the int32 introsort
+    on 2,000 web_mix docs (~3.4 k hashes each; a minlength-2^15 bincount
+    measured 150)."""
     if h.size == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-    hs = np.sort(h.astype(np.int32))
+    hs = np.sort(h.astype(np.uint16), kind="stable")
     mask = np.empty(hs.size, dtype=bool)
     mask[0] = True
     np.not_equal(hs[1:], hs[:-1], out=mask[1:])

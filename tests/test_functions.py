@@ -2,8 +2,10 @@
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
-from deidentify_spark.functions.langid import predict_batch
+from deidentify_spark.functions.langid import _MASK, _sparse_hist, predict_batch
 from deidentify_spark.functions.perplexity import perplexity
 from deidentify_spark.functions.quality import QualityConfig
 from deidentify_spark.sources.pages import make_doc
@@ -210,6 +212,22 @@ def test_word_flag_cache_pure_and_bounded():
     strict_r = [quality_pre_reason_py(t, strict) for t in docs]
     assert any(r == "few_stopwords" for r in strict_r)
     assert set(_WORD_FLAG_CACHES) == {cfg, strict}
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(st.one_of(st.integers(0, 15), st.integers(0, _MASK)), max_size=500)
+)
+@example([])
+@example([7])
+@example([42] * 64)
+@example([_MASK, 0, _MASK, _MASK])
+def test_sparse_hist_matches_np_unique(ids):
+    h = np.array(ids, dtype=np.uint64)  # _ngram_hashes' dtype
+    idx, cnt = _sparse_hist(h)
+    ref_idx, ref_cnt = np.unique(h, return_counts=True)
+    assert idx.dtype == np.int64 and cnt.dtype == np.float32
+    assert np.array_equal(idx, ref_idx) and np.array_equal(cnt, ref_cnt)
 
 
 def test_langid_batched_softmax_bit_identical():
