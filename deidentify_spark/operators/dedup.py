@@ -123,12 +123,19 @@ def word_shingles(
     sc = df.sparkSession.sparkContext
     width = max(df.rdd.getNumPartitions(), sc.defaultParallelism)
     base = df.select(F.col(id_col), _words(text_col)).repartition(width, id_col)
-    # Round-7: scalar explode of the position range + per-row
-    # concat_ws(slice) instead of exploding a transform(sequence,
-    # lambda) array build — higher-order functions are CodegenFallback,
-    # so the lambda forced the whole gram projection into interpreted
-    # evaluation (same rows in the same order; see classifier._features
-    # for the measured 9x executor-CPU delta of the same rewrite).
+    return _explode_grams(base, n, id_col)
+
+
+def _explode_grams(base: DataFrame, n: int, id_col: str) -> DataFrame:
+    """(id, shingle): one row per n-word gram of ``base``'s ``_words``,
+    the gram joined by single spaces.
+
+    Round-7: scalar explode of the position range + per-row
+    concat_ws(slice) instead of exploding a transform(sequence, lambda)
+    array build — higher-order functions are CodegenFallback, so the
+    lambda forced the whole gram projection into interpreted evaluation
+    (same rows in the same order; see classifier._features for the
+    measured 9x executor-CPU delta of the same rewrite)."""
     idx = F.when(
         F.size("_words") >= n,
         F.sequence(F.lit(0), F.size("_words") - n),
@@ -613,26 +620,20 @@ def _distinct_shingle_hashes(
     """(id, shingle) with shingle = xxhash64 of the n-word gram, one row
     per DISTINCT (doc, gram) — the shared input of the Jaccard family.
 
-    Round-7 shape: (id, shingle) pairs are unique ACROSS docs by
-    construction, so deduping each doc's hash array map-side
-    (array_distinct over the bound _words attribute) yields the
-    identical distinct set without the global (id, shingle)-keyed
-    distinct exchange the exploded ``.distinct()`` form paid — one
-    full shuffle of the shingle stream removed.
+    The grams are the scalar explode of ``_explode_grams``, hashed per
+    row. The distinct needs no exchange of its own: ``(id, shingle)`` is
+    clustered by the ``repartition(id)`` behind ``_materialized_words``.
+    Measured against the map-side ``array_distinct(transform(...))``
+    array build it replaced (sf0.1 documents, 5,000 docs, local[2],
+    process-tree CPU, medians of 3 alternating runs): this stage alone
+    1.76 -> 1.51 s, ``ngram_jaccard_pairs`` 6.90 -> 6.75 s over 6 runs,
+    same rows and the same five exchanges.
     """
     base = _materialized_words(df, text_col, id_col)
-    grams = F.when(
-        F.size("_words") >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size("_words") - n),
-            lambda i: F.xxhash64(
-                F.concat_ws(" ", F.slice("_words", i + 1, n))
-            ),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    return base.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle")
-    )
+    grams = _explode_grams(base, n, id_col)
+    return grams.select(
+        F.col(id_col), F.xxhash64("shingle").alias("shingle")
+    ).distinct()
 
 
 def ngram_jaccard_pairs(
