@@ -15,8 +15,14 @@ worker imports pandas and pyarrow, so ``install`` imports them first
 (frozen: ~38 k objects without that, ~72 k with it; left for each collect
 after a fused-pipeline task: ~37 k and ~2.6 k). The collect just before
 the freeze means only reachable objects are frozen. What can leak is
-whatever of that frozen heap later becomes cyclic garbage: bounded by
-the import-time heap, once per worker process. Applies on every CPython.
+whatever of that frozen heap later becomes cyclic garbage, once per
+worker process. The bound is the heap at the first package import, not
+only the import-time heap: ``install`` runs inside the first task that
+imports the package (while its command is unpickled, or mid-task when
+a UDF imports the package in its body), so that task's command objects
+are frozen too, and in the second case also the batch it holds. Any of
+those left in cycles after the task is never freed in that worker.
+Applies on every CPython.
 
 Before every task PySpark's worker calls ``importlib.invalidate_caches()``
 (``pyspark/worker_util.setup_spark_files``). On CPython < 3.13 that makes

@@ -13,16 +13,15 @@ CPU (the daemon's subtree alone). Legs:
   (``generate_pages`` seed 1, text only, cached) at ``repartition(n)``,
   noop sink.
 
-Each leg is warmed once at 128 tasks, then timed ``--runs`` times per
+Each leg is warmed once at 128 tasks, then timed ``RUNS`` times per
 task count in alternating order; medians are reported. One JSON line per
 leg. Usage, from the repository root:
 
-    python3 scripts/task_cost_probe.py [--runs 5] [--cores 4]
+    python3 scripts/task_cost_probe.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import pathlib
@@ -35,25 +34,28 @@ import pandas as pd
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
+CORES = 4
 TASKS = (32, 128)
+RUNS = 5
 
 
 def _daemon_pids() -> list[int]:
     """The pyspark daemons under this process: its forked workers share
     the daemon's command line, so keep only processes whose parent is
     not a daemon too."""
-    from perfbench.procstat import tree_pids
+    from perfbench.procstat import _stat_fields, tree_pids
 
     ppid, daemons = {}, set()
     for pid in tree_pids():
+        fields = _stat_fields(pid)
+        if fields is None:  # ended since the listing
+            continue
         try:
             with open(f"/proc/{pid}/cmdline", "rb") as f:
                 cmd = f.read()
-            with open(f"/proc/{pid}/stat") as f:
-                stat = f.read()
-        except OSError:  # ended since the listing
+        except OSError:
             continue
-        ppid[pid] = int(stat[stat.rindex(")") + 2 :].split()[1])
+        ppid[pid] = int(fields[1])
         if b"pyspark.daemon" in cmd:
             daemons.add(pid)
     return [pid for pid in daemons if ppid[pid] not in daemons]
@@ -71,17 +73,17 @@ def _measure(run) -> dict[str, float]:
     return {"wall_s": wall, "cpu_s": tree_cpu_s() - cpu0, "python_cpu_s": python_cpu() - py0}
 
 
-def _leg(name: str, make_run, runs: int) -> dict:
+def _leg(name: str, make_run) -> dict:
     make_run(TASKS[-1])()  # starts the workers and compiles the plan
     samples: dict[int, list[dict[str, float]]] = {n: [] for n in TASKS}
-    for r in range(runs):
+    for r in range(RUNS):
         for n in TASKS if r % 2 == 0 else TASKS[::-1]:
             samples[n].append(_measure(make_run(n)))
     med = {n: {k: median(s[k] for s in samples[n]) for k in samples[n][0]} for n in TASKS}
     extra = TASKS[-1] - TASKS[0]
     return {
         "leg": name,
-        "runs": runs,
+        "runs": RUNS,
         **{f"tasks_{n}": {k: round(v, 3) for k, v in med[n].items()} for n in TASKS},
         "per_extra_task_ms": {
             k: round((med[TASKS[-1]][k] - med[TASKS[0]][k]) / extra * 1e3, 2)
@@ -91,11 +93,6 @@ def _leg(name: str, make_run, runs: int) -> dict:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--runs", type=int, default=5)
-    ap.add_argument("--cores", type=int, default=4)
-    args = ap.parse_args()
-
     # what the workers inherit: this checkout on their path, one BLAS thread
     for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ[v] = "1"
@@ -111,7 +108,7 @@ def main() -> None:
     from deidentify_spark.sources.pages import generate_pages
 
     spark = (
-        session_builder(args.cores)
+        session_builder(CORES)
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
@@ -130,7 +127,7 @@ def main() -> None:
             return noop(spark.range(0, 12800, numPartitions=n).select(plus_one("id")))
 
         pages = generate_pages(
-            spark, 8000, seed=1, partitions=args.cores * 2, include_html=False
+            spark, 8000, seed=1, partitions=CORES * 2, include_html=False
         ).select("url", "warc_ts", "text", "lang").cache()
         pages.count()
 
@@ -139,7 +136,7 @@ def main() -> None:
             return noop(run_pipeline(pages, cfg))
 
         for name, make_run in (("trivial", trivial), ("fused", fused)):
-            print(json.dumps(_leg(name, make_run, args.runs)), flush=True)
+            print(json.dumps(_leg(name, make_run)), flush=True)
     finally:
         spark.stop()
 

@@ -159,7 +159,10 @@ def test_worker_heap_frozen(spark):
     for r in rows:
         # pyspark, pandas and pyarrow leave ~73 k tracked objects; what a
         # collect still walks is ~0.2 k after a bare UDF and ~2.6 k after
-        # the fused pipeline ran in the same worker (4-vCPU VM, CPython 3.11)
+        # the fused pipeline ran in the same worker (4-vCPU VM, CPython 3.11).
+        # The session's workers are reused, so the live count includes what
+        # earlier tests left in them: bound it as a ratio to the frozen heap,
+        # not as an absolute count.
         assert r.c.frozen > 30_000
-        assert r.c.live < 8_000
+        assert r.c.live * 4 < r.c.frozen
     assert gc.get_freeze_count() == 0
