@@ -17,15 +17,16 @@ The fused plan is: scan -> Project(bucket) -> ArrowEvalPython(this) ->
 Project. Staging semantics are preserved INSIDE the batch: every stage
 runs only on rows all earlier gates kept, and cheaper stages run first
 (the rules before perplexity, and the scrub last, on kept rows only;
-langid must see every doc because wrong-language is the
-highest-priority drop reason). Per-stage costs are measured, not
+langid must see every doc because, after a null text, wrong-language
+is the highest-priority drop reason). Per-stage costs are measured, not
 quoted here: ``python3 perfbench/run.py --workload web_mix --seed 1
 --seconds 16 --trace 1`` reports ``langid``/``quality_pre``/
 ``top2gram``/``perplexity``/``scrub`` ``.us_per_doc`` for the current
 code.
 
-Reason priority: non_english > quality pre-rules > top_ngram_repetition
-> C4 phrase rules > high_perplexity > low_lang_conf > keep.
+Reason priority: null_text > non_english > quality pre-rules >
+top_ngram_repetition > C4 phrase rules > high_perplexity > low_lang_conf
+> keep.
 """
 
 from __future__ import annotations

@@ -11,10 +11,10 @@ way to make the invariant reproducible everywhere).
 Semantics (the classic lynx/jusText-style reduction):
 
 * content of non-rendered elements (``script``/``style``/``head``/...)
-  is dropped entirely;
-* with ``drop_boilerplate=True`` (default), chrome containers
-  (``nav``/``header``/``footer``/``aside``/``form``) are dropped too —
-  the RefinedWeb/C4 preprocessing posture for web text;
+  is dropped entirely, and so is page chrome
+  (``nav``/``header``/``footer``/``aside``/``form``) — the RefinedWeb/C4
+  preprocessing posture for web text;
+* bytes are decoded as UTF-8 (malformed sequences become U+FFFD);
 * block-level boundaries (``p``/``div``/``li``/``br``/``h1``..) become
   newlines; inline tags (``b``/``a``/``span``..) do not break text;
 * character/entity references are decoded (``&amp;`` -> ``&``);
@@ -36,11 +36,10 @@ parallel and runs fused into the same scan-side stage as langid.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from html.parser import HTMLParser
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -67,6 +66,9 @@ DROP_TAGS = frozenset(
 
 # Page chrome: rendered, but boilerplate for a training-text corpus.
 BOILERPLATE_TAGS = frozenset({"nav", "header", "footer", "aside", "form", "button"})
+
+# Everything whose content the extractor suppresses.
+SUPPRESSED_TAGS = DROP_TAGS | BOILERPLATE_TAGS
 
 # Elements that introduce a line boundary (HTML block-level display set
 # plus explicit breaks).  Inline tags are everything else.
@@ -112,30 +114,17 @@ BLOCK_TAGS = frozenset(
 )
 
 
-@dataclass(frozen=True)
-class HtmlExtractConfig:
-    drop_boilerplate: bool = True
-    encoding: str = "utf-8"
-    extra_drop_tags: tuple[str, ...] = field(default_factory=tuple)
-
-    def effective_drop(self) -> frozenset[str]:
-        drop = DROP_TAGS | frozenset(self.extra_drop_tags)
-        if self.drop_boilerplate:
-            drop = drop | BOILERPLATE_TAGS
-        return drop
-
-
 class _Extractor(HTMLParser):
     """One-pass SAX-style text accumulator.
 
-    Suppression is a depth counter over the drop set (nested/unclosed
-    chrome still suppresses correctly: HTMLParser feeds rawtext elements
-    like ``script`` as a single data event until their end tag).
+    Suppression is a depth counter over ``SUPPRESSED_TAGS``
+    (nested/unclosed chrome still suppresses correctly: HTMLParser feeds
+    rawtext elements like ``script`` as a single data event until their
+    end tag).
     """
 
-    def __init__(self, drop: frozenset[str]) -> None:
+    def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self._drop = drop
         self._suppress = 0
         self._parts: list[str] = []
         self._lines: list[str] = []
@@ -147,17 +136,17 @@ class _Extractor(HTMLParser):
         self._parts.clear()
 
     def handle_starttag(self, tag, attrs):  # noqa: D102
-        if tag in self._drop:
+        if tag in SUPPRESSED_TAGS:
             self._suppress += 1
         elif tag in BLOCK_TAGS:
             self._flush()
 
     def handle_startendtag(self, tag, attrs):  # noqa: D102  (<br/>, <hr/>)
-        if tag not in self._drop and tag in BLOCK_TAGS:
+        if tag not in SUPPRESSED_TAGS and tag in BLOCK_TAGS:
             self._flush()
 
     def handle_endtag(self, tag):  # noqa: D102
-        if tag in self._drop:
+        if tag in SUPPRESSED_TAGS:
             self._suppress = max(0, self._suppress - 1)
         elif tag in BLOCK_TAGS:
             self._flush()
@@ -171,48 +160,25 @@ class _Extractor(HTMLParser):
         return "\n".join(self._lines)
 
 
-def extract_html_text(html: bytes | str | None, cfg: HtmlExtractConfig | None = None) -> str | None:
+def extract_html_text(html: bytes | str | None) -> str | None:
     """Scalar extraction — the single source of truth the UDF wraps."""
     if html is None:
         return None
-    cfg = cfg or HtmlExtractConfig()
     if isinstance(html, (bytes, bytearray, memoryview)):
-        html = bytes(html).decode(cfg.encoding, errors="replace")
-    p = _Extractor(cfg.effective_drop())
+        html = bytes(html).decode("utf-8", errors="replace")
+    p = _Extractor()
     p.feed(html)
     p.close()
     return p.text()
 
 
-def extract_text_column(html_col: str | Column, cfg: HtmlExtractConfig | None = None) -> Column:
+def extract_text_column(html_col: str | Column) -> Column:
     """Arrow-batched extraction column over a binary (or string) html column."""
-    cfg = cfg or HtmlExtractConfig()
-    drop = cfg.effective_drop()
-    encoding = cfg.encoding
 
     @F.pandas_udf(StringType())
     def extract(h: pd.Series) -> pd.Series:
-        out: list[str | None] = []
-        for v in h:
-            if v is None:
-                out.append(None)
-                continue
-            if isinstance(v, (bytes, bytearray, memoryview)):
-                v = bytes(v).decode(encoding, errors="replace")
-            p = _Extractor(drop)
-            p.feed(v)
-            p.close()
-            out.append(p.text())
-        return pd.Series(out, index=h.index, dtype="object")
+        return pd.Series(
+            [extract_html_text(v) for v in h], index=h.index, dtype="object"
+        )
 
     return extract(F.col(html_col) if isinstance(html_col, str) else html_col)
-
-
-def with_extracted_text(
-    df: DataFrame,
-    html_col: str = "html",
-    out_col: str = "text",
-    cfg: HtmlExtractConfig | None = None,
-) -> DataFrame:
-    """Ingestion stage: populate/replace ``out_col`` from raw html."""
-    return df.withColumn(out_col, extract_text_column(html_col, cfg))

@@ -34,7 +34,9 @@ class QualityConfig:
     Defaults mirror Gopher §A1.1 / C4 §2.2 where published, except
     ``max_words`` (Gopher: 100,000) which defaults lower so synthetic
     test fixtures can exercise the rule without generating 100k-word
-    documents; production callers pass the Gopher value.
+    documents. Every caller runs that default of 2,000 (both jobs,
+    ``bench.py``, ``perfbench``), so production runs drop pages over
+    2,000 words too.
     """
 
     min_words: int = 50

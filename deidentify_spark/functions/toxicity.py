@@ -14,6 +14,9 @@ operator has a DuckDB-expressible twin, so the driver value-checks it.
 The list itself is a parameter: production runs supply the full
 LDNOOBW-style list (hundreds of terms per language); the committed
 default is a small demonstrative subset so the repo stays readable.
+To scrub a pipeline run, compose it after ``run_pipeline`` on the kept
+rows: ``toxicity_scrub(out.where("keep"), blocklist,
+text_col="scrubbed_text")`` masks ``scrubbed_text`` in place.
 
 Reference parity note: the reference engine (deidentify.go) scrubs PII
 but has no toxicity surface; this module is part of the

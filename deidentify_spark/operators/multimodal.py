@@ -3,12 +3,11 @@ with typed metadata, processed in Arrow batches via mapInPandas.
 
 The Spark-side contract (schema, partitioning, batch shape, UDF
 signatures) is real and tested; the actual codec work is stubbed because
-no image/audio libraries exist in this container:
+no image/audio/video codec library is a dependency:
 
-* ``decode_*`` raise NotImplementedError unless a decoder lib imports
-  (gated with import-try), OR run in ``deterministic_fake`` mode which
-  derives plausible metadata purely from the bytes (for plumbing tests).
-* ``byte_histogram_features`` is a REAL feature extractor (256-bin byte
+* ``decode_assets`` derives plausible metadata purely from the bytes
+  (``_fake_decode``) — a deterministic stand-in for PIL/ffmpeg.
+* ``byte_histogram_features`` is a REAL feature extractor (64-bin byte
   histogram, L1-normalized) — deterministic, library-free, and the shape
   every learned featurizer would slot into (fixed-size float vector).
 """
@@ -21,7 +20,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -55,15 +53,6 @@ DECODED_SCHEMA = StructType(
         StructField("features", ArrayType(FloatType()), False),
     ]
 )
-
-
-def _pil_available() -> bool:
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def synthesize_assets(
@@ -122,21 +111,9 @@ def _fake_decode(kind: str, payload: bytes) -> dict:
     }
 
 
-def decode_assets(
-    assets: DataFrame, mode: str = "deterministic_fake"
-) -> DataFrame:
-    """Decode + featurize assets in Arrow batches.
-
-    mode='real' requires PIL (and would require av/soundfile for
-    audio/video) — raises NotImplementedError in this container;
-    mode='deterministic_fake' exercises the full Spark plumbing with
-    stub metadata and REAL byte-histogram features.
-    """
-    if mode == "real" and not _pil_available():
-        raise NotImplementedError(
-            "real decoders unavailable in this environment (no PIL/av); "
-            "use mode='deterministic_fake' for plumbing"
-        )
+def decode_assets(assets: DataFrame) -> DataFrame:
+    """Decode + featurize assets in Arrow batches: stub metadata
+    (``_fake_decode``) and REAL byte-histogram features."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -187,13 +164,3 @@ def decode_assets(
     # multi-MB assets, lower maxRecordsPerBatch so batch-bytes stay
     # bounded (records, not bytes, is Spark's unit here).
     return assets.mapInPandas(decode, DECODED_SCHEMA)
-
-
-def frame_sample_udf():
-    """Video frame sampling stub: real implementation needs a codec lib;
-    kept as an explicit NotImplementedError so the API surface exists."""
-    raise NotImplementedError(
-        "frame sampling requires a video codec library not present in "
-        "this container; the decode_assets(mode='deterministic_fake') "
-        "path demonstrates the batch plumbing"
-    )

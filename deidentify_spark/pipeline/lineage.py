@@ -21,8 +21,9 @@ def lineage_metrics(annotated: DataFrame) -> DataFrame:
     """Aggregate the run_pipeline output into the metrics table.
 
     The result references ``annotated`` in three aggregation subtrees;
-    feed it a MATERIALIZED input (the written scrubbed table, as
-    pipeline/checkpoint.py does, or a persisted DataFrame) — handing it
+    feed it a MATERIALIZED input (a persisted DataFrame, as
+    pipeline/checkpoint.py does with each wave, or a written table read
+    back) — handing it
     the raw run_pipeline plan would execute the fused Python stage once
     per subtree."""
     base = annotated.groupBy("bucket").agg(

@@ -53,14 +53,6 @@ class PipelineConfig:
     # enabling this intentionally departs from reference byte-parity —
     # see oracle/extensions.py).
     detect_ips: bool = False
-    # Opt-in toxicity gate + mask (functions/toxicity.py), the
-    # 'toxicity' half of the north-star PII/toxicity scrub. Empty tuple
-    # = stage off (default, preserving reference byte-parity goldens).
-    # Production: the full public LDNOOBW-style list for target_lang.
-    toxicity_blocklist: tuple = ()
-    toxicity_max_frac: float = 0.02
-    toxicity_max_hits: int = 10
-    toxicity_mask: bool = True
     # Opt-in ingestion stage: populate ``text`` by extracting it from the
     # raw ``html`` column (functions/htmlx.py) — the WARC-ingestion
     # posture where no pre-extracted text exists. Default off: the
@@ -106,29 +98,6 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     df = df.withColumn("bucket", bucket_of_url(cfg.n_buckets))
 
-    # Optional toxicity gate FIRST: it is pure JVM column work, so per
-    # the stage-ordering doctrine the cheap gate runs before the
-    # expensive Arrow model stage — gated rows reach the fused UDF as
-    # '' and fall out of its first (cheapest) check, then get their
-    # drop_reason overridden to 'toxic' below.
-    if cfg.toxicity_blocklist:
-        from deidentify_spark.functions.toxicity import (
-            toxicity_filter,
-            toxicity_mask_expr,
-        )
-
-        df = toxicity_filter(
-            df,
-            cfg.toxicity_blocklist,
-            max_frac=cfg.toxicity_max_frac,
-            max_hits=cfg.toxicity_max_hits,
-        )
-        fused_input = F.when(F.col("toxic_keep"), F.col("text")).otherwise(
-            F.lit("")
-        )
-    else:
-        fused_input = F.col("text")
-
     # Single fused Arrow stage: langid -> Gopher/C4 rules -> repetition
     # -> perplexity -> scrub, staged internally (functions/fused.py
     # explains why this beats JVM rule expressions + chained UDFs ~4x).
@@ -140,22 +109,7 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
         quality=cfg.quality,
         detect_ips=cfg.detect_ips,
     )
-    df = df.withColumn("_r", fused(fused_input))
-
-    drop_reason = F.col("_r.drop_reason")
-    keep = F.col("_r.keep")
-    scrubbed = F.col("_r.scrubbed_text")
-    extra_cols: list = []
-    if cfg.toxicity_blocklist:
-        drop_reason = F.when(~F.col("toxic_keep"), F.lit("toxic")).otherwise(
-            drop_reason
-        )
-        keep = F.col("toxic_keep") & keep
-        if cfg.toxicity_mask:
-            scrubbed = F.when(
-                keep, toxicity_mask_expr(scrubbed, cfg.toxicity_blocklist)
-            )
-        extra_cols = ["toxic_hits", "toxic_frac"]
+    df = df.withColumn("_r", fused(F.col("text")))
 
     return df.select(
         "url",
@@ -166,9 +120,8 @@ def run_pipeline(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
         F.col("_r.lang_pred").alias("lang_pred"),
         F.col("_r.lang_conf").alias("lang_conf"),
         F.col("_r.perplexity").alias("perplexity"),
-        drop_reason.alias("drop_reason"),
-        keep.alias("keep"),
-        scrubbed.alias("scrubbed_text"),
+        F.col("_r.drop_reason").alias("drop_reason"),
+        F.col("_r.keep").alias("keep"),
+        F.col("_r.scrubbed_text").alias("scrubbed_text"),
         F.col("_r.pii_hits").alias("pii_hits"),
-        *extra_cols,
     )

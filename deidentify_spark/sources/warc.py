@@ -20,8 +20,8 @@ This module implements both directions with no dependencies:
   file is the split unit — exactly how CC jobs shard) ->
   ``mapInPandas`` opens each file task-locally and parses members ->
   ``(url, warc_ts, html)`` rows matching the BASELINE input schema,
-  ready for ``with_extracted_text`` (functions/htmlx.py) and the
-  pipeline. Only paths cross the Arrow boundary by default (see
+  ready for ``run_pipeline`` with ``extract_from_html=True`` (text from
+  functions/htmlx.py). Only paths cross the Arrow boundary by default (see
   read_warc for the measured why).
 
 Scale notes (100 TB = ~100k CC WARC files at ~1 GB):

@@ -125,8 +125,9 @@ def _maybe_tokenize(spark, args, fp3: str, stages: dict) -> None:
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("--input")
-    p.add_argument("--synthesize", type=int)
+    source = p.add_mutually_exclusive_group(required=True)
+    source.add_argument("--input")
+    source.add_argument("--synthesize", type=int)
     p.add_argument("--output", required=True)
     p.add_argument("--secret-key", default="curation-job-key")
     p.add_argument("--select-frac", type=float, default=0.5)
@@ -160,8 +161,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--mixture", default="")
     p.add_argument("--mixture-budget", type=int, default=0)
     args = p.parse_args(argv)
-    if not args.input and not args.synthesize:
-        p.error("one of --input / --synthesize is required")
     if bool(args.mixture) != bool(args.mixture_budget):
         p.error("--mixture and --mixture-budget go together")
 
@@ -226,7 +225,7 @@ def main(argv: list[str] | None = None) -> int:
         n_in = m1["docs"]
         stages["filter_scrub"] = {"docs": n_in, "resumed": True}
     else:
-        if args.synthesize:
+        if args.synthesize is not None:
             from deidentify_spark.sources.pages import (
                 PAGE_COLUMNS,
                 generate_pages,

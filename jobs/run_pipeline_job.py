@@ -9,12 +9,13 @@ Launch (local or cluster — the job only talks to the SparkSession):
         --input  /path/to/pages_parquet \\
         --output /path/to/run_output \\
         --secret-key "$SECRET_KEY" [--n-waves 8] [--detect-ips] \\
-        [--repartition 4096] [--synthesize N] [--input-warc '/crawl/*.warc.gz']
+        [--repartition 4096]
 
 Writes scrubbed pages (parquet, partitioned by lineage bucket) and the
 per-bucket metrics table under --output, checkpointed wave-by-wave so a
-re-submit resumes where the previous run stopped. --synthesize N skips
---input and generates N deterministic synthetic pages instead (smoke
+re-submit resumes where the previous run stopped. Exactly one source:
+--input (pages parquet), --input-warc '/crawl/*.warc.gz' (text derived
+from html) or --synthesize N (N deterministic synthetic pages, for smoke
 runs / benchmarks). Prints a one-line JSON summary on success.
 """
 
@@ -28,19 +29,20 @@ import time
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("--input", help="input pages parquet/Iceberg path")
-    p.add_argument(
+    source = p.add_mutually_exclusive_group(required=True)
+    source.add_argument("--input", help="input pages parquet/Iceberg path")
+    source.add_argument(
         "--input-warc",
         help="input .warc.gz glob (Common-Crawl layout); text is derived "
         "from html by the extraction stage",
     )
+    source.add_argument("--synthesize", type=int, metavar="N")
     p.add_argument("--output", required=True)
     p.add_argument("--secret-key", required=True)
     p.add_argument("--n-waves", type=int, default=8)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--repartition", type=int, default=None)
     p.add_argument("--detect-ips", action="store_true")
-    p.add_argument("--synthesize", type=int, default=None, metavar="N")
     args = p.parse_args(argv)
 
     from pyspark.sql import functions as F
@@ -66,7 +68,7 @@ def main(argv: list[str] | None = None) -> int:
         extract_from_html=bool(args.input_warc),
     )
 
-    if args.synthesize:
+    if args.synthesize is not None:
         from deidentify_spark.sources.pages import PAGE_COLUMNS, generate_pages
 
         pages = generate_pages(
@@ -82,10 +84,8 @@ def main(argv: list[str] | None = None) -> int:
             F.lit(None).cast("string").alias("text"),
             F.lit("und").alias("lang"),
         )
-    elif args.input:
-        pages = spark.read.parquet(args.input)
     else:
-        p.error("one of --input / --input-warc / --synthesize is required")
+        pages = spark.read.parquet(args.input)
 
     t0 = time.time()
     manifest = run_checkpointed(pages, args.output, cfg, n_waves=args.n_waves)

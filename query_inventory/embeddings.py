@@ -244,7 +244,7 @@ def ann_cosine_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = synthesize_assets(spark, 500, seed=42, partitions=8)
-    return decode_assets(assets, mode="deterministic_fake").select(
+    return decode_assets(assets).select(
         "asset_id", "kind", "n_bytes", "width", "height", "duration_ms"
     ).orderBy("asset_id")
 

@@ -50,8 +50,6 @@ def _changed(value):
         return value + 1
     if isinstance(value, str):
         return value + "x"
-    if isinstance(value, tuple):
-        return value + ("x",)
     if value is None:
         return 8
     first = dataclasses.fields(value)[0].name

@@ -11,9 +11,8 @@ from __future__ import annotations
 import pytest
 
 from deidentify_spark.functions.htmlx import (
-    HtmlExtractConfig,
     extract_html_text,
-    with_extracted_text,
+    extract_text_column,
 )
 from deidentify_spark.functions.quality import QualityConfig
 from deidentify_spark.sources.pages import make_doc
@@ -32,14 +31,12 @@ def test_script_style_head_dropped():
     assert extract_html_text(h) == "real"
 
 
-def test_boilerplate_dropped_by_default_kept_on_request():
+def test_boilerplate_dropped():
     h = (
         "<body><nav><a href='/'>Home</a></nav><p>content</p>"
         "<footer>c 2024</footer></body>"
     )
     assert extract_html_text(h) == "content"
-    kept = extract_html_text(h, HtmlExtractConfig(drop_boilerplate=False))
-    assert kept == "Home\ncontent\nc 2024"
 
 
 def test_block_vs_inline_boundaries():
@@ -84,7 +81,7 @@ def test_spark_extraction_matches_text_column(spark):
     from deidentify_spark.sources.pages import generate_pages
 
     pages = generate_pages(spark, 400, seed=7, partitions=4)
-    out = with_extracted_text(pages, out_col="extracted")
+    out = pages.withColumn("extracted", extract_text_column("html"))
     n_bad = out.where("extracted IS DISTINCT FROM text").count()
     assert n_bad == 0
 

@@ -154,16 +154,13 @@ def test_text_stats_columns(spark):
 
 
 def test_multimodal_plumbing(spark):
-    import pytest as _pytest
-
     from deidentify_spark.operators.multimodal import (
         decode_assets,
-        frame_sample_udf,
         synthesize_assets,
     )
 
     assets = synthesize_assets(spark, 50, seed=42, partitions=4)
-    decoded = decode_assets(assets, mode="deterministic_fake")
+    decoded = decode_assets(assets)
     rows = decoded.collect()
     assert len(rows) == 50
     for r in rows:
@@ -176,15 +173,10 @@ def test_multimodal_plumbing(spark):
             assert r.duration_ms and r.duration_ms > 0
     # determinism across partitioning
     again = {r.asset_id: r.features for r in decode_assets(
-        synthesize_assets(spark, 50, seed=42, partitions=7), mode="deterministic_fake"
+        synthesize_assets(spark, 50, seed=42, partitions=7)
     ).collect()}
     for r in rows:
         assert again[r.asset_id] == r.features
-    # real mode + frame sampling are explicit stubs here
-    with _pytest.raises(NotImplementedError):
-        decode_assets(assets, mode="real")
-    with _pytest.raises(NotImplementedError):
-        frame_sample_udf()
 
 
 def test_simhash_near_dups_verified(spark, corpus):
@@ -350,7 +342,7 @@ def test_multimodal_features_scalar_parity(spark):
 
     assets = synthesize_assets(spark, 40, seed=3, partitions=4)
     payloads = {r.asset_id: bytes(r.payload) for r in assets.collect()}
-    decoded = decode_assets(assets, mode="deterministic_fake").collect()
+    decoded = decode_assets(assets).collect()
     assert len(decoded) == 40
     for r in decoded:
         assert r.features == byte_histogram_features(payloads[r.asset_id])

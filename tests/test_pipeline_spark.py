@@ -117,6 +117,11 @@ def test_pipeline_deterministic_across_partitioning(spark):
     cfg = PipelineConfig(secret_key=KEY)
     a = run_pipeline(generate_pages(spark, 300, seed=7, partitions=2), cfg)
     b = run_pipeline(generate_pages(spark, 300, seed=7, partitions=13), cfg)
+    # one output schema for every config
+    assert a.columns == [
+        "url", "warc_ts", "text", "lang", "bucket", "lang_pred", "lang_conf",
+        "perplexity", "drop_reason", "keep", "scrubbed_text", "pii_hits",
+    ]
     ra = {r.url: (r.keep, r.drop_reason, r.scrubbed_text) for r in a.collect()}
     rb = {r.url: (r.keep, r.drop_reason, r.scrubbed_text) for r in b.collect()}
     assert ra == rb
@@ -158,41 +163,3 @@ def test_mapping_audit_table_matches_scalar_oracle(spark):
         ),
     }
     assert got == expected
-
-
-def test_toxicity_stage_opt_in(spark):
-    """The opt-in toxicity gate: blocked docs get drop_reason='toxic'
-    (overriding the fused stage, which never saw their text), kept docs
-    get flagged terms masked in scrubbed_text, and the default config
-    (stage off) keeps the output schema and values untouched."""
-    pages = generate_pages(spark, 200, seed=11, partitions=4)
-    # plant one clearly toxic doc and one mildly toxic kept doc
-    from pyspark.sql import functions as F
-
-    pages = pages.withColumn(
-        "text",
-        F.when(F.col("url").endswith("/000000000000"),
-               F.lit("damn " * 40))
-        .when(F.col("url").endswith("/000000000001"),
-              F.concat(F.lit("One damn word inside. "), F.col("text")))
-        .otherwise(F.col("text")),
-    )
-    cfg = PipelineConfig(
-        secret_key=KEY,
-        toxicity_blocklist=("damn",),
-        toxicity_max_frac=0.02,
-        toxicity_max_hits=2,
-    )
-    out = {r.url: r for r in run_pipeline(pages, cfg).collect()}
-    bad = next(r for u, r in out.items() if u.endswith("/000000000000"))
-    assert bad.drop_reason == "toxic" and not bad.keep
-    assert bad.scrubbed_text is None
-    assert bad.toxic_hits == 40
-    mild = next(r for u, r in out.items() if u.endswith("/000000000001"))
-    assert mild.drop_reason != "toxic" and mild.toxic_hits == 1
-    if mild.keep:
-        assert "damn" not in mild.scrubbed_text and "***" in mild.scrubbed_text
-    # off by default: schema identical to before (no toxic_* columns)
-    base = run_pipeline(generate_pages(spark, 50, seed=11, partitions=2),
-                        PipelineConfig(secret_key=KEY))
-    assert "toxic_hits" not in base.columns and "toxic_frac" not in base.columns

@@ -1,6 +1,8 @@
 """Session ownership: one builder for every entry point, and library code
-that leaves a caller's session confs exactly as it found them."""
+that leaves a caller's session confs exactly as it found them. Plus a
+reference scan: no library surface that only tests reach."""
 
+import ast
 import pathlib
 import subprocess
 
@@ -37,6 +39,78 @@ def test_session_builder_is_the_only_builder():
     ]
     assert offenders == [], (
         f"build sessions with deidentify_spark.runtime.session_builder: {offenders}"
+    )
+
+
+# Top-level definitions in deidentify_spark/ that only tests reach, each
+# kept on purpose. Anything else that no code outside tests/ names is
+# surface nothing runs: delete it, or give it a reason here.
+TEST_ONLY_ALLOWED = {
+    "_ngram_jaccard_pairs_textbook": "textbook twin of ngram_jaccard_pairs",
+    "embedding_near_dup_pairs": "exact (cartesian) twin of embedding_near_dup_pairs_lsh",
+    "simhash_py": "scalar twin of simhash_batch",
+    "simhash_candidates": "SimHash quadrant banding, checked for pigeonhole recall",
+    "quality_drop_reason": "scalar twin of the fused quality rules (ROADMAP direction 5)",
+    "_sparse_counts": "hashed n-gram counts a langid test rebuilds scores from",
+    "byte_histogram_features": "scalar twin of decode_assets' batched histogram",
+    "bloom_fp_estimate": "analytic bound the Bloom filter's measured FP rate is held to",
+    "nfc_py": "scalar twin of the NFC normalization column",
+    "is_valid_ipv4": "checks that the IP extension's fakes are valid IPv4",
+    "deidentify_csv": "the reference's Slices workflow (SURVEY 1.1)",
+    "zorder_repartition": "the layout operator its data-skipping test exercises",
+}
+
+
+def _names_used(tree) -> set[str]:
+    """Every name a module uses: Name ids, attribute names, imported
+    names and ``__all__`` entries. A top-level definition's use of its
+    own name (recursion) does not count."""
+    used = set()
+    for stmt in tree.body:
+        own = getattr(stmt, "name", None)
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            if name != own:
+                used.add(name)
+        if (
+            isinstance(stmt, ast.Assign)
+            and any(getattr(t, "id", None) == "__all__" for t in stmt.targets)
+        ):
+            used.update(ast.literal_eval(stmt.value))
+    return used
+
+
+def test_no_test_only_surface():
+    """Every top-level function and class in deidentify_spark/ is named
+    by some code outside tests/ (jobs, queries, benchmarks, scripts, or
+    the package itself), or is allowlisted above with its reason."""
+    defined, used = set(), set()
+    for path in _python_sources():
+        if path.startswith("tests/"):
+            continue
+        tree = ast.parse((ROOT / path).read_text(encoding="utf-8"))
+        if path.startswith("deidentify_spark/"):
+            defined.update(
+                stmt.name
+                for stmt in tree.body
+                if isinstance(
+                    stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+            )
+        used |= _names_used(tree)
+    test_only = defined - used
+    assert test_only - TEST_ONLY_ALLOWED.keys() == set(), (
+        "only tests reach these: delete them or allowlist them with a reason"
+    )
+    assert TEST_ONLY_ALLOWED.keys() - test_only == set(), (
+        "allowlisted but no longer test-only (or gone): drop from the allowlist"
     )
 
 

@@ -1,12 +1,41 @@
 """The north_star launch path: spark-submit --py-files with the packaged
 library, checkpointed, resumable via plain re-submit."""
 
+import importlib.util
 import json
 import pathlib
 import subprocess
 import zipfile
 
+import pytest
+
 ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+
+@pytest.mark.parametrize(
+    "job, sources",
+    [
+        ("run_pipeline_job", ["--input", "p", "--input-warc", "g"]),
+        ("run_pipeline_job", ["--synthesize", "3", "--input-warc", "g"]),
+        ("run_pipeline_job", ["--input", "p", "--synthesize", "3"]),
+        ("run_curation_job", ["--input", "p", "--synthesize", "3"]),
+    ],
+)
+def test_job_rejects_two_input_sources(job, sources, monkeypatch):
+    """Each job takes exactly one input source: two are a usage error
+    raised by argparse before any session starts, never one source
+    silently overriding the other."""
+    from deidentify_spark import runtime
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session started")
+
+    monkeypatch.setattr(runtime, "session_builder", no_session)
+    spec = importlib.util.spec_from_file_location(job, ROOT / "jobs" / f"{job}.py")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    with pytest.raises(SystemExit):
+        module.main([*sources, "--output", "o", "--secret-key", "k"])
 
 
 def test_spark_submit_pipeline_and_resume(tmp_path):
