@@ -7,6 +7,11 @@ SURVEY.md §0 / deidentify.go:291-335 — so the UDF is stateless across
 batches and tasks; the per-batch ``Deidentifier`` instance only carries
 the memoization cache, which (like the reference's mapping table) never
 changes output, only skips repeated HMAC work within a batch.
+
+A doc's scrub cost follows its candidate positions (digit runs, "@"),
+not its length: the oracle's email, phone and address passes try an
+anchored match only where one can start (the anchored-scan notes in
+``oracle/core.py``).
 """
 
 from __future__ import annotations

@@ -15,8 +15,7 @@ Scale shape: content columns are digested MAP-SIDE to one md5 per row
 outer join moves only (id, digest) pairs, hash-partitioned on the id
 key (uniform by construction for synthetic/uuid ids; url-hash ids in
 the pipeline are salted upstream). One shuffle per side, no window, no
-driver collect. The companion summary is a map-side-combined groupBy
-over the four statuses.
+driver collect.
 """
 
 from __future__ import annotations
@@ -24,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["snapshot_diff", "snapshot_diff_summary", "diff_oracle_sql"]
+__all__ = ["snapshot_diff", "diff_oracle_sql"]
 
 
 def _digest(df: DataFrame, id_col: str, content_cols: list[str]) -> DataFrame:
@@ -58,20 +57,6 @@ def snapshot_diff(
     if not include_unchanged:
         out = out.where(F.col("status") != "unchanged")
     return out
-
-
-def snapshot_diff_summary(
-    old_df: DataFrame,
-    new_df: DataFrame,
-    id_col: str = "doc_id",
-    content_cols: list[str] = ("text",),
-) -> DataFrame:
-    """(status, n_docs) over all four statuses present."""
-    return (
-        snapshot_diff(old_df, new_df, id_col, content_cols, include_unchanged=True)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
 
 
 def diff_oracle_sql(

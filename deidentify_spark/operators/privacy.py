@@ -1,11 +1,11 @@
-"""Re-identification-risk audits: k-anonymity and l-diversity.
+"""Re-identification-risk audit: k-anonymity and l-diversity.
 
 The reference library (deidentify.go) REPLACES direct identifiers; the
 complementary risk on tabular releases is quasi-identifier linkage — a
 combination of innocuous columns (nation, segment, zip...) unique
 enough to re-identify a row (Sweeney 2002, k-anonymity; Machanavajjhala
-2007, l-diversity). These operators measure and enforce that property
-so a scrubbed table can be released with a stated k.
+2007, l-diversity). This operator measures that property per class, so
+a scrubbed table can be released with a stated k.
 
 Definitions over the equivalence classes induced by ``quasi_cols``:
 - a table is k-anonymous iff every class has >= k rows;
@@ -14,12 +14,10 @@ Definitions over the equivalence classes induced by ``quasi_cols``:
   every member shares one diagnosis re-identifies the attribute even
   when k holds).
 
-Scale shape: everything is ONE map-side-combined groupBy on the quasi
-columns (count + count_distinct) — no window, no join, no driver
-collect; a hot equivalence class (the normal case: quasi combos are
-Zipfian) collapses in the combiner. Enforcement (suppression) joins the
-violating-class KEY SET back — aggregate-then-join, the repo's standard
-skew posture — so row data never rides a per-key window.
+Scale shape: ONE map-side-combined groupBy on the quasi columns
+(count + count_distinct) — no window, no join, no driver collect; a hot
+equivalence class (the normal case: quasi combos are Zipfian) collapses
+in the combiner.
 """
 
 from __future__ import annotations
@@ -27,12 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "k_anonymity_classes",
-    "k_anonymity_summary",
-    "suppress_to_k",
-    "k_anonymity_oracle_sql",
-]
+__all__ = ["k_anonymity_classes", "k_anonymity_oracle_sql"]
 
 
 def k_anonymity_classes(
@@ -53,53 +46,6 @@ def k_anonymity_classes(
     if sensitive_col is not None:
         out = out.withColumn("violates_l", F.col("l_div") < l)
     return out
-
-
-def k_anonymity_summary(
-    df: DataFrame,
-    quasi_cols: list[str],
-    k: int = 5,
-    sensitive_col: str | None = None,
-    l: int = 2,
-) -> DataFrame:
-    """One-row release-gate verdict: n_classes, min_class_size (= the
-    achieved k of the table), n_classes_below_k, n_rows_at_risk (rows
-    in sub-k classes — each is linkable to < k candidates), and the
-    l-diversity tallies when a sensitive column is named."""
-    cls = k_anonymity_classes(df, quasi_cols, k, sensitive_col, l)
-    aggs = [
-        F.count(F.lit(1)).alias("n_classes"),
-        F.min("class_size").alias("min_class_size"),
-        F.sum(F.col("violates_k").cast("long")).alias("n_classes_below_k"),
-        F.sum(
-            F.when(F.col("violates_k"), F.col("class_size")).otherwise(0)
-        ).alias("n_rows_at_risk"),
-    ]
-    if sensitive_col is not None:
-        aggs += [
-            F.min("l_div").alias("min_l_div"),
-            F.sum(F.col("violates_l").cast("long")).alias("n_classes_below_l"),
-        ]
-    return cls.agg(*aggs)
-
-
-def suppress_to_k(
-    df: DataFrame, quasi_cols: list[str], k: int = 5
-) -> DataFrame:
-    """ENFORCE k-anonymity by suppression: drop every row whose
-    equivalence class has < k rows (the release then IS k-anonymous on
-    ``quasi_cols`` by construction). Aggregate-then-join shape: the
-    violating KEY SET (small by definition — classes under k rows) is
-    computed by the combiner-friendly groupBy and removed with a
-    left_anti equi-join; AQE broadcasts the key set. Row data never
-    crosses a per-key window."""
-    bad = (
-        df.groupBy(*quasi_cols)
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .where(F.col("_c") < k)
-        .select(*quasi_cols)
-    )
-    return df.join(bad, quasi_cols, "left_anti")
 
 
 def k_anonymity_oracle_sql(

@@ -18,6 +18,7 @@ from __future__ import annotations
 import hashlib
 import hmac as _hmac
 import secrets
+import string
 
 import regex as _regex
 
@@ -41,37 +42,64 @@ TYPE_GENERIC = "generic"
 
 _DIGIT_RE = _regex.compile(r"[0-9]")
 
-# Anchored-scan plumbing (perf-only, behavior-identical): the address and
-# phone patterns can only START at a small first-character set, but their
-# leading lookbehind/optional groups defeat the regex module's literal
-# prefix scanner, so `.sub()` pays a full per-position scan (~0.3-0.5 ms
-# per KB of text). Enumerating candidate start positions with a stdlib-re
-# C scan and attempting an anchored `.match()` at each is equivalent:
-#   * digit-anchored patterns (SPECIAL_ADDRESS_1/2, ADDRESS): every match
-#     starts with `(?<![0-9])[0-9]`, i.e. at the first digit of a digit
-#     run, and no match ends inside a digit run (every digit-consuming
-#     token is followed by a mandatory non-digit) — so digit-run starts
-#     are a complete candidate set;
-#   * PHONE: the first consumed character is one of [+(0-9] (the optional
-#     `\+[0-9]{1,2}` prefix, the optional `\(`, or the first area digit).
-# Leftmost/non-overlapping `.sub()` semantics are preserved by visiting
-# candidates in order and skipping those inside the previous match.
-# Equivalence is pinned by tests/test_oracle.py::test_anchored_sub_parity.
+# Anchored-scan plumbing (perf-only, behavior-identical). Most scrub
+# patterns can only START at a few known positions, but their leading
+# lookbehinds, optional groups and case-folded alternations defeat the
+# regex module's literal prefix scanner, so `.sub()` pays a full
+# per-position scan. Instead each pass below lists candidate starts with
+# a cheap scan and tries an anchored `pat.match(text, i)` at each. That
+# equals `pat.sub` when the candidates include every position where a
+# match can start, are visited in ascending order, and those inside the
+# previous match are skipped (leftmost, non-overlapping `.sub` order).
+# Candidate sets, and why each is complete:
+#   * SPECIAL_ADDRESS_1/2, ADDRESS: every match starts with
+#     `(?<![0-9])[0-9]`, i.e. at a digit-run start (`_DIGIT_RUN_RE`).
+#   * PHONE: the first consumed character is one of [+(0-9] (the
+#     optional `\+[0-9]{1,2}` prefix, the optional `\(`, or the first
+#     area digit).
+#   * CONTEXT_ADDRESS: a cue phrase, a literal " ", then `[0-9]+`; the
+#     digit follows a space, so it starts a digit run d, and the match
+#     starts at d - 1 - len(cue). That holds because `(?i)` here is the
+#     regex module's default SIMPLE case folding, which matches one text
+#     character per pattern character ("baſed at", "lİves at" are still
+#     8 characters). Full folding (the FULLCASE flag, or VERSION1) would
+#     let "ss" match one "ß" and break the offsets.
+#   * SPECIAL_ADDRESS_3: ":", "@" or "at", then `[\t\n\f\r ]+`, then
+#     a digit-run start d. The cue is not whitespace, so the whitespace is
+#     the whole maximal run w..d, and the match starts at w - 1 or w - 2.
+#   * EMAIL: the local part `[a-zA-Z0-9._%+-]+` excludes "@", so a match
+#     runs from the start of the local-part run up to an "@". `.sub`
+#     resumes at the previous match's END, which can lie inside that run
+#     ("a@ex.orgfoo_x@y.org": the first match ends before "_", which
+#     starts the next local part), so the walk back from each "@" stops
+#     there, not at the previous "@". Every start in the run reaches the
+#     same "@" and domain, so its first position decides for all of them.
+# Pass order is the reference's; each pass lists candidates on the text
+# it receives, so it sees every earlier replacement. The digit-run list
+# is shared by consecutive passes that leave the text unchanged
+# (`Deidentifier._digit_runs`). Equivalence is pinned by
+# tests/test_oracle.py::test_anchored_sub_parity (each enumerator against
+# its pattern's `.sub`) and by the unanchored 8-pass reference twin in
+# tests/conftest.py, which text() must equal byte for byte.
 import re as _stdre
 
-_DIGIT_RUN_RE = _stdre.compile(r"[0-9]+")
+# The regex module scans [0-9]+ about 5x faster than stdlib re (17 vs 95
+# us on a 5 kchar doc); for [+(0-9] stdlib re is the faster one.
+_DIGIT_RUN_RE = _regex.compile(r"[0-9]+")
 _PHONE_START_RE = _stdre.compile(r"[+(0-9]")
+_EMAIL_LOCAL_CHARS = frozenset(string.ascii_letters + string.digits + "._%+-")
+_RE2_WS_CHARS = frozenset("\t\n\f\r ")
+# Longest first, so the starts d - 1 - len ascend for each digit run.
+_CONTEXT_CUE_LENGTHS = sorted({len(c) for c in P.CONTEXT_CUES}, reverse=True)
 
 
-def _sub_anchored(candidates_re, pat, repl, text: str) -> str:
+def _sub_anchored(starts, pat, repl, text: str) -> str:
     """Equivalent of ``pat.sub(repl, text)`` for patterns whose every
-    match starts at a position yielded by ``candidates_re.finditer``."""
+    match starts at one of ``starts`` (ascending positions)."""
     out = None
     last = 0
-    end = 0
-    for cand in candidates_re.finditer(text):
-        i = cand.start()
-        if i < end:
+    for i in starts:
+        if i < last:
             continue
         m = pat.match(text, i)
         if m is None:
@@ -80,11 +108,71 @@ def _sub_anchored(candidates_re, pat, repl, text: str) -> str:
             out = []
         out.append(text[last:i])
         out.append(repl(m))
-        last = end = m.end()
+        last = m.end()
     if out is None:
         return text
     out.append(text[last:])
     return "".join(out)
+
+
+def _sub_emails(repl, text: str) -> str:
+    """Equivalent of ``P.EMAIL_RE.sub(repl, text)``: one anchored match
+    per "@", from the start of its local-part run, never before the
+    previous match's end."""
+    out = None
+    last = 0
+    at = text.find("@")
+    while at >= 0:
+        i = at
+        while i > last and text[i - 1] in _EMAIL_LOCAL_CHARS:
+            i -= 1
+        m = P.EMAIL_RE.match(text, i) if i < at else None
+        if m is None:
+            at = text.find("@", at + 1)
+            continue
+        if out is None:
+            out = []
+        out.append(text[last:i])
+        out.append(repl(m))
+        last = m.end()
+        at = text.find("@", last)
+    if out is None:
+        return text
+    out.append(text[last:])
+    return "".join(out)
+
+
+def _phone_starts(text: str):
+    return (m.start() for m in _PHONE_START_RE.finditer(text))
+
+
+def _context_address_starts(text: str, runs: list[int]) -> list[int]:
+    """d - 1 - len(cue) for every digit-run start d after a space."""
+    starts = [
+        d - 1 - n
+        for d in runs
+        if text[d - 1 : d] == " "
+        for n in _CONTEXT_CUE_LENGTHS
+        if d - 1 - n >= 0
+    ]
+    # runs a few characters apart interleave their starts
+    return sorted(set(starts))
+
+
+def _special_address_3_starts(text: str, runs: list[int]) -> list[int]:
+    """w - 2 and w - 1 for every whitespace run w..d that ends at a
+    digit-run start d. Ascending: the digit run before d ends before w."""
+    starts = []
+    for d in runs:
+        w = d
+        while w > 0 and text[w - 1] in _RE2_WS_CHARS:
+            w -= 1
+        if w < d:
+            if w >= 2:
+                starts.append(w - 2)
+            if w >= 1:
+                starts.append(w - 1)
+    return starts
 
 ALL_TYPES = (
     TYPE_NAME,
@@ -138,6 +226,8 @@ class Deidentifier:
     def __init__(self, secret_key: str) -> None:
         self._key = secret_key.encode("utf-8")
         self._memo: dict[str, dict[str, str]] = {}
+        self._runs_text: str | None = None
+        self._runs: list[int] = []
 
     def clear_mappings(self) -> None:
         """Reset the memo cache (deidentify.go:133-137)."""
@@ -307,14 +397,22 @@ class Deidentifier:
             result = self._process_standard_addresses(result)
         return result
 
+    def _digit_runs(self, text: str) -> list[int]:
+        """Start of every digit run in ``text``. One slot remembers the
+        last text, so passes that leave the text unchanged share a scan."""
+        if self._runs_text is not text:
+            self._runs = [m.start() for m in _DIGIT_RUN_RE.finditer(text)]
+            self._runs_text = text
+        return self._runs
+
     def _process_emails(self, text: str) -> str:
-        return P.EMAIL_RE.sub(
+        return _sub_emails(
             lambda m: self.deidentify_value(m.group(0), TYPE_EMAIL, "email"), text
         )
 
     def _process_phones(self, text: str) -> str:
         return _sub_anchored(
-            _PHONE_START_RE,
+            _phone_starts(text),
             P.PHONE_RE,
             lambda m: self.deidentify_value(m.group(0), TYPE_PHONE, "phone"),
             text,
@@ -326,19 +424,17 @@ class Deidentifier:
         (deidentify.go:226); since any regex match strips to exactly 9
         digits the gate is inert, replicated for fidelity."""
 
-        # Context depends only on the original input, not the match —
-        # hoisted out of the per-match callback (the reference re-scans per
-        # match, deidentify.go:755, which is O(matches x len); hoisting is
-        # behavior-identical and linear).
-        has_context = bool(P.SSN_CONTEXT_RE.search(original_text))
-
         def repl(m):
             ssn = m.group(0)
-            raw_digits = P.NON_DIGIT_RE.sub("", ssn)
-            is_formatted = bool(
-                P.SSN_HYPHEN_RE.search(ssn) or P.SSN_SPACE_RE.search(ssn)
-            )
-            if not is_formatted and not has_context and len(raw_digits) != 9:
+            # The three conditions are pure, so they are tested cheapest
+            # first: the context scan of the whole original input
+            # (deidentify.go:755) runs only when the other two hold, which
+            # no SSN_RE match does.
+            if (
+                len(P.NON_DIGIT_RE.sub("", ssn)) != 9
+                and not (P.SSN_HYPHEN_RE.search(ssn) or P.SSN_SPACE_RE.search(ssn))
+                and not P.SSN_CONTEXT_RE.search(original_text)
+            ):
                 return ssn
             return self.deidentify_value(ssn, TYPE_SSN, "ssn")
 
@@ -359,18 +455,19 @@ class Deidentifier:
             addr = m.group(2).strip()
             return prefix + " " + self.deidentify_value(addr, TYPE_ADDRESS, "address")
 
-        return P.CONTEXT_ADDRESS_RE.sub(repl, text)
+        starts = _context_address_starts(text, self._digit_runs(text))
+        return _sub_anchored(starts, P.CONTEXT_ADDRESS_RE, repl, text)
 
     def _process_special_addresses(self, text: str) -> str:
         """Three international patterns in order (deidentify.go:740-745)."""
         text = _sub_anchored(
-            _DIGIT_RUN_RE,
+            self._digit_runs(text),
             P.SPECIAL_ADDRESS_1_RE,
             lambda m: self.deidentify_value(m.group(0), TYPE_ADDRESS, "address"),
             text,
         )
         text = _sub_anchored(
-            _DIGIT_RUN_RE,
+            self._digit_runs(text),
             P.SPECIAL_ADDRESS_2_RE,
             lambda m: self.deidentify_value(m.group(0), TYPE_ADDRESS, "address"),
             text,
@@ -386,7 +483,8 @@ class Deidentifier:
             addr = parts[1].strip()
             return parts[0] + " " + self.deidentify_value(addr, TYPE_ADDRESS, "address")
 
-        return P.SPECIAL_ADDRESS_3_RE.sub(repl3, text)
+        starts = _special_address_3_starts(text, self._digit_runs(text))
+        return _sub_anchored(starts, P.SPECIAL_ADDRESS_3_RE, repl3, text)
 
     def is_address_context(self, name: str) -> bool:
         """Name-candidate suppression (deidentify.go:537-547)."""
@@ -408,7 +506,7 @@ class Deidentifier:
 
     def _process_standard_addresses(self, text: str) -> str:
         return _sub_anchored(
-            _DIGIT_RUN_RE,
+            self._digit_runs(text),
             P.ADDRESS_RE,
             lambda m: self.deidentify_value(m.group(0), TYPE_ADDRESS, "address"),
             text,

@@ -186,9 +186,21 @@ ADDRESS_PATTERN = (
 )
 
 # Context-cue address pattern (inline in the reference, deidentify.go:598).
+# The cues are plain lowercase phrases; oracle/core.py derives the
+# anchored scan's candidate starts from their lengths.
+CONTEXT_CUES = (
+    "lives at",
+    "located at",
+    "resides at",
+    "found at",
+    "situated at",
+    "at address",
+    "address is",
+    "at location",
+    "based at",
+)
 CONTEXT_ADDRESS_PATTERN = (
-    r"(?i)(lives at|located at|resides at|found at|situated at|at address|"
-    r"address is|at location|based at) ([0-9]+[^\n\.]*?"
+    "(?i)(" + "|".join(CONTEXT_CUES) + r") ([0-9]+[^\n\.]*?"
     r"(Street|St|Avenue|Ave|Road|Rd|Drive|Dr|Lane|Ln|Place|Pl|Boulevard|Blvd|"
     r"Way)[^\n\.]*)"
 )

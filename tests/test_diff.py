@@ -2,10 +2,7 @@
 
 from __future__ import annotations
 
-from deidentify_spark.operators.diff import (
-    snapshot_diff,
-    snapshot_diff_summary,
-)
+from deidentify_spark.operators.diff import snapshot_diff
 
 
 def test_snapshot_diff_statuses(spark):
@@ -33,7 +30,7 @@ def test_snapshot_diff_null_vs_empty(spark):
     assert out[0].status == "changed"
 
 
-def test_snapshot_diff_multi_column_and_summary(spark):
+def test_snapshot_diff_multi_column(spark):
     old = spark.createDataFrame(
         [(1, "t", "en"), (2, "u", "en")], "doc_id long, text string, lang string"
     )
@@ -43,9 +40,6 @@ def test_snapshot_diff_multi_column_and_summary(spark):
     out = {r.doc_id: r.status
            for r in snapshot_diff(old, new, content_cols=["text", "lang"]).collect()}
     assert out == {1: "changed"}
-    summ = {r.status: r.n_docs
-            for r in snapshot_diff_summary(old, new, content_cols=["text", "lang"]).collect()}
-    assert summ == {"changed": 1, "unchanged": 1}
 
 
 def test_snapshot_diff_text_not_in_shuffle(spark):

@@ -1,14 +1,8 @@
-"""k-anonymity / l-diversity audit + suppression (operators/privacy.py)."""
+"""k-anonymity / l-diversity audit (operators/privacy.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from deidentify_spark.operators.privacy import (
-    k_anonymity_classes,
-    k_anonymity_summary,
-    suppress_to_k,
-)
+from deidentify_spark.operators.privacy import k_anonymity_classes
 
 
 def _tbl(spark):
@@ -35,28 +29,3 @@ def test_k_anonymity_classes(spark):
     assert out[("us", "b")].violates_k and not out[("us", "b")].violates_l
     assert out[("fr", "a")].class_size == 1 and out[("fr", "a")].violates_k
     assert out[("fr", "b")].l_div == 3 and not out[("fr", "b")].violates_k
-
-
-def test_k_anonymity_summary(spark):
-    row = k_anonymity_summary(
-        _tbl(spark), ["nation", "seg"], k=3, sensitive_col="dx", l=2
-    ).collect()[0]
-    assert row.n_classes == 4
-    assert row.min_class_size == 1
-    assert row.n_classes_below_k == 2
-    assert row.n_rows_at_risk == 3  # (us,b) 2 rows + (fr,a) 1 row
-    assert row.min_l_div == 1 and row.n_classes_below_l == 2
-
-
-def test_suppress_to_k_enforces(spark):
-    df = _tbl(spark)
-    out = suppress_to_k(df, ["nation", "seg"], k=3)
-    assert out.count() == 9  # 12 - 3 at-risk rows
-    # the released table IS 3-anonymous: every remaining class >= 3
-    sizes = [
-        r.c
-        for r in out.groupBy("nation", "seg").agg(F.count("*").alias("c")).collect()
-    ]
-    assert min(sizes) >= 3
-    # idempotent: suppressing an already-k-anonymous table is a no-op
-    assert suppress_to_k(out, ["nation", "seg"], k=3).count() == 9

@@ -62,9 +62,10 @@ TEST_ONLY_ALLOWED = {
 
 
 def _names_used(tree) -> set[str]:
-    """Every name a module uses: Name ids, attribute names, imported
-    names and ``__all__`` entries. A top-level definition's use of its
-    own name (recursion) does not count."""
+    """Every name a module uses: Name ids, attribute names and imported
+    names. A top-level definition's use of its own name (recursion) does
+    not count, and neither does the module's own ``__all__``: listing a
+    name for export is not a use of it."""
     used = set()
     for stmt in tree.body:
         own = getattr(stmt, "name", None)
@@ -79,11 +80,6 @@ def _names_used(tree) -> set[str]:
                 continue
             if name != own:
                 used.add(name)
-        if (
-            isinstance(stmt, ast.Assign)
-            and any(getattr(t, "id", None) == "__all__" for t in stmt.targets)
-        ):
-            used.update(ast.literal_eval(stmt.value))
     return used
 
 
