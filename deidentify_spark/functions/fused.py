@@ -18,11 +18,21 @@ Project. Staging semantics are preserved INSIDE the batch: every stage
 runs only on rows all earlier gates kept, and cheaper stages run first
 (the rules before perplexity, and the scrub last, on kept rows only;
 langid must see every doc because, after a null text, wrong-language
-is the highest-priority drop reason). Per-stage costs are measured, not
-quoted here: ``python3 perfbench/run.py --workload web_mix --seed 1
---seconds 16 --trace 1`` reports ``langid``/``quality_pre``/
-``top2gram``/``perplexity``/``scrub`` ``.us_per_doc`` for the current
-code.
+is the highest-priority drop reason).
+
+The rule and LM stages (``quality_pre_reason_py``, ``top_2gram_frac``,
+``perplexity``) share one ``text.split()`` per doc through a one-entry
+memo on the text (functions/words.py), and read per-word facts from
+memos with C-level lookups, so no Python runs per word once the memos
+are warm. The first stage to run on a doc pays the split: in a traced
+run it is charged to ``quality_pre``.
+
+Per-stage costs are measured, not quoted here:
+``python3 scripts/fused_stage_probe.py`` prints each stage's CPU µs/doc
+in one process, and ``python3 perfbench/run.py --workload web_mix
+--seed 1 --seconds 16 --trace 1`` reports ``langid``/``quality_pre``/
+``top2gram``/``perplexity``/``scrub`` ``.us_per_doc`` (noisier; too
+noisy to size a stage).
 
 Reason priority: null_text > non_english > quality pre-rules >
 top_ngram_repetition > C4 phrase rules > high_perplexity > low_lang_conf
@@ -31,8 +41,7 @@ top_ngram_repetition > C4 phrase rules > high_perplexity > low_lang_conf
 
 from __future__ import annotations
 
-from collections import Counter
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -50,6 +59,7 @@ from deidentify_spark.functions.quality import (
     quality_post_reason_py,
     quality_pre_reason_py,
 )
+from deidentify_spark.functions.words import MEMO_MAX, Memo, split_words
 
 FUSED_SCHEMA = StructType(
     [
@@ -65,13 +75,44 @@ FUSED_SCHEMA = StructType(
 )
 
 
+# Lowered-word ids for top_2gram_frac: _WORD_ID maps a word to the id
+# of its lowercase form as one packed int64, the ids numbered in
+# first-seen order by _LOWER_ID. An id means something only against the
+# numbering it came from, so the two are cleared together, and only
+# between docs, before a doc is mapped.
+_LOWER_ID: dict[str, int] = {}
+
+
+def _lower_id(word: str) -> bytes:
+    return np.int64(_LOWER_ID.setdefault(word.lower(), len(_LOWER_ID))).tobytes()
+
+
+_WORD_ID = Memo(_lower_id)
+
+
 def top_2gram_frac(text: str) -> float:
-    """Fraction of word 2-grams taken by the most common 2-gram."""
-    words = text.lower().split()
-    if len(words) < 2:
+    """Fraction of word 2-grams taken by the most common 2-gram.
+
+    Words are compared lowercased (``[w.lower() for w in text.split()]``
+    is ``text.lower().split()``). Each 2-gram is one integer key built
+    from the two words' ids; the largest count is the longest run of
+    equal keys after a sort."""
+    words = split_words(text)
+    n = len(words)
+    if n < 2:
         return 0.0
-    grams = Counter(zip(words, words[1:]))
-    return max(grams.values()) / (len(words) - 1)
+    if len(_WORD_ID) > MEMO_MAX:
+        _WORD_ID.clear()
+        _LOWER_ID.clear()
+    ids = np.frombuffer(b"".join(map(_WORD_ID.__getitem__, words)), dtype=np.int64)
+    # ids < len(_LOWER_ID), so the key is unique per 2-gram and, for any
+    # doc that fits in memory, far from int64 overflow
+    keys = ids[:-1] * len(_LOWER_ID) + ids[1:]
+    keys.sort()
+    edge = np.empty(n, dtype=bool)  # run boundaries, sentinels at both ends
+    edge[0] = edge[-1] = True
+    np.not_equal(keys[1:], keys[:-1], out=edge[1:-1])
+    return int(np.diff(edge.nonzero()[0]).max()) / (n - 1)
 
 
 def fused_filter_scrub_udf(

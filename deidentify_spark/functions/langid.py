@@ -7,6 +7,10 @@ centroid/nearest-class-mean model over hashed char 1-3-gram counts:
 
 * featurize: codepoints -> hashed 1/2/3-gram counts into a 2^15 bucket
   vector (numpy, vectorized — no per-character Python), L2-normalized.
+  The hashes are computed in uint16 lanes: the low k bits of a sum or
+  product mod 2^n depend only on the operands' low k bits, and a bucket
+  id keeps only the low 15, so truncating the code points and the
+  multipliers to 16 bits gives the bucket ids of the 64-bit hash.
 * train: class centroid = normalized mean feature vector of the authored
   per-language training text (sources/textpools.LANGID_TRAINING) —
   fitted once per process at first use, deterministic (no RNG anywhere).
@@ -28,9 +32,11 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 _DIM = 1 << 15
 _MASK = _DIM - 1
-# Multipliers for the rolling n-gram hash (odd constants, deterministic).
-_M1 = np.uint64(0x9E3779B97F4A7C15)
-_M2 = np.uint64(0xC2B2AE3D27D4EB4F)
+# Multipliers for the rolling n-gram hash (odd constants, deterministic),
+# kept to the 16 bits the uint16 lanes use (of 0x9E3779B97F4A7C15 and
+# 0xC2B2AE3D27D4EB4F).
+_M1 = np.uint16(0x7C15)
+_M2 = np.uint16(0xEB4F)
 # Re-calibrated 24 -> 36 when LANGID_TRAINING_EXTRA widened the pools:
 # register supplements are parallel translations, which pull class
 # centroids closer together and flatten the softmax (clean-English min
@@ -45,6 +51,7 @@ _SOFTMAX_TEMP = 36.0
 _MAX_CHARS = 4096
 
 _MODEL: tuple[np.ndarray, list[str]] | None = None
+_ROWS: np.ndarray | None = None
 
 # Close-pair tie-break (round 4): 1-3-gram centroids genuinely struggle
 # on de/nl and es/pt at short lengths — the one remaining stress miss
@@ -89,41 +96,58 @@ _VOCAB: dict[str, frozenset[str]] | None = None
 
 
 def _codepoints(s: str) -> np.ndarray:
-    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
+    """Full uint32 code points (``_script_gate`` reads them whole)."""
+    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
 
 
 def _ngram_hashes(c: np.ndarray) -> np.ndarray:
-    """Hashed char 1/2/3-gram bucket ids for a codepoint array — THE
-    shared hashing between centroid training (featurize) and document
-    scoring (predict_batch's _sparse_hist). They must stay hash-identical
-    or cosine scores silently lose meaning; keep the mixing in exactly
-    one place."""
-    parts = [(c * _M1) & _MASK]
-    if c.size >= 2:
-        parts.append((c[:-1] * _M1 + c[1:] * _M2) & _MASK)
-    if c.size >= 3:
-        parts.append(((c[:-2] * _M1 + c[1:-1] * _M2) * _M1 + c[2:]) & _MASK)
-    return np.concatenate(parts)
+    """Hashed char 1/2/3-gram bucket ids (uint16) for a code point array:
+    unigrams, then bigrams, then trigrams. THE shared hashing between
+    centroid training (featurize) and document scoring (predict_batch's
+    _sparse_hist); they must stay hash-identical or cosine scores
+    silently lose meaning, so the mixing lives in exactly one place.
+
+    Each id is the low 15 bits of ``c0*M1``, ``c0*M1 + c1*M2`` or
+    ``(c0*M1 + c1*M2)*M1 + c2`` mod 2^64. Those bits depend only on the
+    operands' low 16 bits, so the whole computation runs in uint16
+    lanes (wrapping mod 2^16) on the truncated code points: the same
+    ids as the 64-bit hash, at a quarter of the memory traffic. A
+    trigram reuses its bigram's unmasked sum."""
+    c = c.astype(np.uint16)
+    n = c.size
+    out = np.empty(max(3 * n - 3, n), dtype=np.uint16)
+    np.multiply(c, _M1, out=out[:n])
+    if n >= 2:
+        bi = out[n : 2 * n - 1]
+        np.multiply(c[1:], _M2, out=bi)
+        bi += out[: n - 1]
+        if n >= 3:
+            tri = out[2 * n - 1 :]
+            np.multiply(bi[:-1], _M1, out=tri)
+            tri += c[2:]
+    out &= np.uint16(_MASK)
+    return out
 
 
 def _sparse_hist(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(sorted unique bucket ids as int64, float32 counts) — the lean
-    inline form of ``np.unique(h, return_counts=True)``. Identical
-    values/order (sort -> boundary mask -> run lengths is exactly what
+    """(sorted unique bucket ids as int64, float32 counts): the lean
+    inline form of ``np.unique(h, return_counts=True)``, with identical
+    values and order (sort, then run boundaries, then run lengths, as
     _unique1d does) but without its ~35 µs/call of keyword plumbing.
-    Bucket ids are < 2^15, so the sort runs on uint16, where a stable
-    sort is numpy's radix sort: 96 -> 75 µs/doc over the int32 introsort
-    on 2,000 web_mix docs (~3.4 k hashes each; a minlength-2^15 bincount
-    measured 150)."""
+    Bucket ids are < 2^15 and _ngram_hashes hands them over as uint16,
+    where a stable sort is numpy's radix sort (14 µs/doc against 35 for
+    the default introsort on web_mix docs). The boundary mask
+    carries a sentinel at both ends, so one ``nonzero`` gives both the
+    run starts and, by difference, the run lengths."""
     if h.size == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-    hs = np.sort(h.astype(np.uint16), kind="stable")
-    mask = np.empty(hs.size, dtype=bool)
-    mask[0] = True
-    np.not_equal(hs[1:], hs[:-1], out=mask[1:])
-    pos = np.flatnonzero(mask)
-    cnt = np.diff(np.append(pos, hs.size)).astype(np.float32)
-    return hs[mask].astype(np.int64), cnt
+    hs = np.sort(h.astype(np.uint16, copy=False), kind="stable")
+    edge = np.empty(hs.size + 1, dtype=bool)
+    edge[0] = edge[-1] = True
+    np.not_equal(hs[1:], hs[:-1], out=edge[1:-1])
+    pos = edge.nonzero()[0]
+    cnt = np.subtract(pos[1:], pos[:-1], dtype=np.float32)
+    return hs[pos[:-1]].astype(np.int64), cnt
 
 
 def featurize(s: str, hashes=_ngram_hashes) -> np.ndarray:
@@ -172,14 +196,28 @@ def _get_model() -> tuple[np.ndarray, list[str]]:
     return _MODEL
 
 
+def _bucket_rows() -> np.ndarray:
+    """The centroid matrix transposed into C order (DIM x n_langs), so a
+    doc's buckets gather as contiguous rows. ``rows.take(idx, axis=0).T``
+    equals ``mat[:, idx]`` value for value and stride for stride (numpy
+    lays that fancy index out F-contiguous), so the scoring matvec runs
+    the same BLAS path and sums in the same order, for ~4x less gather
+    time."""
+    global _ROWS
+    if _ROWS is None:
+        _ROWS = np.ascontiguousarray(_get_model()[0].T)
+    return _ROWS
+
+
 def _gram4_hashes(c: np.ndarray) -> np.ndarray:
-    """Hashed char 4-gram bucket ids (same multiplier scheme as
-    _ngram_hashes; separate feature space used only by the close-pair
-    tie-break)."""
+    """Hashed char 4-gram bucket ids (same multiplier scheme and uint16
+    lanes as _ngram_hashes; separate feature space used only by the
+    close-pair tie-break and the out-of-set check)."""
     if c.size < 4:
-        return np.empty(0, dtype=np.uint64)
+        return np.empty(0, dtype=np.uint16)
+    c = c.astype(np.uint16)
     return ((((c[:-3] * _M1 + c[1:-2] * _M2) * _M1 + c[2:-1]) * _M2)
-            + c[3:] * _M1) & _MASK
+            + c[3:] * _M1) & np.uint16(_MASK)
 
 
 def _get_model4() -> dict[str, np.ndarray]:
@@ -363,7 +401,8 @@ def predict_batch(texts: list[str]) -> tuple[list[str], list[float]]:
     less work, the tiny matvec keeps OpenBLAS from fanning out threads
     (32 workers x 32 BLAS threads measured as a 2x end-to-end slowdown
     at local[32])."""
-    mat, langs = _get_model()
+    _, langs = _get_model()
+    rows = _bucket_rows()
     n = len(texts)
     scores_all = np.zeros((n, len(langs)), dtype=np.float32)
     valid = np.zeros(n, dtype=bool)
@@ -372,10 +411,12 @@ def predict_batch(texts: list[str]) -> tuple[list[str], list[float]]:
     for j, t in enumerate(texts):
         if not t:
             continue
-        c = _codepoints(t[:_MAX_CHARS].lower())
+        low = t[:_MAX_CHARS].lower()
+        c = _codepoints(low)
         if c.size == 0:
             continue
-        gated = _script_gate(c)
+        # ASCII lies below every gate script, so the gate would say None
+        gated = None if low.isascii() else _script_gate(c)
         if gated is not None:
             # unique-script language: decided here, never reaches the
             # centroid scoring or the softmax batch below
@@ -385,7 +426,7 @@ def predict_batch(texts: list[str]) -> tuple[list[str], list[float]]:
         norm = float(np.sqrt((cnt * cnt).sum()))
         if norm == 0.0:
             continue
-        scores_all[j] = mat[:, idx] @ (cnt / norm)
+        scores_all[j] = rows.take(idx, axis=0).T @ (cnt / norm)
         valid[j] = True
     if valid.any():
         # softmax/argmax batched across docs — row-wise elementwise ops

@@ -15,10 +15,12 @@ hundreds+ — the pipeline threshold sits between with a wide margin
 
 from __future__ import annotations
 
+import re
 from zlib import crc32
 
 import numpy as np
-import re
+
+from deidentify_spark.functions.words import MEMO_MAX, Memo, split_words
 
 _DIM = 1 << 18
 _MASK = _DIM - 1
@@ -32,27 +34,27 @@ _WORD_RE = re.compile(r"[a-z']+")
 _TABLES: tuple[np.ndarray, np.ndarray] | None = None
 
 
-# Per-word crc32 memo: web text repeats words heavily (Zipf), so the
-# encode+crc per occurrence is mostly redundant. Values are exact crc32
-# outputs — semantics untouched; cleared at 1M entries to bound worker
-# memory on open-vocabulary input (same policy as quality's word-flag
-# cache). Measured ~1.8x on _word_hashes for the generator corpus.
-_CRC_CACHE: dict[str, int] = {}
+def _word_crcs(word: str) -> bytes:
+    crcs = [crc32(t.encode()) for t in _WORD_RE.findall(word.lower())]
+    return np.array(crcs, dtype=np.uint64).tobytes()
+
+
+# Per whitespace word, the crc32s of its ``[a-z']+`` tokens as packed
+# uint64s, so a doc's hashes are one ``b"".join`` of its words' values.
+# Web text repeats words heavily (Zipf), so the lower+findall+encode+crc
+# per occurrence is mostly redundant. A token never spans whitespace and
+# lowering never makes or removes whitespace, so the tokens of
+# ``text.lower()`` are those of its words in order, and the joined
+# values are exactly the crc32s the whole-text scan gives. Cleared at
+# MEMO_MAX entries.
+_WORD_CRCS = Memo(_word_crcs)
 
 
 def _word_hashes(text: str) -> np.ndarray:
-    words = _WORD_RE.findall(text.lower())
-    cache = _CRC_CACHE
-    if len(cache) > 1_000_000:
-        cache.clear()
-    get = cache.get
-    out = []
-    for w in words:
-        h = get(w)
-        if h is None:
-            h = cache[w] = crc32(w.encode())
-        out.append(h)
-    return np.array(out, dtype=np.uint64)
+    if len(_WORD_CRCS) > MEMO_MAX:
+        _WORD_CRCS.clear()
+    packed = b"".join(map(_WORD_CRCS.__getitem__, split_words(text)))
+    return np.frombuffer(packed, dtype=np.uint64)
 
 
 def _get_tables() -> tuple[np.ndarray, np.ndarray]:

@@ -22,9 +22,12 @@ each defect class to fail exactly one rule with a comfortable margin.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from itertools import compress, repeat
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from deidentify_spark.functions.words import MEMO_MAX, Memo, split_words
 
 
 @dataclass(frozen=True)
@@ -152,19 +155,28 @@ def quality_metrics(text: Column, cfg: QualityConfig) -> dict[str, Column]:
 
 
 # The two per-word predicates (contains-a-letter, is-a-stopword-after-
-# punct-strip) are pure functions of the word given a config, and web
-# text repeats words heavily, so they are memoized per config. The memo
-# only caches single-word results — rule semantics and thresholds are
-# untouched (pinned identical by tests/test_functions.py) — and is
-# cleared at 1M entries to bound worker memory on open-vocabulary input.
+# punct-strip) are pure functions of the word given a config, so they
+# are memoized per config, packed in one int per word: bit 0 is the
+# letter flag, bit _STOP_SHIFT the stopword flag. One C-level
+# ``sum(map(memo.__getitem__, words))`` then counts both (a doc has far
+# fewer than 2^32 words). Rule semantics and thresholds are untouched
+# (pinned by tests/test_functions.py); the memo is cleared at MEMO_MAX
+# entries.
 _WORD_PUNCT = "\"'.,;:!?()[]{}<>-_#"
-_WORD_FLAG_CACHES: dict[QualityConfig, dict[str, tuple[bool, bool]]] = {}
+_STOP_SHIFT = 32
+_WORD_FLAG_CACHES: dict[QualityConfig, Memo] = {}
 
 
-def _word_flag_cache(cfg: QualityConfig) -> dict[str, tuple[bool, bool]]:
+def _word_flag_cache(cfg: QualityConfig) -> Memo:
     cache = _WORD_FLAG_CACHES.get(cfg)
     if cache is None:
-        cache = _WORD_FLAG_CACHES[cfg] = {}
+        stop = frozenset(cfg.stopwords)
+
+        def flags(w: str) -> int:
+            alpha = any(c.isalpha() for c in w)
+            return alpha | (w.lower().strip(_WORD_PUNCT) in stop) << _STOP_SHIFT
+
+        cache = _WORD_FLAG_CACHES[cfg] = Memo(flags)
     return cache
 
 
@@ -174,51 +186,38 @@ def quality_pre_reason_py(text: str, cfg: QualityConfig) -> str | None:
     fused Arrow UDF — measured ~100x cheaper per doc than the
     interpreted/duplicated JVM expression tree (which re-splits the text
     in every CASE WHEN branch). Parity with the Column version is pinned
-    by tests/test_functions.py."""
-    words = text.split()
+    by tests/test_functions.py. The split is shared with the later
+    stages (functions/words.py)."""
+    words = split_words(text)
     n_words = len(words)
     if n_words < cfg.min_words:
         return "too_few_words"
     if n_words > cfg.max_words:
         return "too_many_words"
-    total_chars = sum(map(len, words))  # C-level, same sum
+    total_chars = len("".join(words))
     mean_len = total_chars / n_words
     if mean_len < cfg.min_mean_word_length or mean_len > cfg.max_mean_word_length:
         return "mean_word_length"
     symbols = text.count("#") + text.count("...") + text.count("…")
     if symbols / n_words > cfg.max_symbol_word_ratio:
         return "symbol_ratio"
-    lines = [ln for ln in text.split("\n") if ln.strip()]
+    raw = text.split("\n")
+    stripped = list(map(str.strip, raw))
+    lines = list(compress(raw, stripped))  # the non-blank lines
+    stripped = list(filter(None, stripped))
     n_lines = max(len(lines), 1)
-    bullets = sum(
-        1 for ln in lines if ln.strip().startswith(("-", "•", "*"))
-    )
+    bullets = sum(map(str.startswith, stripped, repeat(("-", "•", "*"))))
     if bullets / n_lines > cfg.max_bullet_line_frac:
         return "bullet_lines"
-    ellipsis_ends = sum(
-        1 for ln in lines if ln.strip().endswith(("...", "…"))
-    )
+    ellipsis_ends = sum(map(str.endswith, stripped, repeat(("...", "…"))))
     if ellipsis_ends / n_lines > cfg.max_ellipsis_line_frac:
         return "ellipsis_lines"
-    stop = set(cfg.stopwords)
     cache = _word_flag_cache(cfg)
-    if len(cache) > 1_000_000:
+    if len(cache) > MEMO_MAX:
         cache.clear()
-    get = cache.get
-    alpha_words = 0
-    stop_count = 0
-    for w in words:
-        f = get(w)
-        if f is None:
-            f = (
-                any(c.isalpha() for c in w),
-                w.lower().strip(_WORD_PUNCT) in stop,
-            )
-            cache[w] = f
-        if f[0]:
-            alpha_words += 1
-        if f[1]:
-            stop_count += 1
+    flags = sum(map(cache.__getitem__, words))
+    alpha_words = flags & ((1 << _STOP_SHIFT) - 1)
+    stop_count = flags >> _STOP_SHIFT
     if alpha_words / n_words < cfg.min_alpha_word_frac:
         return "alpha_ratio"
     if stop_count < cfg.min_stopword_count:

@@ -63,7 +63,9 @@ _DIGIT_RE = _regex.compile(r"[0-9]")
 #     regex module's default SIMPLE case folding, which matches one text
 #     character per pattern character ("baſed at", "lİves at" are still
 #     8 characters). Full folding (the FULLCASE flag, or VERSION1) would
-#     let "ss" match one "ß" and break the offsets.
+#     let "ss" match one "ß" and break the offsets. A start is kept only
+#     when its cue and a suffix word are there (`_context_address_starts`
+#     says why that keeps the pass linear).
 #   * SPECIAL_ADDRESS_3: ":", "@" or "at", then `[\t\n\f\r ]+`, then
 #     a digit-run start d. The cue is not whitespace, so the whitespace is
 #     the whole maximal run w..d, and the match starts at w - 1 or w - 2.
@@ -91,6 +93,7 @@ _EMAIL_LOCAL_CHARS = frozenset(string.ascii_letters + string.digits + "._%+-")
 _RE2_WS_CHARS = frozenset("\t\n\f\r ")
 # Longest first, so the starts d - 1 - len ascend for each digit run.
 _CONTEXT_CUE_LENGTHS = sorted({len(c) for c in P.CONTEXT_CUES}, reverse=True)
+_LINE_END_RE = _stdre.compile(r"[\n.]")
 
 
 def _sub_anchored(starts, pat, repl, text: str) -> str:
@@ -147,14 +150,35 @@ def _phone_starts(text: str):
 
 
 def _context_address_starts(text: str, runs: list[int]) -> list[int]:
-    """d - 1 - len(cue) for every digit-run start d after a space."""
-    starts = [
-        d - 1 - n
-        for d in runs
-        if text[d - 1 : d] == " "
-        for n in _CONTEXT_CUE_LENGTHS
-        if d - 1 - n >= 0
-    ]
+    r"""d - 1 - len(cue) for every digit-run start d that a cue phrase and
+    a space precede and a suffix word follows within the line.
+
+    A match needs all three: a cue and " " ending at d, at least one
+    digit, then a suffix word starting at some p in (d, e), where e is
+    the first newline or "." at or after d (nothing between d and p may
+    be one). Checking them first keeps the pass linear: the lazy
+    ``[^\n\.]*?`` would otherwise scan from every cue to the line end,
+    quadratic on a long line of cues with no suffix word. One suffix
+    search serves every later run up to the suffix it found, or to the
+    line end when it found none, so each character is searched once."""
+    starts = []
+    end = -1  # e for the last run looked up
+    lo = hi = -1  # the last suffix search covered [lo, hi) ...
+    sfx = None  # ... and found its first suffix word here (None: none)
+    for d in runs:
+        if text[d - 1 : d] != " " or not P.CONTEXT_CUE_RE.search(
+            text, max(0, d - 1 - _CONTEXT_CUE_LENGTHS[0]), d
+        ):
+            continue
+        if d > end:
+            m = _LINE_END_RE.search(text, d)
+            end = m.start() if m else len(text)
+        if not (hi == end and lo <= d + 1 and (sfx is None or d + 1 <= sfx)):
+            lo, hi = d + 1, end
+            m = P.CONTEXT_SUFFIX_RE.search(text, lo, hi)
+            sfx = m.start() if m else None
+        if sfx is not None:
+            starts += [d - 1 - n for n in _CONTEXT_CUE_LENGTHS if d - 1 - n >= 0]
     # runs a few characters apart interleave their starts
     return sorted(set(starts))
 

@@ -199,10 +199,13 @@ CONTEXT_CUES = (
     "at location",
     "based at",
 )
+_CONTEXT_SUFFIX = (
+    r"(Street|St|Avenue|Ave|Road|Rd|Drive|Dr|Lane|Ln|Place|Pl|Boulevard|Blvd|"
+    r"Way)"
+)
 CONTEXT_ADDRESS_PATTERN = (
     "(?i)(" + "|".join(CONTEXT_CUES) + r") ([0-9]+[^\n\.]*?"
-    r"(Street|St|Avenue|Ave|Road|Rd|Drive|Dr|Lane|Ln|Place|Pl|Boulevard|Blvd|"
-    r"Way)[^\n\.]*)"
+    + _CONTEXT_SUFFIX + r"[^\n\.]*)"
 )
 
 # --- compiled, import-time (behavior-neutral speedup vs the reference) ---
@@ -226,4 +229,10 @@ SPECIAL_ADDRESS_2_RE = regex.compile(SPECIAL_ADDRESS_PATTERN_2)
 SPECIAL_ADDRESS_3_RE = regex.compile(SPECIAL_ADDRESS_PATTERN_3)
 ADDRESS_RE = regex.compile(ADDRESS_PATTERN)
 CONTEXT_ADDRESS_RE = regex.compile(CONTEXT_ADDRESS_PATTERN)
+# The two parts of a CONTEXT_ADDRESS match that oracle/core.py looks for
+# before trying one: a cue phrase and its space ending at the search's
+# endpos, and a suffix word. Same alternations and flags, so they fold
+# case exactly as the whole pattern does ("baſed at", "ſt").
+CONTEXT_CUE_RE = regex.compile("(?i)(" + "|".join(CONTEXT_CUES) + r") \Z")
+CONTEXT_SUFFIX_RE = regex.compile("(?i)" + _CONTEXT_SUFFIX)
 NON_DIGIT_RE = regex.compile(r"[^0-9]")

@@ -417,6 +417,23 @@ ANCHOR_EDGE_CASES = [
     "Sat 4 Elm Street",
 ]
 
+# Many context-address cues on one line, with the suffix word missing,
+# past a line end, inside a later cue's reach only, or folded ("ſt").
+CUE_HEAVY_CASES = [
+    "lives at 1 " * 50,
+    "lives at 1 " * 50 + "Elm Street",
+    "LIVES AT 7 " * 30 + "BLVD",
+    "lives at 1 x\nlives at 2 Elm St",
+    "lives at 1 x. lives at 2 Oak St",
+    "address is 1 a.St address is 2 b St",
+    "resides at 1 Street resides at 2 x resides at 3 Way. resides at 4",
+    "found at 1.5 Elm Street",
+    "lives at 1St and based at 12 ſt",
+    "lives at 9Way. found at 2",
+    "situated at 5 x at location 6 7 Lane\nat location 8",
+    "at location 1 " * 20 + ".\n" + "situated at 2 Pine Pl",
+]
+
 
 def test_pass_gating_byte_identical(d, corpus, unanchored_text):
     """text()'s digit/'@' gates and anchored candidate scans must be a
@@ -429,6 +446,7 @@ def test_pass_gating_byte_identical(d, corpus, unanchored_text):
         + [c["text"] for c in corpus["text_cases"]]
         + ["no digits here at all", "Plain Words Only", "", "a@b", "@", "5"]
         + ANCHOR_EDGE_CASES
+        + CUE_HEAVY_CASES
     )
     for t in texts:
         assert d.text(t) == unanchored_text(d, t), t[:80]
@@ -492,6 +510,7 @@ def test_anchored_sub_parity(corpus):
         *corpus["international_addresses"],
         *[tc["text"] for tc in corpus["text_cases"]],
         *ANCHOR_EDGE_CASES,
+        *CUE_HEAVY_CASES,
         "123 Main Street, Berlin, Germany",
         "9 Rue Cler Paris France and 77 Elm Road US",
         "12345" * 200,

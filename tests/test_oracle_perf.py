@@ -36,3 +36,12 @@ def test_full_scrub_word_chain_bounded():
     d = Deidentifier("perf-key")
     words = "123 " + " ".join(["lorem", "ipsum", "dolor", "sit"] * 500) + " endx."
     assert _timed(d.text, words) < 5.0
+
+
+def test_context_address_linear_on_cue_chain():
+    # every "lives at 1" is a context-address candidate with no suffix
+    # word on its line; at n = 5000 a per-candidate scan to the line end
+    # took ~45 s
+    d = Deidentifier("perf-key")
+    text = "lives at 1 " * 5000
+    assert _timed(d.text, text) < 1.0
