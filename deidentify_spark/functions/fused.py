@@ -65,7 +65,6 @@ FUSED_SCHEMA = StructType(
     [
         StructField("lang_pred", StringType()),
         StructField("lang_conf", DoubleType()),
-        StructField("top_2gram_frac", DoubleType()),
         StructField("perplexity", DoubleType()),
         StructField("drop_reason", StringType()),
         StructField("keep", BooleanType()),
@@ -139,7 +138,6 @@ def fused_filter_scrub_udf(
         n = len(txt)
         preds, confs = predict_batch(txt)
 
-        top2 = [None] * n
         ppl = [None] * n
         reason: list[str | None] = [None] * n
         for i in range(n):
@@ -158,8 +156,7 @@ def fused_filter_scrub_udf(
             t = txt[i]
             r = quality_pre_reason_py(t, qcfg)
             if r is None:
-                top2[i] = top_2gram_frac(t)
-                if top2[i] > qcfg.max_top_2gram_frac:
+                if top_2gram_frac(t) > qcfg.max_top_2gram_frac:
                     r = "top_ngram_repetition"
                 else:
                     r = quality_post_reason_py(t, qcfg)
@@ -185,7 +182,6 @@ def fused_filter_scrub_udf(
             {
                 "lang_pred": preds,
                 "lang_conf": pd.array(confs, dtype="float64"),
-                "top_2gram_frac": pd.array(top2, dtype="float64"),
                 "perplexity": pd.array(ppl, dtype="float64"),
                 "drop_reason": reason,
                 "keep": [r is None for r in reason],

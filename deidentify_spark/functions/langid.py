@@ -397,10 +397,12 @@ def predict_batch(texts: list[str]) -> tuple[list[str], list[float]]:
 
     Scores via the sparse n-gram form: cosine(centroid, doc) needs only
     the centroid columns at the doc's nonzero buckets — a 9 x k gather +
-    tiny matvec instead of a dense 9 x 32768 product. Besides being ~10x
-    less work, the tiny matvec keeps OpenBLAS from fanning out threads
-    (32 workers x 32 BLAS threads measured as a 2x end-to-end slowdown
-    at local[32])."""
+    tiny matvec instead of a dense 9 x 32768 product, ~10x less work.
+    OpenBLAS still fans out threads for it in a process with no BLAS
+    thread cap. Spark's Python workers are capped (Spark sets their
+    ``OMP_NUM_THREADS`` to ``spark.task.cpus`` unless
+    ``spark.executorEnv.OMP_NUM_THREADS`` is set); an in-process caller
+    should set ``OMP_NUM_THREADS=1`` before numpy is imported."""
     _, langs = _get_model()
     rows = _bucket_rows()
     n = len(texts)

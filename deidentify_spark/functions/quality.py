@@ -272,21 +272,20 @@ def quality_drop_reason(m: dict[str, Column], top2: Column, cfg: QualityConfig) 
     )
 
 
-def c4_line_trim(
-    df,
-    text_col: str = "text",
-    min_words: int = 3,
-    min_kept_lines: int = 3,
-):
+C4_MIN_LINE_WORDS = 3  # c4_line_trim: words a kept line needs
+C4_MIN_KEPT_LINES = 3  # c4_line_trim: kept lines a page needs
+
+
+def c4_line_trim(df, text_col: str = "text"):
     """C4's LINE-level cleaning (Raffel et al. 2020 §2.2) — the step
     the doc-level gate above deliberately does not do: instead of
     dropping a whole page for bad lines, TRIM the lines and keep the
     page if enough survive. Kept line = ends in a terminal punctuation
-    mark (``. ! ? "``), has >= ``min_words`` whitespace words, and does
-    not mention "javascript" (case-insensitive). Doc-level ``c4_keep``
-    = >= ``min_kept_lines`` lines survive AND the original page has no
-    "lorem ipsum" and no ``{`` (C4 drops both outright; our kept-line
-    floor stands in for C4's >=3-sentence rule).
+    mark (``. ! ? "``), has >= ``C4_MIN_LINE_WORDS`` whitespace words,
+    and does not mention "javascript" (case-insensitive). Doc-level
+    ``c4_keep`` = >= ``C4_MIN_KEPT_LINES`` lines survive AND the original
+    page has no "lorem ipsum" and no ``{`` (C4 drops both outright; our
+    kept-line floor stands in for C4's >=3-sentence rule).
 
     Pure JVM column expressions (split -> higher-order filter ->
     array_join): a narrow map over the corpus, no shuffle, no UDF —
@@ -308,7 +307,7 @@ def c4_line_trim(
         t = F.trim(ln)
         return (
             t.rlike('[.!?"]$')
-            & (F.size(F.split(t, "[\\t\\f\\r ]+")) >= min_words)
+            & (F.size(F.split(t, "[\\t\\f\\r ]+")) >= C4_MIN_LINE_WORDS)
             & ~F.lower(ln).contains("javascript")
         )
 
@@ -319,7 +318,7 @@ def c4_line_trim(
         .withColumn("c4_lines_dropped", F.size(lines) - F.size(kept))
         .withColumn(
             "c4_keep",
-            (F.size(kept) >= min_kept_lines)
+            (F.size(kept) >= C4_MIN_KEPT_LINES)
             & ~F.lower(F.col(text_col)).contains("lorem ipsum")
             & ~F.col(text_col).contains("{"),
         )

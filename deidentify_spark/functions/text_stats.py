@@ -57,7 +57,11 @@ def normalized_fingerprint(text: Column) -> Column:
     return F.md5(F.trim(F.regexp_replace(F.lower(text), RE2_WS_CLASS + "+", " ")))
 
 
-def winnowing_fingerprints(text: str, k: int = 5, window: int = 4) -> list[int]:
+WINNOW_K = 5  # words per winnowing k-gram
+WINNOW_WINDOW = 4  # k-gram hashes per window
+
+
+def winnowing_fingerprints(text: str) -> list[int]:
     """Winnowing document fingerprints (Schleimer et al. 2003): hash over
     word k-grams (first 15 hex chars of md5 — DuckDB-replicable), minimum
     per sliding window of full windows, deduplicated + sorted. The
@@ -66,40 +70,38 @@ def winnowing_fingerprints(text: str, k: int = 5, window: int = 4) -> list[int]:
     import hashlib
 
     words = re2_words(text)
-    if len(words) < k:
+    if len(words) < WINNOW_K:
         return []
+    grams = (" ".join(words[i : i + WINNOW_K]) for i in range(len(words) - WINNOW_K + 1))
     hs = np.array(
-        [
-            int(hashlib.md5(" ".join(words[i : i + k]).encode()).hexdigest()[:15], 16)
-            for i in range(len(words) - k + 1)
-        ],
+        [int(hashlib.md5(g.encode()).hexdigest()[:15], 16) for g in grams],
         dtype=np.int64,
     )
-    if len(hs) <= window:
+    if len(hs) <= WINNOW_WINDOW:
         mins = {int(hs.min())}
     else:
-        sw = np.lib.stride_tricks.sliding_window_view(hs, window)
+        sw = np.lib.stride_tricks.sliding_window_view(hs, WINNOW_WINDOW)
         mins = set(int(x) for x in sw.min(axis=1))
     return sorted(mins)
 
 
-def winnowing_fingerprints_udf(k: int = 5, window: int = 4):
+def winnowing_fingerprints_udf():
     """Vectorized wrapper of :func:`winnowing_fingerprints`."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def winnow(text: pd.Series) -> pd.Series:
-        return pd.Series([winnowing_fingerprints(t, k, window) for t in text.fillna("")])
+        return pd.Series([winnowing_fingerprints(t) for t in text.fillna("")])
 
     return winnow
 
 
-def winnowing_oracle_sql(table: str = "documents", k: int = 5, window: int = 4) -> str:
+def winnowing_oracle_sql(table: str = "documents") -> str:
     """DuckDB SQL twin of winnowing_fingerprints, exploded to
     (doc_id, fingerprint) rows: positioned k-grams via list comprehension,
     md5-hex hashes, window-min over FULL windows only (tail partials are
     excluded to match the python; docs with <= window grams keep the
     single global min)."""
-    gram = "||' '||".join(f"w[i+{j}]" for j in range(k))
+    gram = "||' '||".join(f"w[i+{j}]" for j in range(WINNOW_K))
     return f"""
             WITH words AS (
                 SELECT doc_id,
@@ -108,7 +110,7 @@ def winnowing_oracle_sql(table: str = "documents", k: int = 5, window: int = 4) 
             ), grams AS (
                 SELECT doc_id,
                        unnest([{{'pos': i, 'g': {gram}}}
-                               for i in generate_series(1, len(w)-{k - 1})]) AS pg
+                               for i in generate_series(1, len(w)-{WINNOW_K - 1})]) AS pg
                 FROM words
             ), hashes AS (
                 SELECT doc_id, pg.pos AS pos,
@@ -119,13 +121,13 @@ def winnowing_oracle_sql(table: str = "documents", k: int = 5, window: int = 4) 
                 SELECT doc_id, pos, n,
                        MIN(h) OVER (
                            PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING
+                           ROWS BETWEEN CURRENT ROW AND {WINNOW_WINDOW - 1} FOLLOWING
                        ) AS fp
                 FROM hashes
             )
             SELECT DISTINCT doc_id, fp AS fingerprint
             FROM winmins
-            WHERE pos <= n - {window} + 1 OR (n <= {window} AND pos = 1)
+            WHERE pos <= n - {WINNOW_WINDOW} + 1 OR (n <= {WINNOW_WINDOW} AND pos = 1)
             ORDER BY doc_id, fingerprint
     """
 

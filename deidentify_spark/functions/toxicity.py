@@ -100,21 +100,23 @@ def toxicity_filter(
     )
 
 
+TOXICITY_MASK = "***"  # what a flagged term is replaced with
+
+
 def toxicity_mask_expr(
     text: Column,
     blocklist: "tuple[str, ...] | list[str]" = DEFAULT_BLOCKLIST,
-    mask: str = "***",
 ) -> Column:
     """Mask flagged terms in place, preserving all other bytes: one
     case-insensitive word-boundary alternation regexp_replace. The
     pattern is a literal alternation (re.escape'd) — linear-time in RE2
     and Java alike, probed in tests/test_oracle_perf.py style against
-    pathological inputs. DuckDB twin: regexp_replace(text, pat, mask,
-    'gi')."""
+    pathological inputs. DuckDB twin: regexp_replace(text, pat,
+    TOXICITY_MASK, 'gi')."""
     if not blocklist:
         return text
     pat = r"(?i)\b(?:" + "|".join(re.escape(w) for w in blocklist) + r")\b"
-    return F.regexp_replace(text, pat, mask)
+    return F.regexp_replace(text, pat, TOXICITY_MASK)
 
 
 def toxicity_scrub(

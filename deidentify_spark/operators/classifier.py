@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 from deidentify_spark.operators.dedup import _hash60
 
 DEFAULT_BUCKETS = 1 << 15
+ALPHA = 1.0  # Laplace smoothing of the NB weights and prior
+LOGREG_INIT_C = 20.0  # logreg's NB init: LOGREG_INIT_C / mean feature count
+SCORE_DECIMALS = 4  # the DuckDB twins round scores to these
 
 
 def _features(
@@ -119,19 +122,18 @@ def nb_train(
     label_col: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_buckets: int = DEFAULT_BUCKETS,
-    alpha: float = 1.0,
 ) -> tuple[DataFrame, DataFrame]:
     """Train multinomial NB; ``label_col`` is boolean (True = positive).
 
     Returns ``(weights, bias)``: a dense (feature, w) table of exactly
-    ``n_buckets`` rows — w = log-likelihood ratio with Laplace ``alpha``
-    — and a one-row (bias) DataFrame carrying the class-prior log-odds.
+    ``DEFAULT_BUCKETS`` rows — w = log-likelihood ratio with Laplace
+    ``ALPHA`` — and a one-row (bias) DataFrame carrying the class-prior log-odds.
     Dense on purpose: scoring then needs no unseen-feature special case
     (an unseen bucket's weight is the pure-smoothing ratio, a real
     number, not 0).
     """
     spark = df.sparkSession
+    n_buckets, alpha = DEFAULT_BUCKETS, ALPHA
     # the label rides the feature explode (_features extra_cols) — a
     # per-doc (id, label) join here would need an O(n_docs) broadcast
     # (over Spark's limit at corpus scale) or a feature-stream shuffle
@@ -200,7 +202,6 @@ def nb_score(
     bias: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_buckets: int = DEFAULT_BUCKETS,
     score_col: str = "nb_score",
 ) -> DataFrame:
     """Log-odds score + prediction per doc.
@@ -209,7 +210,7 @@ def nb_score(
     partial-aggregated groupBy(id) sum. Featureless docs (shorter than
     one word) fall back to the bias via the left join + coalesce.
     """
-    feats = _features(df, text_col, id_col, n_buckets)
+    feats = _features(df, text_col, id_col, DEFAULT_BUCKETS)
     sums = (
         feats.join(F.broadcast(weights), "feature")
         .groupBy(id_col)
@@ -233,8 +234,6 @@ def logreg_train(
     id_col: str = "doc_id",
     n_buckets: int = DEFAULT_BUCKETS,
     n_iters: int = 5,
-    alpha: float = 1.0,
-    init_c: float = 20.0,
     track_loss: bool = False,
 ) -> tuple[DataFrame, float] | tuple[DataFrame, float, list[float]]:
     """Distributed iteratively-trained logistic regression over the same
@@ -252,8 +251,8 @@ def logreg_train(
     0.51-0.69 held-out in <=10 iters; current-Hessian diagonal Newton
     and unscaled NB init both diverged, loss 0.69 -> 16.9):
     * init at the multinomial-NB log-odds weights scaled to O(1) margins
-      (scale = init_c / mean train feature count; NB init of a linear
-      text model is the NBSVM recipe, Wang & Manning 2012);
+      (scale = LOGREG_INIT_C / mean train feature count; NB init of a
+      linear text model is the NBSVM recipe, Wang & Manning 2012);
     * update w_f -= g_f / h_f with the FIXED Böhning-Lindsay (1988)
       diagonal majorant h_f = 1/4 Σ_d x_df (L_d + 1): since
       sigmoid' <= 1/4 and by Cauchy-Schwarz vᵀHv <= Σ_f v_f² h_f for
@@ -330,8 +329,8 @@ def logreg_train(
     n_train = int(_nrow["_n"])
     npos = int(_nrow["_np"] or 0)
     total_occ = feats.count()
-    # scale the NB init to O(1) per-doc margins: init_c / mean L1 length
-    scale = init_c / (float(total_occ) / float(n_train))
+    # scale the NB init to O(1) per-doc margins: LOGREG_INIT_C / mean L1 length
+    scale = LOGREG_INIT_C / (float(total_occ) / float(n_train))
     # dense init: NB log-odds * scale, Böhning-Lindsay majorant h
     counts = feats.groupBy("feature").agg(
         F.sum(F.when(F.col("_y"), 1).otherwise(0)).alias("c1"),
@@ -354,7 +353,7 @@ def logreg_train(
         )
     )
     totals = dense.agg(F.sum("c1").alias("n1"), F.sum("c0").alias("n0"))
-    bias0 = math.log((npos + alpha) / ((n_train - npos) + alpha)) * scale
+    bias0 = math.log((npos + ALPHA) / ((n_train - npos) + ALPHA)) * scale
     h_bias = (float(total_occ) + float(n_train)) / 4.0
     spark_sess = df.sparkSession
     # The bias rides the weight table as the feature = -1 sentinel row
@@ -375,8 +374,8 @@ def logreg_train(
             "feature",
             (
                 (
-                    F.log((F.col("c1") + alpha) / (F.col("n1") + alpha * n_buckets))
-                    - F.log((F.col("c0") + alpha) / (F.col("n0") + alpha * n_buckets))
+                    F.log((F.col("c1") + ALPHA) / (F.col("n1") + ALPHA * n_buckets))
+                    - F.log((F.col("c0") + ALPHA) / (F.col("n0") + ALPHA * n_buckets))
                 )
                 * F.lit(scale)
             ).alias("w"),
@@ -503,13 +502,9 @@ def logreg_oracle_sql(
     table: str,
     train_where: str,
     label_expr: str,
-    n_buckets: int = DEFAULT_BUCKETS,
     n_iters: int = 5,
-    alpha: float = 1.0,
-    init_c: float = 20.0,
     text_col: str = "text",
     id_col: str = "doc_id",
-    round_to: int = 4,
 ) -> str:
     """DuckDB twin of logreg_train + logreg_score: NB-scaled init +
     the fixed-count Böhning-Lindsay MM loop unrolled as CTE chains
@@ -518,6 +513,7 @@ def logreg_oracle_sql(
     g/h``, ``b - Σr/hb``; the majorant h is an exact integer sum / 4.0
     on both engines), score rounded to absorb summation-order noise.
     Tokenization/hashing replicate ``nb_oracle_sql``."""
+    n_buckets, alpha, round_to = DEFAULT_BUCKETS, ALPHA, SCORE_DECIMALS
     words = f"regexp_split_to_array(lower(trim({text_col}, ' ')), '[ \\t\\n\\f\\r]+')"
     shingle = {1: "w[i]", 2: "w[i] || ' ' || w[i+1]"}
     grams = "\nUNION ALL\n".join(
@@ -529,7 +525,7 @@ def logreg_oracle_sql(
         """
         for n in (1, 2)
     )
-    ic = repr(float(init_c))
+    ic = repr(LOGREG_INIT_C)
     scale = f"({ic} / ((SELECT c FROM occ) / (SELECT n FROM n)))"
     hb = "(((SELECT c FROM occ) + (SELECT n FROM n)) / 4.0)"
     parts = [
@@ -608,17 +604,15 @@ def nb_oracle_sql(
     table: str,
     train_where: str,
     label_expr: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    alpha: float = 1.0,
     text_col: str = "text",
     id_col: str = "doc_id",
-    round_to: int = 4,
 ) -> str:
     """DuckDB twin of nb_train + nb_score over one table: train on the
     rows matching ``train_where`` with boolean ``label_expr``, score
     every row. Tokenization/hashing/weight math replicate the Spark
     side exactly; the score is rounded to absorb summation-order noise.
     """
+    n_buckets, alpha, round_to = DEFAULT_BUCKETS, ALPHA, SCORE_DECIMALS
     words = f"regexp_split_to_array(lower(trim({text_col}, ' ')), '[ \\t\\n\\f\\r]+')"
     shingle = {
         1: "w[i]",

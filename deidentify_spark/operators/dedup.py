@@ -94,9 +94,14 @@ def _seeded_md5(seed, col: Column, hex_chars: int | None = None) -> Column:
     return F.conv(F.substring(h, 1, hex_chars), 16, 10).cast("bigint")
 
 
+SHINGLE_N = 3  # words per shingle
+MINHASH_K = 8  # minhash values per doc
+MINHASH_BANDS = 4  # LSH bands over those values
+
+
 def word_shingles(
     df: DataFrame,
-    n: int = 3,
+    n: int = SHINGLE_N,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -209,7 +214,7 @@ def _materialized_words(
 
 
 def minhash_signatures(
-    shingles: DataFrame, k: int = 8, id_col: str = "doc_id"
+    shingles: DataFrame, k: int = MINHASH_K, id_col: str = "doc_id"
 ) -> DataFrame:
     """K minhash values per doc: min over shingles of hash60(shingle:i).
 
@@ -263,9 +268,9 @@ def _emit_bucket_pairs(grouped: DataFrame, arr_col: str, fields: str) -> DataFra
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    n: int = 3,
-    k: int = 8,
-    bands: int = 4,
+    n: int = SHINGLE_N,
+    k: int = MINHASH_K,
+    bands: int = MINHASH_BANDS,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = 512,
@@ -372,13 +377,9 @@ def _minhash_band_membership(
 def minhash_lsh_candidates_incremental(
     new_df: DataFrame,
     store: DataFrame,
-    n: int = 3,
-    k: int = 8,
-    bands: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int = 512,
-    observation=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-dup candidates for a NEW crawl batch against itself AND the
     already-processed corpus — the snapshot-N+1 shape: prior snapshots
@@ -407,11 +408,13 @@ def minhash_lsh_candidates_incremental(
     The default cap matches ``minhash_lsh_candidates`` (512, the
     measured-at-500k-docs default — see that docstring), and the
     within-batch drop volume rides the same CollectMetrics posture:
-    a ``minhash_lsh_incremental_cap`` observe node (or the passed
-    ``observation``) — never silent. Store-side hot signatures are
-    additionally counted under ``minhash_lsh_incremental_store_hot``.
+    a ``minhash_lsh_incremental_cap`` observe node — never silent.
+    Store-side hot signatures are additionally counted under
+    ``minhash_lsh_incremental_store_hot``.
     """
-    mem_new = _minhash_band_membership(new_df, n, k, bands, text_col, id_col)
+    mem_new = _minhash_band_membership(
+        new_df, SHINGLE_N, MINHASH_K, MINHASH_BANDS, text_col, id_col
+    )
 
     within_buckets = mem_new.groupBy("band", "sig").agg(
         F.sort_array(F.collect_list(id_col)).alias("ds")
@@ -419,7 +422,7 @@ def minhash_lsh_candidates_incremental(
     m = F.size("ds").cast("bigint")
     over = F.size("ds") > max_bucket_size
     within_buckets = within_buckets.observe(
-        observation if observation is not None else "minhash_lsh_incremental_cap",
+        "minhash_lsh_incremental_cap",
         F.sum(F.when(over, 1).otherwise(0)).alias("n_buckets_dropped"),
         F.sum(F.when(over, m).otherwise(0)).alias("n_memberships_dropped"),
         F.sum(F.when(over, (m * (m - 1) / 2).cast("bigint")).otherwise(0)).alias(
@@ -459,9 +462,6 @@ def minhash_lsh_candidates_incremental(
 
 def minhash_lsh_dropped_buckets(
     df: DataFrame,
-    n: int = 3,
-    k: int = 8,
-    bands: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int = 10000,
@@ -473,9 +473,9 @@ def minhash_lsh_dropped_buckets(
     (no silent truncation). Same upstream as the candidate emitter; at
     scale run both off one cached/checkpointed bucket table.
     """
-    dropped = _minhash_buckets(df, n, k, bands, text_col, id_col).where(
-        F.size("ds") > max_bucket_size
-    )
+    dropped = _minhash_buckets(
+        df, SHINGLE_N, MINHASH_K, MINHASH_BANDS, text_col, id_col
+    ).where(F.size("ds") > max_bucket_size)
     m = F.size("ds").cast("bigint")
     return dropped.agg(
         F.count(F.lit(1)).alias("n_buckets_dropped"),
@@ -638,7 +638,7 @@ def _distinct_shingle_hashes(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    n: int = 3,
+    n: int = SHINGLE_N,
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -725,7 +725,7 @@ def ngram_jaccard_pairs(
 
 def _ngram_jaccard_pairs_textbook(
     df: DataFrame,
-    n: int = 3,
+    n: int = SHINGLE_N,
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -771,7 +771,6 @@ def _ngram_jaccard_pairs_textbook(
 
 def ngram_jaccard_dropped_shingles(
     df: DataFrame,
-    n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_doc_freq: int = 100,
@@ -782,7 +781,7 @@ def ngram_jaccard_dropped_shingles(
     surfaced so a 100-TB run can audit the guard instead of silently
     losing signal. Distinct (doc, shingle) memberships, same identity
     (xxhash64) and whitespace semantics as the pair miner."""
-    sh = _distinct_shingle_hashes(df, n, text_col, id_col)
+    sh = _distinct_shingle_hashes(df, SHINGLE_N, text_col, id_col)
     hot = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -804,6 +803,7 @@ def ngram_jaccard_dropped_shingles(
 # share a quadrant (pigeonhole).
 SIMHASH_BITS = 60
 SIMHASH_QUADS = 4
+SIMHASH_MAX_BUCKET_SIZE = 10000  # a larger quadrant bucket drops whole
 _QUAD_BITS = SIMHASH_BITS // SIMHASH_QUADS  # 15
 _QUAD_MASK = (1 << _QUAD_BITS) - 1
 
@@ -1007,7 +1007,7 @@ def simhash_near_dups(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_bucket_size: int | None = 10000,
+    max_bucket_size: int | None = SIMHASH_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Verified SimHash near-dups: candidate pairs from quadrant buckets,
     then an exact Hamming-distance filter via bit_count(xor) — all
@@ -1040,12 +1040,11 @@ def simhash_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_bucket_size: int | None = 10000,
 ) -> DataFrame:
     """Near-dup candidates: equal 15-bit SimHash quadrant (Hamming<=3 docs
     must share at least one of 4 quadrants — pigeonhole). Join-free, one
     UDF pass (see simhash_near_dups)."""
-    grouped = _simhash_quad_groups(df, text_col, id_col, max_bucket_size)
+    grouped = _simhash_quad_groups(df, text_col, id_col, SIMHASH_MAX_BUCKET_SIZE)
     return _emit_bucket_pairs(
         grouped, "ds", f"x.{id_col} as doc_a, y.{id_col} as doc_b"
     ).distinct()
@@ -1057,7 +1056,6 @@ def embedding_near_dup_pairs_lsh(
     dim: int | None = None,
     n_planes: int = 64,
     bands: int = 8,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -1090,7 +1088,7 @@ def embedding_near_dup_pairs_lsh(
         dim = len(first[0])
     banded = emb.select(
         F.col(id_col),
-        F.explode(lsh_band_udf(dim, n_planes, bands, seed)(F.col(vec_col))).alias(
+        F.explode(lsh_band_udf(dim, n_planes, bands)(F.col(vec_col))).alias(
             "_bid"
         ),
     )
@@ -1278,6 +1276,9 @@ def embedding_near_dup_pairs_blocked(
     )
 
 
+SEMDEDUP_TARGET_CLUSTER_SIZE = 5_000  # vectors a cluster, when auto-sized
+
+
 def _semantic_clusters(
     emb: DataFrame,
     n_clusters: "int | None",
@@ -1322,8 +1323,6 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_size: int = 100_000,
-    centroids: "np.ndarray | None" = None,
-    target_cluster_size: int = 5_000,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, "SemDeDup:
     Data-efficient learning at web-scale through semantic
@@ -1334,7 +1333,7 @@ def semantic_dedup_pairs(
     missed by construction (the method's stated approximation; clones
     sit in the same cluster because assignment is cosine-based).
     ``n_clusters=None`` (default) auto-sizes to the corpus
-    (ceil(n / target_cluster_size), see _semantic_clusters); pass an
+    (ceil(n / SEMDEDUP_TARGET_CLUSTER_SIZE), see _semantic_clusters); pass an
     explicit value for golden-stable small-scale runs.
 
     Clustering reuses the deterministic data-sampled IVF quantizer
@@ -1351,7 +1350,7 @@ def semantic_dedup_pairs(
     Returns (cluster, id_a, id_b, cosine) with id_a < id_b.
     """
     with_c = _semantic_clusters(
-        emb, n_clusters, id_col, vec_col, centroids, target_cluster_size
+        emb, n_clusters, id_col, vec_col, None, SEMDEDUP_TARGET_CLUSTER_SIZE
     )
     ok = (
         with_c.groupBy("cluster")
@@ -1408,18 +1407,16 @@ def semantic_dedup_dropped_clusters(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_size: int = 100_000,
-    centroids: "np.ndarray | None" = None,
-    target_cluster_size: int = 5_000,
 ) -> DataFrame:
     """Cap-lineage twin of semantic_dedup_pairs: what did the
     max_cluster_size guard discard? One row: (n_clusters_dropped,
     n_memberships_dropped, n_pairs_dropped) — the audit aggregate over
     the >cap clusters, mirroring minhash_lsh_dropped_buckets, so the
     semantic cap is never a silent truncation. Same assignment as the
-    pair miner (pass the same n_clusters/centroids); at scale run both
-    off one stored cluster-assignment column."""
+    pair miner (pass the same n_clusters); at scale run both off one
+    stored cluster-assignment column."""
     with_c = _semantic_clusters(
-        emb, n_clusters, id_col, vec_col, centroids, target_cluster_size
+        emb, n_clusters, id_col, vec_col, None, SEMDEDUP_TARGET_CLUSTER_SIZE
     )
     m = F.count(F.lit(1)).cast("bigint").alias("m")
     dropped = (

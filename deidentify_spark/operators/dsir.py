@@ -17,17 +17,17 @@ decision boundary, DSIR *matches a distribution* with no labels on
 the negative side.
 
 Feature space is deliberately the classifier's: hashed word
-uni+bigrams mod ``n_buckets`` (classifier._features), which is also
-the paper's feature space. Both the target and raw unigram models
-use Laplace ``alpha`` smoothing over the same bucket space, so the
-per-feature log-ratio is finite everywhere.
+uni+bigrams mod ``DEFAULT_BUCKETS`` (classifier._features), which is
+also the paper's feature space. Both the target and raw unigram models
+use the classifier's Laplace ``ALPHA`` smoothing over the same bucket
+space, so the per-feature log-ratio is finite everywhere.
 
 Scale posture
 -------------
 Training the two hashed models is ONE feature-count aggregation
 (explode -> groupBy(feature), map-side combinable) over the corpus;
-the ratio table is at most ``n_buckets`` rows (256 KB at the 2^15
-default) and is BROADCAST into the scoring join, so scoring is
+the ratio table is at most ``DEFAULT_BUCKETS`` (2^15) rows, 256 KB,
+and is BROADCAST into the scoring join, so scoring is
 explode -> broadcast-join -> one partial-aggregated groupBy(id) sum
 — identical shape to nb_score, linear in corpus tokens, nothing
 driver-side. Gumbel keys are pure column expressions (hash-seeded,
@@ -52,7 +52,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from deidentify_spark.operators.classifier import DEFAULT_BUCKETS, _features
+from deidentify_spark.operators.classifier import (
+    ALPHA,
+    DEFAULT_BUCKETS,
+    SCORE_DECIMALS,
+    _features,
+)
 from deidentify_spark.operators.dedup import _seeded_md5
 from deidentify_spark.runtime import tracked_persist
 
@@ -70,8 +75,6 @@ def _dsir_sums(
     target_col: str,
     text_col: str,
     id_col: str,
-    n_buckets: int,
-    alpha: float,
     out_col: str,
 ) -> DataFrame:
     """(id, out_col) log-weight sums — only ids that emitted at least
@@ -85,7 +88,7 @@ def _dsir_sums(
         df.withColumn("_t", F.col(target_col).cast("boolean")),
         text_col,
         id_col,
-        n_buckets,
+        DEFAULT_BUCKETS,
         extra_cols=("_t",),
     )
     counts = feats.groupBy("feature").agg(
@@ -96,6 +99,7 @@ def _dsir_sums(
     # feature a scored doc can emit is by construction present in the
     # raw counts, so the ratio table covers all lookups.
     totals = counts.agg(F.sum("ct").alias("nt"), F.sum("cr").alias("nr"))
+    alpha, n_buckets = ALPHA, DEFAULT_BUCKETS
     ratio = (
         counts.crossJoin(F.broadcast(totals))
         .select(
@@ -124,8 +128,6 @@ def dsir_log_weights(
     target_col: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_buckets: int = DEFAULT_BUCKETS,
-    alpha: float = 1.0,
     out_col: str = "dsir_logw",
 ) -> DataFrame:
     """All input columns plus ``out_col``: the DSIR importance
@@ -138,7 +140,7 @@ def dsir_log_weights(
     Featureless docs (shorter than one word) get log-weight 0.0 (the
     empty sum), mirrored in the oracle twin's COALESCE.
     """
-    sums = _dsir_sums(df, target_col, text_col, id_col, n_buckets, alpha, out_col)
+    sums = _dsir_sums(df, target_col, text_col, id_col, out_col)
     return df.join(sums, id_col, "left").withColumn(
         out_col, F.coalesce(F.col(out_col), F.lit(0.0))
     )
@@ -167,8 +169,6 @@ def dsir_select(
     k: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_buckets: int = DEFAULT_BUCKETS,
-    alpha: float = 1.0,
     seed: int = 0,
 ) -> DataFrame:
     """``dsir_log_weights`` plus a boolean ``dsir_selected`` marking
@@ -196,9 +196,7 @@ def dsir_select(
     measure-zero event
     (documented, not guarded). If ``k >= n`` every row is selected.
     """
-    sums = _dsir_sums(
-        df, target_col, text_col, id_col, n_buckets, alpha, "dsir_logw"
-    )
+    sums = _dsir_sums(df, target_col, text_col, id_col, "dsir_logw")
     slim = (
         df.select(id_col)
         .join(sums, id_col, "left")
@@ -228,12 +226,9 @@ def dsir_oracle_sql(
     table: str,
     target_expr: str,
     k: int,
-    n_buckets: int = DEFAULT_BUCKETS,
-    alpha: float = 1.0,
     seed: int = 0,
     text_col: str = "text",
     id_col: str = "doc_id",
-    round_to: int = 4,
 ) -> str:
     """DuckDB twin of dsir_select: same tokenization/hashing (the
     nb_oracle_sql idiom), same smoothing, same hash-seeded Gumbel keys
@@ -242,6 +237,7 @@ def dsir_oracle_sql(
     the Spark side; the log-weight is rounded only for display, to
     absorb summation-order float noise.
     """
+    n_buckets, alpha = DEFAULT_BUCKETS, ALPHA
     words = (
         f"regexp_split_to_array(lower(trim({text_col}, ' ')), '[ \\t\\n\\f\\r]+')"
     )
@@ -289,7 +285,7 @@ def dsir_oracle_sql(
             FROM (SELECT key FROM scored ORDER BY key DESC LIMIT {k})
         )
         SELECT {id_col},
-               ROUND(logw, {round_to}) AS dsir_logw,
+               ROUND(logw, {SCORE_DECIMALS}) AS dsir_logw,
                key >= kth AS dsir_selected
         FROM scored, kth
         ORDER BY {id_col}

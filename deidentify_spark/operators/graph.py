@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+DAMPING = 0.85  # probability of following an out-edge, else teleport
+
 
 def pagerank(
     edges: DataFrame,
@@ -34,7 +36,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str | None = None,
-    damping: float = 0.85,
     n_iter: int = 4,
 ) -> DataFrame:
     """Weighted PageRank; returns (node, rank).
@@ -79,7 +80,7 @@ def pagerank(
     )
     # The single driver scalar; everything below is lazy.
     n = nodes.count()
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
 
     ranks = nodes.select("node", "_dang", F.lit(1.0 / n).alias("rank"))
     for i in range(n_iter):
@@ -100,7 +101,7 @@ def pagerank(
                 "_dang",
                 (
                     F.lit(base)
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dmass") / n)
                 ).alias("rank"),
             )
@@ -117,7 +118,6 @@ def pagerank(
 def pagerank_oracle_sql(
     edge_sql: str,
     *,
-    damping: float = 0.85,
     n_iter: int = 4,
 ) -> str:
     """DuckDB twin of :func:`pagerank`: the power iteration unrolled as
@@ -133,8 +133,8 @@ def pagerank_oracle_sql(
                 FROM {prev} r JOIN dangling USING (node)
             ), r{i + 1} AS (
                 SELECT n.node,
-                       (1.0 - {damping}) / (SELECT cnt FROM nn)
-                       + {damping} * (
+                       (1.0 - {DAMPING}) / (SELECT cnt FROM nn)
+                       + {DAMPING} * (
                            COALESCE((SELECT SUM(r.rank * t.p)
                                      FROM {prev} r
                                      JOIN trans t ON t.src = r.node

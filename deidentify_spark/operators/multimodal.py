@@ -84,10 +84,13 @@ def synthesize_assets(
     return spark.range(0, n, numPartitions=partitions).mapInPandas(gen, ASSET_SCHEMA)
 
 
-def byte_histogram_features(payload: bytes, bins: int = 64) -> list[float]:
+HIST_BINS = 64  # byte >> 2 puts the 256 byte values in 64 bins
+
+
+def byte_histogram_features(payload: bytes) -> list[float]:
     """Real, library-free feature vector: L1-normalized byte histogram."""
     arr = np.frombuffer(payload, dtype=np.uint8)
-    hist = np.bincount(arr >> np.uint8(2), minlength=bins).astype(np.float32)
+    hist = np.bincount(arr >> np.uint8(2), minlength=HIST_BINS).astype(np.float32)
     total = hist.sum()
     return (hist / total if total else hist).tolist()
 
@@ -128,17 +131,17 @@ def decode_assets(assets: DataFrame) -> DataFrame:
                 _fake_decode(k, p) for k, p in zip(pdf["kind"].tolist(), payloads)
             ]
             # one vectorized histogram pass for the whole batch: segment
-            # bincount over (row_idx * bins + byte>>2) keys — bit-identical
+            # bincount over (row_idx * HIST_BINS + byte>>2) keys — bit-identical
             # to the scalar byte_histogram_features (integer counts are
             # exact in f32; the division matches elementwise)
             lens = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=n)
             cat = np.concatenate(
                 [np.frombuffer(p, dtype=np.uint8) for p in payloads]
             )
-            keys = np.repeat(np.arange(n, dtype=np.int64), lens) * 64 + (cat >> 2)
+            keys = np.repeat(np.arange(n, dtype=np.int64), lens) * HIST_BINS + (cat >> 2)
             hist = (
-                np.bincount(keys, minlength=n * 64)
-                .reshape(n, 64)
+                np.bincount(keys, minlength=n * HIST_BINS)
+                .reshape(n, HIST_BINS)
                 .astype(np.float32)
             )
             totals = hist.sum(axis=1, keepdims=True)

@@ -64,6 +64,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+PCA_DECIMALS = 4  # pca_oracle_sql rounds loadings and eigenvalue to these
+
 __all__ = [
     "power_iteration_top_pc",
     "pca_oracle_sql",
@@ -164,7 +166,6 @@ def pca_oracle_sql(
     dim: int = 64,
     *,
     vec_col: str = "embedding",
-    round_to: int = 4,
 ) -> str:
     """DuckDB twin of ``power_iteration_top_pc``: centering, the uniform
     init, and every power-iteration step unrolled as MATERIALIZED CTEs
@@ -198,8 +199,8 @@ def pca_oracle_sql(
         ",\n".join(parts)
         + f"""
         SELECT i - 1 AS dim,
-               ROUND(s.s[i] / sqrt(list_dot_product(s.s, s.s)), {round_to}) + 0.0 AS loading,
-               ROUND(sqrt(list_dot_product(s.s, s.s)) / (SELECT n FROM n), {round_to}) + 0.0 AS eigval
+               ROUND(s.s[i] / sqrt(list_dot_product(s.s, s.s)), {PCA_DECIMALS}) + 0.0 AS loading,
+               ROUND(sqrt(list_dot_product(s.s, s.s)) / (SELECT n FROM n), {PCA_DECIMALS}) + 0.0 AS eigval
         FROM s{n_iter} s, generate_series(1, {dim}) g(i)
         ORDER BY dim
     """

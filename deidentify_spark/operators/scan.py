@@ -56,6 +56,9 @@ __all__ = [
     "mad_outliers",
 ]
 
+SCAN_BUCKETS = 64  # range buckets of the two-level scans
+AUC_DECIMALS = 6  # auc_oracle_sql rounds the AUC to these
+
 
 def _quantile_bucket(df: DataFrame, order_col: str, n_buckets: int) -> Column:
     """Range-bucket expression from approx-quantile boundaries of
@@ -83,7 +86,7 @@ def bucketed_prefix_sum(
     df: DataFrame,
     order_col: str,
     value_cols: list[str],
-    n_buckets: int = 64,
+    n_buckets: int = SCAN_BUCKETS,
     out_prefix: str = "cum_",
 ) -> DataFrame:
     """All input columns plus ``{out_prefix}{v}``: the inclusive global
@@ -146,7 +149,6 @@ def partitioned_prefix_sum(
     partition_cols: list[str],
     order_col: str,
     value_cols: list[str],
-    n_buckets: int = 64,
     tie_cols: list[str] | None = None,
     out_prefix: str = "cum_",
     persist_input: bool = True,
@@ -187,7 +189,7 @@ def partitioned_prefix_sum(
     ):
         df = tracked_persist(df)
     base = df.withColumn(
-        "_psum_bkt", _quantile_bucket(df, order_col, n_buckets)
+        "_psum_bkt", _quantile_bucket(df, order_col, SCAN_BUCKETS)
     )
     w = (
         Window.partitionBy(*partition_cols, "_psum_bkt")
@@ -226,7 +228,7 @@ def rank_auc(
     df: DataFrame,
     label_col: str,
     score_col: str,
-    n_buckets: int = 64,
+    n_buckets: int = SCAN_BUCKETS,
 ) -> DataFrame:
     """One-row DataFrame ``(auc)``: exact tie-corrected ROC-AUC of
     ``score_col`` against boolean ``label_col`` (NULL if either class
@@ -259,7 +261,6 @@ def auc_oracle_sql(
     scored_sql: str,
     label_expr: str,
     score_expr: str,
-    round_to: int = 6,
 ) -> str:
     """DuckDB twin of rank_auc over ``scored_sql`` (a full SELECT whose
     output provides ``label_expr`` and ``score_expr``): single-node SQL
@@ -278,7 +279,7 @@ def auc_oracle_sql(
         )
         SELECT CASE WHEN SUM(n1) = 0 OR SUM(n0) = 0 THEN NULL
                ELSE ROUND((SUM(n1 * (cum_n0 - n0)) + 0.5 * SUM(n1 * n0))
-                          / (SUM(n1) * SUM(n0)), {round_to})
+                          / (SUM(n1) * SUM(n0)), {AUC_DECIMALS})
                END AS auc
         FROM c
     """
@@ -449,7 +450,7 @@ def percentiles_from_counts(
     """
     if not (counts.storageLevel.useMemory or counts.storageLevel.useDisk):
         counts = tracked_persist(counts)  # quantiles + totals + join reads
-    bkt = _quantile_bucket(counts, value_col, 64)
+    bkt = _quantile_bucket(counts, value_col, SCAN_BUCKETS)
     bt = counts.groupBy(*groups, bkt.alias("_pb")).agg(
         F.sum(count_col).alias("_s")
     )

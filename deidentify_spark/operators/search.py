@@ -37,7 +37,7 @@ skipping the barrier saves its full-text repartition shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from deidentify_spark.functions.text_stats import RE2_WS_CLASS
@@ -49,6 +49,12 @@ __all__ = [
     "bm25_oracle_sql",
     "bm25_multi_oracle_sql",
 ]
+
+K1 = 1.2  # BM25 term-frequency saturation
+B = 0.75  # BM25 document-length normalization
+# one matched term's score in the DuckDB twins, over tf rows t and idf rows i
+_BM25_TERM_SQL = f"""i.idf * (t.tf * ({K1} + 1.0))
+                       / (t.tf + {K1} * (1.0 - {B} + {B} * t.dl / i.avgdl))"""
 
 
 def _tf_and_stats(
@@ -115,12 +121,19 @@ def _bm25_idf(tf: DataFrame, stats: DataFrame) -> DataFrame:
     )
 
 
+def _bm25_term() -> Column:
+    """One matched term's score over the (_idf, _tf, _dl, _avgdl) columns."""
+    return (
+        F.col("_idf")
+        * (F.col("_tf") * (K1 + 1.0))
+        / (F.col("_tf") + K1 * (1.0 - B + B * F.col("_dl") / F.col("_avgdl")))
+    )
+
+
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -138,15 +151,7 @@ def bm25_topk(
     terms = sorted({t.lower() for t in query_terms})
     tf, stats = _tf_and_stats(df, terms, text_col, id_col)
     idf = _bm25_idf(tf, stats)
-    scored = tf.join(F.broadcast(idf), "_term").withColumn(
-        "_s",
-        F.col("_idf")
-        * (F.col("_tf") * (k1 + 1.0))
-        / (
-            F.col("_tf")
-            + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl"))
-        ),
-    )
+    scored = tf.join(F.broadcast(idf), "_term").withColumn("_s", _bm25_term())
     return (
         scored.groupBy(id_col)
         .agg(F.round(F.sum("_s"), 4).alias("bm25"))
@@ -159,8 +164,6 @@ def bm25_oracle_sql(
     table: str,
     query_terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> str:
@@ -191,8 +194,7 @@ def bm25_oracle_sql(
         ),
         scored AS (
             SELECT t.{id_col},
-                   SUM(i.idf * (t.tf * ({k1} + 1.0))
-                       / (t.tf + {k1} * (1.0 - {b} + {b} * t.dl / i.avgdl))) AS s
+                   SUM({_BM25_TERM_SQL}) AS s
             FROM tf t JOIN idf i USING (term)
             GROUP BY t.{id_col}
         )
@@ -207,8 +209,6 @@ def bm25_topk_multi(
     df: DataFrame,
     queries: dict[str, list[str]],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -250,15 +250,7 @@ def bm25_topk_multi(
     scored = (
         tf.join(F.broadcast(idf), "_term")
         .join(F.broadcast(qterms), "_term")
-        .withColumn(
-            "_s",
-            F.col("_idf")
-            * (F.col("_tf") * (k1 + 1.0))
-            / (
-                F.col("_tf")
-                + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl"))
-            ),
-        )
+        .withColumn("_s", _bm25_term())
         .groupBy("query_id", id_col)
         .agg(F.round(F.sum("_s"), 4).alias("bm25"))
     )
@@ -276,8 +268,6 @@ def bm25_multi_oracle_sql(
     table: str,
     queries: dict[str, list[str]],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> str:
@@ -317,8 +307,7 @@ def bm25_multi_oracle_sql(
                  {qvals}),
         scored AS (
             SELECT q.query_id, t.{id_col},
-                   ROUND(SUM(i.idf * (t.tf * ({k1} + 1.0))
-                       / (t.tf + {k1} * (1.0 - {b} + {b} * t.dl / i.avgdl))),
+                   ROUND(SUM({_BM25_TERM_SQL}),
                        4) AS bm25
             FROM tf t JOIN idf i USING (term) JOIN q USING (term)
             GROUP BY q.query_id, t.{id_col}

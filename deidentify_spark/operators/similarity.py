@@ -19,7 +19,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
-_PLANES_CACHE: dict[tuple[int, int, int], np.ndarray] = {}
+LSH_SEED = 42  # splitmix seed of the LSH hyperplanes
+OUTLIER_MADS = 3.0  # centroid_outliers' Hampel threshold
+COS_DECIMALS = 6  # centroid_outliers rounds the cosine to these
+
+_PLANES_CACHE: dict[tuple[int, int], np.ndarray] = {}
 
 
 def splitmix_uniform(idx: np.ndarray, seed: int) -> np.ndarray:
@@ -35,22 +39,20 @@ def splitmix_uniform(idx: np.ndarray, seed: int) -> np.ndarray:
     return (h.astype(np.float64) / 2**64) * 2.0 - 1.0
 
 
-def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
+def _planes(dim: int, n_planes: int) -> np.ndarray:
     """Deterministic pseudo-random hyperplanes (splitmix_uniform)."""
-    key = (dim, n_planes, seed)
+    key = (dim, n_planes)
     if key not in _PLANES_CACHE:
-        vals = splitmix_uniform(np.arange(dim * n_planes, dtype=np.uint64), seed)
+        vals = splitmix_uniform(np.arange(dim * n_planes, dtype=np.uint64), LSH_SEED)
         _PLANES_CACHE[key] = vals.reshape(n_planes, dim).astype(np.float32)
     return _PLANES_CACHE[key]
 
 
-def band_ids_one(
-    vec, dim: int, n_planes: int = 16, bands: int = 4, seed: int = 42
-) -> list[int]:
+def band_ids_one(vec, dim: int, n_planes: int = 16, bands: int = 4) -> list[int]:
     """Band-tagged LSH bucket ids for one vector (pure function; used by
     both the executor UDF and the driver for the query vector)."""
     rows = n_planes // bands
-    planes = _planes(dim, n_planes, seed)
+    planes = _planes(dim, n_planes)
     bits = (planes @ np.asarray(vec, dtype=np.float32)) > 0
     ids = []
     for b in range(bands):
@@ -60,7 +62,7 @@ def band_ids_one(
     return ids
 
 
-def lsh_band_udf(dim: int, n_planes: int = 16, bands: int = 4, seed: int = 42):
+def lsh_band_udf(dim: int, n_planes: int = 16, bands: int = 4):
     """array<float> -> array<int> of band bucket ids (one per band).
 
     Signature bit i = sign(v . plane_i); bits are split into ``bands``
@@ -72,7 +74,7 @@ def lsh_band_udf(dim: int, n_planes: int = 16, bands: int = 4, seed: int = 42):
     def band_ids(vecs: pd.Series) -> pd.Series:
         return pd.Series(
             [
-                None if v is None else band_ids_one(v, dim, n_planes, bands, seed)
+                None if v is None else band_ids_one(v, dim, n_planes, bands)
                 for v in vecs
             ]
         )
@@ -148,7 +150,6 @@ def cosine_topk_ivf(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: assign every vector to its nearest
     coarse centroid, probe only the ``n_probe`` clusters nearest the
@@ -157,9 +158,7 @@ def cosine_topk_ivf(
     ~n * n_probe / n_clusters, and on a real deployment the assignment
     column is precomputed + used as a partition key so a probe is a
     partition-pruned scan, not a filter."""
-    c = centroids if centroids is not None else ivf_centroids(
-        emb, n_clusters, id_col, vec_col
-    )
+    c = ivf_centroids(emb, n_clusters, id_col, vec_col)
     q = np.asarray(query_vec, dtype=np.float32)
     q = q / (np.linalg.norm(q) or 1.0)
     order = np.argsort(-(c @ q), kind="stable")
@@ -245,10 +244,8 @@ def cosine_topk_lsh(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    dim: int | None = None,
     n_planes: int = 16,
     bands: int = 4,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -258,9 +255,9 @@ def cosine_topk_lsh(
     At 10^9-vector scale the banded signature table is precomputed and
     bucket-partitioned; a query touches ~n/2^r * bands rows.
     """
-    dim = dim or len(query_vec)
-    q_bands = set(band_ids_one(list(map(float, query_vec)), dim, n_planes, bands, seed))
-    banded = emb.withColumn("bands", lsh_band_udf(dim, n_planes, bands, seed)(F.col(vec_col)))
+    dim = len(query_vec)
+    q_bands = set(band_ids_one(list(map(float, query_vec)), dim, n_planes, bands))
+    banded = emb.withColumn("bands", lsh_band_udf(dim, n_planes, bands)(F.col(vec_col)))
     cands = banded.where(
         F.arrays_overlap(
             "bands", F.array(*[F.lit(int(b)) for b in sorted(q_bands)])
@@ -274,8 +271,7 @@ def centroid_outliers(
     group_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    k: float = 3.0,
-    decimals: int = 6,
+    k: float = OUTLIER_MADS,
 ) -> DataFrame:
     """Semantic outlier gate: flag vectors whose cosine to their OWN
     group's mean embedding deviates more than ``k`` MADs from the
@@ -289,7 +285,7 @@ def centroid_outliers(
        O(n_groups * d) rows, re-assembled with a sorted collect_list
        (bounded by d per group) and broadcast back;
     2. cosine as sequential-fold `aggregate(zip_with(...))` double
-       expressions, ROUNDed to ``decimals`` so the cross-engine
+       expressions, ROUNDed to ``COS_DECIMALS`` so the cross-engine
        last-ulp drift of the float centroid/dot sums (~1e-15 relative,
        9 orders below the round quantum) cannot flip a comparison;
     3. ``mad_outliers`` over the rounded cosine — exact discrete
@@ -333,7 +329,7 @@ def centroid_outliers(
     cos = F.round(
         _dot(F.col("_v"), F.col("_c"))
         / (F.sqrt(_dot(F.col("_v"), F.col("_v"))) * F.col("_cn")),
-        decimals,
+        COS_DECIMALS,
     )
     # mad_outliers reads its input twice (the stats counts AND the final
     # flag join) — for most callers the input is a cheap scan, but here
@@ -354,8 +350,6 @@ def centroid_outliers_oracle_sql(
     group_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    k: float = 3.0,
-    decimals: int = 6,
 ) -> str:
     """DuckDB twin of ``centroid_outliers``: per-dimension AVG list
     centroid, list_dot_product cosine rounded to the same quantum,
@@ -373,7 +367,7 @@ def centroid_outliers_oracle_sql(
                    ROUND(list_dot_product(v, c)
                          / (sqrt(list_dot_product(v, v))
                             * sqrt(list_dot_product(c, c))),
-                         {decimals}) AS centroid_cos
+                         {COS_DECIMALS}) AS centroid_cos
             FROM e JOIN cen USING (label)
         ), c1 AS (
             SELECT label, centroid_cos AS vv, COUNT(*) AS c
@@ -403,7 +397,7 @@ def centroid_outliers_oracle_sql(
         )
         SELECT dev.vec_id, dev.label, dev.centroid_cos,
                dev.med AS group_median, mad.mad AS group_mad,
-               dev.dv > {k} * mad.mad AS is_outlier
+               dev.dv > {OUTLIER_MADS} * mad.mad AS is_outlier
         FROM dev JOIN mad USING (label)
         ORDER BY dev.vec_id
     """

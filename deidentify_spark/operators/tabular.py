@@ -66,7 +66,6 @@ def deidentify_table(
     df: DataFrame,
     secret_key: str,
     column_types: dict[str, str] | None = None,
-    order_by: str | None = None,
 ) -> DataFrame:
     """Per-column typed scrub of a whole DataFrame (reference Table/Slices).
 
@@ -78,10 +77,12 @@ def deidentify_table(
     booleans become 'true'/'false' (a Column expression), floats use
     Go's shortest 'g' form via a vectorized pandas UDF (Spark's
     cast(string) of 100000.0 would give '100000.0', Go gives '100000'),
-    everything else casts.
+    everything else casts. Without ``column_types`` the types are
+    inferred from an unordered sample; pass ``infer_column_types(df,
+    order_by=...)`` for reproducible inference.
     """
     if column_types is None:
-        column_types = infer_column_types(df, order_by=order_by)
+        column_types = infer_column_types(df)
     dtypes = dict(df.dtypes)
     out_cols = []
     for c in df.columns:

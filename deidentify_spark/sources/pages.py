@@ -358,18 +358,18 @@ def generate_pages(
     spark: SparkSession,
     n_docs: int,
     seed: int = 42,
-    cfg: QualityConfig | None = None,
     partitions: int | None = None,
     include_html: bool = True,
 ) -> DataFrame:
-    """Distributed deterministic generation: spark.range -> mapInPandas.
+    """Distributed deterministic generation: spark.range -> mapInPandas,
+    labeled against the default ``QualityConfig``.
 
     Output is identical for any partition count (every row is a pure
     function of its id), so this scales to arbitrary n_docs without a
     driver-side loop. ``include_html=False`` skips the page render for
     consumers that drop the column (all other fields unchanged).
     """
-    cfg = cfg or QualityConfig()
+    cfg = QualityConfig()
     rng = spark.range(0, n_docs, numPartitions=partitions)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
+CLONE_NOISE = 0.22  # a clone's perturbation scale: cosine ~0.95 to its base
+
 
 def _hash_unit(ids: np.ndarray, dim: int, seed: int) -> np.ndarray:
     """(n, dim) float32 rows, each a deterministic pseudo-random vector of
@@ -35,17 +37,17 @@ def _hash_unit(ids: np.ndarray, dim: int, seed: int) -> np.ndarray:
 
 
 def clone_embedding_rows(
-    ids: np.ndarray, n_base: int, dim: int, noise: float, seed: int
+    ids: np.ndarray, n_base: int, dim: int, seed: int
 ) -> np.ndarray:
     """Vectors for the given ids: base hash-vector for id < n_base, else
-    base-of(id % n_base) + noise * perturbation(id). Unit-normalized."""
+    base-of(id % n_base) + CLONE_NOISE * perturbation(id). Unit-normalized."""
     ids = ids.astype(np.int64)
     base_ids = np.where(ids < n_base, ids, ids % n_base)
     v = _hash_unit(base_ids, dim, seed)
     clones = ids >= n_base
     if clones.any():
         pert = _hash_unit(ids[clones] + np.int64(1 << 40), dim, seed)
-        v[clones] = v[clones] + np.float32(noise) * pert
+        v[clones] = v[clones] + np.float32(CLONE_NOISE) * pert
     v /= np.linalg.norm(v, axis=1, keepdims=True)
     return v
 
@@ -55,7 +57,6 @@ def synthesize_embeddings(
     n_base: int = 300,
     n_clones: int = 60,
     dim: int = 64,
-    noise: float = 0.22,
     seed: int = 7,
     partitions: int = 8,
 ) -> DataFrame:
@@ -64,9 +65,7 @@ def synthesize_embeddings(
 
     @F.pandas_udf(ArrayType(FloatType()))
     def gen(ids: pd.Series) -> pd.Series:
-        rows = clone_embedding_rows(
-            ids.to_numpy(), n_base, dim, noise, seed
-        )
+        rows = clone_embedding_rows(ids.to_numpy(), n_base, dim, seed)
         return pd.Series(list(rows))
 
     return (

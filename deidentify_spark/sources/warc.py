@@ -28,7 +28,7 @@ Scale notes (100 TB = ~100k CC WARC files at ~1 GB):
 * the unit of parallelism is the file; CC's ~1 GB sizing keeps one
   task's working set bounded — document that, don't fight it.  Peak
   task memory is one compressed + one decompressed file (rows are
-  yielded in ``batch_records`` slices so the Arrow side stays small);
+  yielded in ``BATCH_RECORDS`` slices so the Arrow side stays small);
   at CC sizing that is a few GB per task, the same budget real CC
   readers (warcio over ~1 GB shards) run with.
 * no shuffle anywhere: read and write are both narrow.
@@ -58,6 +58,7 @@ from pyspark.sql.types import (
 
 _CRLF = b"\r\n"
 _WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
+BATCH_RECORDS = 1000  # response records per DataFrame a reader task yields
 
 WARC_PAGE_SCHEMA = StructType(
     [
@@ -260,7 +261,6 @@ def write_warc(
 def read_warc(
     spark: SparkSession,
     path: str,
-    batch_records: int = 1000,
     via_content: bool = False,
 ) -> DataFrame:
     """Distributed WARC source: binaryFile listing -> per-file member
@@ -299,7 +299,7 @@ def read_warc(
                     "record_offset": off,
                 }
             )
-            if len(rows) >= batch_records:
+            if len(rows) >= BATCH_RECORDS:
                 yield pd.DataFrame(rows)
                 rows = []
         if rows:

@@ -28,6 +28,14 @@ def annotated(spark):
     return joined
 
 
+def test_every_fused_field_reaches_the_output(annotated):
+    # a field the UDF computes and ships through Arrow but run_pipeline
+    # never selects is work for nothing
+    from deidentify_spark.functions.fused import FUSED_SCHEMA
+
+    assert set(FUSED_SCHEMA.fieldNames()) <= set(annotated.columns)
+
+
 def test_keep_drop_f1(annotated):
     rows = annotated.select("keep", "expected_keep").collect()
     tp = sum(1 for r in rows if r.keep and r.expected_keep)

@@ -1,9 +1,11 @@
 """Session ownership: one builder for every entry point, and library code
-that leaves a caller's session confs exactly as it found them. Plus a
-reference scan: no library surface that only tests reach."""
+that leaves a caller's session confs exactly as it found them. Plus two
+reference scans: no library surface that only tests reach, and no
+option that no caller sets."""
 
 import ast
 import pathlib
+import re
 import subprocess
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -107,6 +109,80 @@ def test_no_test_only_surface():
     )
     assert TEST_ONLY_ALLOWED.keys() - test_only == set(), (
         "allowlisted but no longer test-only (or gone): drop from the allowlist"
+    )
+
+
+# Column-name bindings say where an operator reads or writes (a column,
+# a column-name prefix, an edge endpoint), not what it computes: a caller
+# whose columns carry the default names sets none of them.
+COLUMN_BINDING = re.compile(r"\w+_cols?|cols|columns|src|dst|out|out_prefix")
+# Defaulted parameters that no call site sets, each kept on purpose.
+UNSET_OPTION_ALLOWED = {
+    ("line_dedup", "line_sep"): "the text's line delimiter, a format binding",
+    ("within_doc_line_dedup", "line_sep"): "the text's line delimiter, a format binding",
+}
+
+
+def _defaulted_params(fn) -> list[tuple[int | None, str]]:
+    """(position or None for keyword-only, name) of each defaulted
+    parameter of a function definition."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
+    out += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def test_no_unset_options():
+    """Every defaulted parameter of a top-level function in
+    deidentify_spark/ is set, by keyword or by position, at some call
+    site in the repository, tests included. A value no caller varies is
+    a module constant, not an option. Calls are matched by the callee's
+    bare name (a same-named method can only make a parameter look set),
+    and a call with ``*args`` or ``**kwargs`` counts as setting every
+    parameter it could reach."""
+    defs = []
+    n_pos: dict[str, int] = {}
+    keywords: dict[str, set[str]] = {}
+    for path in _python_sources():
+        tree = ast.parse((ROOT / path).read_text(encoding="utf-8"))
+        if path.startswith("deidentify_spark/"):
+            defs += [
+                stmt
+                for stmt in tree.body
+                if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name is None:
+                continue
+            starred = any(isinstance(x, ast.Starred) for x in node.args)
+            n_pos[name] = max(
+                n_pos.get(name, 0), float("inf") if starred else len(node.args)
+            )
+            kws = keywords.setdefault(name, set())
+            for k in node.keywords:
+                kws.add(k.arg if k.arg is not None else "**")
+    unset = {
+        (fn.name, p)
+        for fn in defs
+        for i, p in _defaulted_params(fn)
+        if not COLUMN_BINDING.fullmatch(p)
+        and not (i is not None and i < n_pos.get(fn.name, 0))
+        and not {p, "**"} & keywords.get(fn.name, set())
+    }
+    missing = sorted(unset - UNSET_OPTION_ALLOWED.keys())
+    assert missing == [], (
+        f"{len(missing)} defaulted parameters in "
+        f"{len({f for f, _ in missing})} signatures that no caller sets: "
+        f"make each a module constant, or allowlist it with a reason: {missing}"
+    )
+    assert UNSET_OPTION_ALLOWED.keys() - unset == set(), (
+        "allowlisted but now set by a caller (or gone): drop from the allowlist"
     )
 
 
